@@ -13,12 +13,7 @@ Two entry points:
   DataFrame (any source: parquet/Iceberg scan or synthetic generator).
 - ``flagship_docs_pipeline(spark, n_docs)``: synthesize the table
   in-plan and run the pipeline (used by correctness queries and by the
-  generation-inclusive bench variant).
-
-At 10^12-doc scale the table is an Iceberg/parquet table on disk; the
-benchmarked regime is therefore scan -> pipeline, with the synthetic
-generation acting as the one-time table build (bench.py materializes a
-snapshot outside the timed window for exactly this reason).
+  N-vs-4N scaling run, ``scripts/scaling.py``).
 """
 
 from __future__ import annotations
@@ -64,33 +59,16 @@ def flagship_from_docs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 def flagship_docs_pipeline(spark: SparkSession, n_docs: int) -> tuple[DataFrame, DataFrame]:
     """Synth docs in-plan -> flagship pipeline.
 
-    Deliberately keeps the documents-table generator (interpreted
-    span-array transform) rather than the faster codegen
-    ``synthetic_spans_exploded``: this function is also the
-    SPARK_GRAFT_SCALING job, and the r6 measurement showed the faster
-    generator lifts per-core throughput ~6x into this host's
-    16-core ceiling, dropping the gen-regime scaling ratio from 0.88
-    to 0.75 — below the north rule's 0.8 — while a control run of this
-    interpreted path still scored 0.88 the same hour
-    (OPTIMIZATION_r06.md "tried and rejected"). One code path serves
-    both the benched query and the scaling measurement."""
+    The generator is the documents-table one (an interpreted span-array
+    transform) on purpose: this function is also the job of the
+    N-vs-4N scaling run (``scripts/scaling.py``), and the r6
+    measurement showed a faster codegen span generator lifts per-core
+    throughput ~6x into this host's 16-core ceiling, dropping the
+    scaling ratio from 0.88 to 0.75 — below the north rule's 0.8 —
+    while a control run of this interpreted path still scored 0.88 the
+    same hour (OPTIMIZATION_r06.md "tried and rejected"). One code path
+    serves both the benched query and the scaling measurement."""
     docs = synthetic_documents(
         spark, n_docs, partitions=max(spark.sparkContext.defaultParallelism, 4)
     )
     return flagship_from_docs(docs)
-
-
-def materialize_docs_snapshot(spark: SparkSession, n_docs: int, path: str) -> DataFrame:
-    """One-time table build: write the synthetic documents table as a
-    parquet snapshot (the sandbox stand-in for the Iceberg table) and
-    return a scan of it. Idempotent overwrite."""
-    synthetic_documents(
-        spark, n_docs, partitions=max(spark.sparkContext.defaultParallelism, 4)
-    ).write.mode("overwrite").option(
-        # 32 MB row groups: the span structs make wide column buffers;
-        # the default 128 MB groups OOM small driver heaps at >=8M docs
-        # (BENCH.md snapshot recipe) and smaller groups also give the
-        # scan-side planner finer split granularity
-        "parquet.block.size", str(32 * 1024 * 1024)
-    ).parquet(path)
-    return spark.read.parquet(path)

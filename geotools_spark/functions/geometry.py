@@ -101,7 +101,7 @@ def delaunay(xy: np.ndarray) -> np.ndarray:
     # management, same output order) ~20x faster — the NumPy loop below
     # is numpy-call-overhead-bound at ~15-20 small-array ops per insert.
     # Triangle-for-triangle parity is pinned in tests/test_properties.py;
-    # no compiler (or GEOTOOLS_SPARK_NO_NATIVE=1) falls through here.
+    # no compiler (or a refused library) falls through here.
     from geotools_spark.functions import _delaunay_native
 
     raw = _delaunay_native.run(px_all, py_all, p2_all, n, order, fin_eps)

@@ -59,20 +59,6 @@ def tokens_expr(text_col: str = "text"):
     return F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
 
 
-def shingles_expr(k: int, text_col: str = "text"):
-    """distinct word k-shingles. NOTE: the transform lambda's free
-    reference to the token split re-evaluates it per element — callers
-    on a hot path should materialize the split as a column first and
-    inline this shape (see minhash_signatures)."""
-    toks = tokens_expr(text_col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-        )
-    )
-
-
 def char_ngrams_expr(n: int, text_col: str = "text"):
     """distinct character n-grams."""
     return F.array_distinct(
@@ -127,18 +113,22 @@ def shingle_sets(
 ) -> DataFrame:
     """(id, shingles) — distinct k-token shingles per document.
 
+    Every non-NULL text has at least one shingle (a text with fewer
+    than k tokens gives one shorter shingle, an all-blank text the
+    empty string); NULL text gives NULL shingles.
+
     The token split is materialized as a column before the shingle
     transform: a lambda's free reference to the split re-evaluates it
     per array element otherwise (measured 5x on the shingling stage).
     """
     k = shingle_k
     toks = F.col("_toks")
-    sh = F.array_distinct(
+    sh = F.when(F.col(text_col).isNotNull(), F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
         )
-    )
+    ))
     return docs.withColumn("_toks", tokens_expr(text_col)).select(
         id_col, sh.alias("shingles")
     )
@@ -163,7 +153,11 @@ def minhash_signatures(
     higher-order expressions) was CodegenFallback — measured 1.0 s of
     the signature stage at 5.5k docs. NumPy evaluates the identical
     exact int64 arithmetic ((a*h+b) mod M fits int64: a < 2^23,
-    h < 2^31) with a segment-min per document — value-identical."""
+    h < 2^31) with a segment-min per document — value-identical.
+
+    One output row per input row: ``id_col`` is expected to be unique.
+    Repeated ids are not merged; each row gets its own signature row
+    from its own text. A NULL text gives a NULL ``mh``."""
     M = 2147483647  # 2^31 - 1 (Mersenne prime)
     with_sh = shingle_sets(docs, shingle_k=shingle_k, id_col=id_col, text_col=text_col)
     hashed = with_sh.select(
@@ -187,25 +181,33 @@ def minhash_signatures(
                 continue
             col = b.column(1)
             arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-            off = np.asarray(arr.offsets, dtype=np.int64)
-            off = off - off[0]
+            # NULL shingle lists (NULL text) get a NULL signature row
+            valid = arr.is_valid().to_numpy(zero_copy_only=False)
+            lens = arr.value_lengths().fill_null(0).to_numpy().astype(np.int64)
             flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            n = b.num_rows
-            # every doc has >= 1 shingle by construction (the sequence
-            # lower bound); reduceat on an empty segment would silently
-            # return the next value, so guard loudly
-            if np.any(off[1:] == off[:-1]):
-                raise ValueError("minhash_signatures: empty shingle set")
-            mh = np.empty((n, len(a_arr)), dtype=np.int64)
-            for p in range(len(a_arr)):
-                v = (a_arr[p] * flat + b_arr[p]) % M
-                mh[:, p] = np.minimum.reduceat(v, off[:-1])
+            # every non-NULL doc has >= 1 shingle by construction (the
+            # sequence lower bound); reduceat on an empty segment would
+            # silently return the next value, so guard loudly
+            if np.any(valid & (lens == 0)):
+                raise ValueError(
+                    "minhash_signatures: empty (non-NULL) shingle set"
+                )
+            starts = (np.cumsum(lens) - lens)[valid]
+            P = len(a_arr)
+            mh = np.empty((len(starts), P), dtype=np.int64)
+            if len(starts):
+                for p in range(P):
+                    v = (a_arr[p] * flat + b_arr[p]) % M
+                    mh[:, p] = np.minimum.reduceat(v, starts)
+            offsets = np.concatenate([[0], np.cumsum(valid * P)]).astype(np.int32)
             yield pa.record_batch(
                 [
                     b.column(0),
-                    pa.FixedSizeListArray.from_arrays(
-                        pa.array(mh.reshape(-1), type=pa.int64()), len(a_arr)
-                    ).cast(pa.list_(pa.int64())),
+                    pa.ListArray.from_arrays(
+                        pa.array(offsets),
+                        pa.array(mh.reshape(-1), type=pa.int64()),
+                        mask=pa.array(~valid),
+                    ),
                 ],
                 names=[id_col, "mh"],
             )
@@ -241,7 +243,8 @@ def minhash_lsh_pairs(
         spread, num_perm=num_perm, shingle_k=shingle_k,
         id_col=id_col, text_col=text_col,
     )
-    sig = _pin_small(sig)
+    # NULL-text docs have no signature and never pair
+    sig = _pin_small(sig.filter(F.col("mh").isNotNull()))
     band_cols = F.array(
         *[
             F.struct(
@@ -314,8 +317,12 @@ def simhash(
     64 signed sums per doc with a segment-reduce over the token-hash
     array — exact integer arithmetic, value-identical (arithmetic >>
     on int64 matches Java shiftright; the b=63 shiftleft wraps
-    two's-complement in both). Docs with zero tokens are dropped,
-    exactly as the explode dropped them."""
+    two's-complement in both). Docs with zero tokens (or NULL text) are
+    dropped, exactly as the explode dropped them.
+
+    One output row per input row: ``id_col`` is expected to be unique.
+    Repeated ids are not merged; each row gets its own signature row
+    from its own text."""
     hashed = _spread(docs).select(
         F.col(id_col),
         F.transform(tokens_expr(text_col), lambda t: F.xxhash64(t)).alias("_h"),

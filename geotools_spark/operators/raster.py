@@ -53,7 +53,6 @@ Reference parity rules encoded here (each behind ``parity=True``):
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -278,12 +277,6 @@ def edge_pixels(
     return ex.groupBy("cell_col", "cell_row").agg(
         F.max(hit.cast("int")).cast("boolean").alias("is_edge")
     )
-
-
-def tan_curve(step, steps):
-    """src/mosaic.cpp:31-34 — clamped tanh fade in [0,1]."""
-    s = F.least(F.lit(float(steps)), F.greatest(F.lit(0.0), step.cast("double")))
-    return F.tanh(((s - steps / 2.0) / (steps / 2.0)) * math.pi) * 0.5 + 0.5
 
 
 def feather(

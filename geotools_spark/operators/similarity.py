@@ -105,15 +105,27 @@ QUANT_SEED = 1299709
 # oracle replay (parity pinned by tests/test_oracle_parity.py).
 
 def _np_vectors(col) -> np.ndarray:
-    """pyarrow (Chunked)ListArray of floats -> (n, dim) float64."""
+    """pyarrow (Chunked)ListArray of numbers -> (n, dim) float64.
+
+    Every row must be a non-NULL list of the same length (the list
+    offsets must have one fixed stride); anything else raises
+    ValueError rather than reshaping rows out of alignment."""
     import pyarrow as pa
 
     a = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-    flat = a.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
     n = len(a)
     if n == 0:
-        return flat.reshape(0, 0)
-    dim = len(flat) // n
+        return np.empty((0, 0), dtype=np.float64)
+    if a.null_count:
+        raise ValueError(f"{a.null_count} NULL vector(s) in a vector column")
+    lens = np.diff(np.asarray(a.offsets, dtype=np.int64))
+    dim = int(lens[0])
+    if np.any(lens != dim):
+        raise ValueError(
+            f"ragged vector column: lengths {int(lens.min())}..{int(lens.max())}"
+            " (every vector must have the same dimension)"
+        )
+    flat = a.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
     return flat.reshape(n, dim)
 
 
@@ -453,44 +465,6 @@ def pq_codebooks(
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
     return [[c[s * sub : (s + 1) * sub] for c in full] for s in range(m)]
-
-
-def pq_encode_expr(vec_col: str, codebooks: list[list[list[float]]]):
-    """array<int> of m PQ codes: per subspace, argmin over the ksub
-    sub-centroid squared distances (slice + sequential fold, first-min
-    tie-break — the exact shape assign_cell_expr uses, so the DuckDB
-    replay is bit-identical).
-
-    Shape matters: the naive form (m*ksub separate aggregate
-    expressions) builds a ~2000-node plan that costs ~20 s of
-    planning/codegen PER QUERY regardless of row count. Instead the
-    codebook is ONE nested array literal and each subspace's distance
-    list is a single ``transform`` over it — 8 higher-order
-    expressions total, identical arithmetic (the inner fold is still
-    left-associated over the same doubles)."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    vc = F.col(vec_col).cast("array<double>")
-    books = F.array(*[
-        F.array(*[
-            F.array(*[F.lit(float(v)) for v in c]) for c in book
-        ])
-        for book in codebooks
-    ])
-
-    def code_for(s: int):
-        sl = F.slice(vc, s * sub + 1, sub)
-        dists = F.transform(
-            F.element_at(books, s + 1),
-            lambda c: F.aggregate(
-                F.zip_with(sl, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    return F.array(*[code_for(s) for s in range(m)])
 
 
 def pq_adc_tables(

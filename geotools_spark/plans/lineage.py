@@ -55,10 +55,6 @@ def read_manifest(path: str) -> dict:
     return {"runs": [], "completed": {}}
 
 
-def completed_keys(path: str) -> set[str]:
-    return set(read_manifest(path)["completed"])
-
-
 def checkpointed_write(
     df: DataFrame,
     path: str,

@@ -1,10 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
-The same builder is used by tests, ``bench.py`` and the driver entry so
-every run gets AQE + Arrow + a shuffle-partition count matched to the
-parallelism level (critical for the local[8]-vs-local[32] scaling
-measurement; 200 default shuffle partitions would over-parallelize the
-small side and mask scaling).
+The same builder is used by tests, the CLI, ``perfbench/`` and the
+driver entry so every run gets AQE + Arrow + a shuffle-partition count
+matched to the parallelism level (200 default shuffle partitions would
+over-parallelize small local sessions).
 """
 
 from __future__ import annotations
@@ -24,13 +23,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    cores=None -> honor $SPARK_GRAFT_CPUS (default 32) on local master.
+    cores=None -> honor $SPARK_GRAFT_CPUS on local master, else the CPUs
+    this process may run on.
     shuffle_partitions defaults to 2x cores: enough tasks for AQE to
     coalesce, not so many that task overhead dominates at local scale.
     On a real cluster the same code path takes master from $SPARK_MASTER.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(
+            os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        )
     master = os.environ.get("SPARK_MASTER", f"local[{cores}]")
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)

@@ -9,8 +9,8 @@ Tables produced:
 - interleaved documents per BASELINE.json input_hint (text spans carry
   LASPoint payloads; media spans reference 'tile/<level>/<tx>/<ty>'),
   with a deliberately skewed hot cell to exercise salting/AQE;
-- polygon fixtures for PIP joins;
-- raster tiles in long and tiled form.
+- the distinct media-ref set of that table, without building it;
+- polygon fixtures for PIP joins.
 """
 
 from __future__ import annotations
@@ -92,81 +92,6 @@ def synthetic_documents(
     )
 
 
-def _payload_exprs(hot: int, m1: str, m2: str, i: str, did: str) -> str:
-    """The text-span payload as comma-joined SQL fragments over the
-    given mix-value column names — the SAME formulas synthetic_documents
-    embeds inside its transform (kept adjacent so they cannot drift;
-    equality is pinned by tests/test_spans.py fast-path parity)."""
-    px = (
-        f"CASE WHEN {m1} % 100 < {hot}"
-        f" THEN format_string('%.4f', CAST(1.0 + ({m1} % 9999) / 10000.0 AS DOUBLE))"
-        f" ELSE format_string('%.4f', CAST(({m1} % 640000) / 10000.0 AS DOUBLE)) END"
-    )
-    py = (
-        f"CASE WHEN {m1} % 100 < {hot}"
-        f" THEN format_string('%.4f', CAST(1.0 + ({m2} % 9999) / 10000.0 AS DOUBLE))"
-        f" ELSE format_string('%.4f', CAST(({m2} % 640000) / 10000.0 AS DOUBLE)) END"
-    )
-    return ", ".join(
-        {
-            "x": px,
-            "y": py,
-            "z": f"format_string('%.2f', CAST(1.0 + ({m2} % 1900) / 100.0 AS DOUBLE))",
-            "intensity": f"CAST({m1} % 256 AS STRING)",
-            "return_num": f"CAST({m2} % 5 + 1 AS STRING)",
-            "num_returns": "'5'",
-            "cls": f"CAST({m1} % 8 AS STRING)",
-            "scan_angle": f"CAST({m2} % 61 - 30 AS STRING)",
-            "gps_time": f"format_string('%.1f', CAST({did} * 2 + {i} AS DOUBLE))",
-            "source_id": f"CAST({did} % 4 AS STRING)",
-        }[name]
-        for name, _ in POINT_FIELDS
-    )
-
-
-def synthetic_spans_exploded(
-    spark: SparkSession,
-    n_docs: int,
-    *,
-    partitions: int | None = None,
-    hot_fraction_pct: int = 20,
-) -> DataFrame:
-    """``explode_spans(synthetic_documents(n_docs))`` without building
-    the per-doc span ARRAYS: the doc generator's nested transform is an
-    interpreted higher-order expression (CodegenFallback), so for
-    generation-INCLUSIVE pipelines that immediately explode, building
-    the array per doc only to flatten it again pays the interpreter for
-    every span. This emits the exploded rows directly from plain
-    codegen columns — identical values (row-set equality pinned by
-    tests/test_spans.py), same schema as explode_spans output:
-    (doc_id, span_idx, kind, text, media_ref, offset)."""
-    rng = spark.range(0, n_docs, 1, partitions) if partitions else spark.range(n_docs)
-    e = rng.select(
-        "id", F.explode(F.expr("sequence(0, CAST(1 + id % 5 AS INT))")).alias("i")
-    )
-    hot = int(hot_fraction_pct)
-    m1 = (
-        f"pmod((id % {MIX}) * 1103515245 + CAST(i AS BIGINT) * 826366247 + 12345,"
-        " 2147483647)"
-    )
-    e = e.selectExpr("id", "i", f"{m1} AS m1").selectExpr(
-        "id", "i", "m1", "pmod(m1 * 69069 + 1, 2147483647) AS m2"
-    )
-    payload = _payload_exprs(hot, "m1", "m2", "i", "id")
-    return e.selectExpr(
-        "format_string('doc%012d', id) AS doc_id",
-        "i AS span_idx",
-        "CASE WHEN (id + i) % 4 = 3 THEN 'media' ELSE 'text' END AS kind",
-        "CASE WHEN (id + i) % 4 = 3 THEN CAST(NULL AS STRING)"
-        f" ELSE concat_ws('{POINT_SEP}', {payload}) END AS text",
-        "CASE WHEN (id + i) % 4 = 3"
-        " THEN concat('tile/4/', CAST(m1 % 16 AS STRING), '/',"
-        " CAST(m2 % 16 AS STRING))"
-        " ELSE CAST(NULL AS STRING) END AS media_ref",
-        "CAST(i * 10 + m1 % 10 AS INT) AS offset",
-    )
-
-
 def synthetic_media_refs(
     spark: SparkSession, n_docs: int, *, partitions: int | None = None
 ) -> DataFrame:
@@ -228,36 +153,4 @@ def fixture_polygons(spark: SparkSession) -> DataFrame:
     ]
     return spark.createDataFrame(
         rows, "poly_id int, ring array<struct<x:double,y:double>>"
-    )
-
-
-def synthetic_raster(
-    spark: SparkSession,
-    *,
-    raster_id: str = "r0",
-    cols: int = 64,
-    rows: int = 64,
-    band: int = 1,
-    expr: str = "CAST(cell_col + cell_row AS DOUBLE)",
-    nodata_every: int | None = None,
-) -> DataFrame:
-    """Long-form raster (raster_id, band, cell_col, cell_row, value);
-    value from a deterministic expression of (cell_col, cell_row)."""
-    df = (
-        spark.range(cols * rows)
-        .withColumn("cell_col", (F.col("id") % cols).cast("long"))
-        .withColumn("cell_row", (F.col("id") / cols).cast("long"))
-    )
-    df = df.withColumn("value", F.expr(expr))
-    if nodata_every:
-        df = df.withColumn(
-            "value",
-            F.when(F.col("id") % nodata_every == 0, F.lit(None)).otherwise(F.col("value")),
-        )
-    return df.select(
-        F.lit(raster_id).alias("raster_id"),
-        F.lit(band).alias("band"),
-        "cell_col",
-        "cell_row",
-        "value",
     )

@@ -1,15 +1,16 @@
 #!/usr/bin/env bash
-# Package the engine and launch via spark-submit --py-files (north rule).
+# Package the engine and launch the N-vs-4N scaling run
+# (scripts/scaling.py) via spark-submit --py-files (north rule).
 #
 # Usage:
-#   scripts/submit.sh [bench|scaling] [extra spark-submit args...]
+#   scripts/submit.sh [extra spark-submit args...]
 #
-# On a real cluster set SPARK_MASTER (e.g. spark://host:7077 or yarn);
-# defaults to local[$SPARK_GRAFT_CPUS].
+# The launch master is $SPARK_MASTER (e.g. spark://host:7077 or yarn),
+# else local[$SPARK_GRAFT_CPUS], else local[<usable CPUs>]; the timed
+# runs themselves start their own local-cluster sessions.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-MODE="${1:-bench}"; shift || true
 ZIP=/tmp/geotools_spark.zip
 rm -f "$ZIP"
 python -c "
@@ -23,8 +24,6 @@ with zipfile.ZipFile('$ZIP', 'w', zipfile.ZIP_DEFLATED) as z:
 print('packaged', '$ZIP')
 "
 
-MASTER="${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}"
-if [ "$MODE" = "scaling" ]; then
-  export SPARK_GRAFT_SCALING=1
-fi
-exec spark-submit --master "$MASTER" --py-files "$ZIP" "$@" bench.py
+CPUS="${SPARK_GRAFT_CPUS:-$(python -c 'import os; print(len(os.sched_getaffinity(0)))')}"
+MASTER="${SPARK_MASTER:-local[$CPUS]}"
+exec spark-submit --master "$MASTER" --py-files "$ZIP" "$@" scripts/scaling.py

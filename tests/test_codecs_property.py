@@ -118,14 +118,13 @@ def test_jpeg_routes_bit_identical_property(h, w, c, quant, layout, seed):
     assert np.array_equal(codecs.decode_jpeg(alt), base)
 
 
-def test_native_lzw_byte_parity():
+def test_native_lzw_byte_parity(monkeypatch):
     """The compiled LZW encoder must emit the byte-identical stream of
     the Python loop (greedy LZW is deterministic) across entropy
     regimes, resets (>3836 table inserts) and degenerate inputs."""
-    import os
-
     import numpy as np
 
+    from geotools_spark import _native
     from geotools_spark.sources import _lzw_native, codecs
 
     if _lzw_native.get_lib() is None:
@@ -142,15 +141,7 @@ def test_native_lzw_byte_parity():
         bytes(np.tile(np.arange(256, dtype=np.uint8), 300)),
         bytes(300000),                                        # constant
     ]
-    for src in cases:
-        os.environ["GEOTOOLS_SPARK_NO_NATIVE"] = "1"
-        _lzw_native._lib_tried = False
-        _lzw_native._lib = None
-        try:
-            ref = codecs._lzw_encode(src)
-        finally:
-            os.environ.pop("GEOTOOLS_SPARK_NO_NATIVE")
-        _lzw_native._lib_tried = False
-        _lzw_native._lib = None
-        got = codecs._lzw_encode(src)
-        assert ref == got
+    got = [codecs._lzw_encode(src) for src in cases]
+    monkeypatch.setattr(_native, "ENABLED", False)
+    assert _lzw_native.get_lib() is None
+    assert [codecs._lzw_encode(src) for src in cases] == got

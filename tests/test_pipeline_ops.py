@@ -187,6 +187,58 @@ def test_exact_dedup_null_keys_dedupe(spark):
     assert kept == [1, 2, 5]
 
 
+def test_minhash_null_text_gives_null_signature(spark):
+    """A NULL-text doc gets a NULL signature row (not the empty text's
+    signature), leaves the other rows of its Arrow batch aligned, and
+    never pairs."""
+    from geotools_spark.operators.dedup import minhash_lsh_pairs, minhash_signatures
+
+    docs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, "the quick brown fox jumps"),
+            (3, None),
+            (4, "the quick brown fox jumps over"),
+            (5, ""),
+            (6, None),
+        ],
+        "doc_id long, text string",
+    ).coalesce(1)
+    sig = {r.doc_id: r.mh for r in minhash_signatures(docs, num_perm=16).collect()}
+    assert sig[1] is None and sig[3] is None and sig[6] is None
+    alone = minhash_signatures(docs.filter(F.col("text").isNotNull()), num_perm=16)
+    assert {r.doc_id: r.mh for r in alone.collect()} == {
+        k: v for k, v in sig.items() if v is not None
+    }
+    pairs = minhash_lsh_pairs(docs, num_perm=64, bands=16, threshold=0.5).collect()
+    assert [(r.id_a, r.id_b) for r in pairs] == [(2, 4)]
+
+
+def test_np_vectors_rejects_ragged_and_null_vectors(spark):
+    """Ragged lengths whose total divides evenly ([3, 5] over 2 rows used
+    to reshape silently to dim 4) and NULL vectors raise a clear error,
+    in the kernel and through a public operator."""
+    import pyarrow as pa
+
+    from geotools_spark.operators.similarity import _np_vectors, pq_ann_topk
+
+    assert _np_vectors(pa.array([[1.0, 2.0], [3.0, 4.0]])).tolist() == [
+        [1.0, 2.0], [3.0, 4.0],
+    ]
+    with pytest.raises(ValueError, match="ragged vector column"):
+        _np_vectors(pa.array([[1.0, 2.0, 3.0], [1.0, 2.0, 3.0, 4.0, 5.0]]))
+    with pytest.raises(ValueError, match="NULL vector"):
+        _np_vectors(pa.array([[1.0, 2.0], None]))
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.0, 4.0, 5.0])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    books = [[[0.0, 0.0]], [[0.0, 0.0]]]  # m=2 subspaces of 2 -> dim 4
+    with pytest.raises(Exception, match="ragged vector column"):
+        pq_ann_topk(emb, [0.0] * 4, k=1, codebooks=books).collect()
+
+
 def test_pq_ann_recall_and_determinism(spark):
     """PQ ANN (8x one-byte codes + ADC + exact re-rank) recall vs the
     exact top-k, plus rerun determinism (sample codebooks + first-min

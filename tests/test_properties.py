@@ -164,15 +164,14 @@ def test_tin_validate_exact_at_vertices(xy):
             assert got == pytest.approx(z[i], abs=1e-6)
 
 
-def test_native_delaunay_matches_numpy_loop():
+def test_native_delaunay_matches_numpy_loop(monkeypatch):
     """The compiled Bowyer-Watson kernel must be triangle-for-triangle
     identical to the NumPy loop (same float expressions, same row
     management) — the terrain operators' interpolated values ride it."""
-    import os
-
     import numpy as np
 
     import geotools_spark.functions._delaunay_native as dn
+    from geotools_spark import _native
     from geotools_spark.functions import geometry
 
     if dn.get_lib() is None:
@@ -195,15 +194,9 @@ def test_native_delaunay_matches_numpy_loop():
     gx, gy = np.meshgrid(np.arange(12.0), np.arange(12.0))
     cases.append(np.column_stack([gx.ravel(), gy.ravel()]))  # grid: all ties
 
-    for xy in cases:
-        os.environ["GEOTOOLS_SPARK_NO_NATIVE"] = "1"
-        dn._lib_tried = False
-        dn._lib = None
-        try:
-            ref = geometry.delaunay(xy)
-        finally:
-            os.environ.pop("GEOTOOLS_SPARK_NO_NATIVE")
-        dn._lib_tried = False
-        dn._lib = None
-        got = geometry.delaunay(xy)
-        assert ref.shape == got.shape and np.array_equal(ref, got)
+    got = [geometry.delaunay(xy) for xy in cases]
+    monkeypatch.setattr(_native, "ENABLED", False)
+    assert dn.get_lib() is None
+    for xy, g in zip(cases, got):
+        ref = geometry.delaunay(xy)
+        assert ref.shape == g.shape and np.array_equal(ref, g)

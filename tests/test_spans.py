@@ -118,17 +118,3 @@ def test_span_invariant_survives_shuffle_heavy_pipeline(spark):
     rebuilt = reassemble(rebuilt_rows)
     assert _collect_docs(docs) == _collect_docs(rebuilt)
 
-
-def test_synthetic_spans_exploded_matches_doc_explode(spark):
-    """The codegen exploded-span generator must emit exactly the rows
-    of explode_spans(synthetic_documents(n)) — the flagship's
-    generation-inclusive path rides it."""
-    from geotools_spark.sources.datagen import (
-        synthetic_documents,
-        synthetic_spans_exploded,
-    )
-
-    slow = explode_spans(synthetic_documents(spark, 4000)).collect()
-    fast = synthetic_spans_exploded(spark, 4000).collect()
-    key = lambda r: (r.doc_id, r.span_idx)  # noqa: E731
-    assert sorted(fast, key=key) == sorted(slow, key=key)
