@@ -156,6 +156,7 @@ def _cmd_pointzonalstats(args) -> None:
     spark = _spark(args)
     from pyspark.sql import functions as F
 
+    from geotools_spark.functions.cells import cell_cols
     from geotools_spark.operators.zonal import zonal_stats, zone_lookup
 
     # zones: long-form (cell_col, cell_row, zone_id) raster table.
@@ -164,16 +165,9 @@ def _cmd_pointzonalstats(args) -> None:
     # never a data-dependent extent, which would silently shift the
     # join whenever the input (or a --cls filter) changes.
     ox, oy = (float(v) for v in args.origin.split(","))
-    pts = _read_points(spark, args).withColumn(
-        "cell_col",
-        F.floor((F.col("x") - F.lit(ox)) / F.lit(args.resolution)).cast(
-            "bigint"
-        ),
-    ).withColumn(
-        "cell_row",
-        F.floor((F.col("y") - F.lit(oy)) / F.lit(args.resolution)).cast(
-            "bigint"
-        ),
+    ccol, crow = cell_cols(F.col("x"), F.col("y"), minx=ox, miny=oy, res=args.resolution)
+    pts = _read_points(spark, args).select(
+        "*", ccol.alias("cell_col"), crow.alias("cell_row")
     )
     zones = spark.read.parquet(args.zones)
     _write(zonal_stats(zone_lookup(pts, zones)), args)

@@ -9,8 +9,9 @@ document table.
 
 Two entry points:
 
-- ``flagship_from_docs(docs)``: pipeline over an existing documents
-  DataFrame (any source: parquet/Iceberg scan or synthetic generator).
+- ``flagship_from_docs(docs)``: the pipeline over an existing documents
+  DataFrame (any source: parquet/Iceberg scan or synthetic generator);
+  it explodes the spans once and feeds both sinks from them.
 - ``flagship_docs_pipeline(spark, n_docs)``: synthesize the table
   in-plan and run the pipeline (used by correctness queries and by the
   N-vs-4N scaling run, ``scripts/scaling.py``).
@@ -31,8 +32,9 @@ from geotools_spark.operators.spans import (
 from geotools_spark.sources.datagen import synthetic_documents
 
 
-def _flagship_from_spans(spans: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(grid stats, media tile counts) over an exploded span table."""
+def flagship_from_docs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(grid stats, media tile counts) over a documents table."""
+    spans = explode_spans(docs)
     # grid consumes only (x, y, z): the limited split stops the
     # per-span tokenization after the 3rd separator (values identical)
     pts = with_cell(
@@ -49,11 +51,6 @@ def _flagship_from_spans(spans: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.count("*").alias("n_media")
     )
     return grid, tiles
-
-
-def flagship_from_docs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(grid stats, media tile counts) over a documents table."""
-    return _flagship_from_spans(explode_spans(docs))
 
 
 def flagship_docs_pipeline(spark: SparkSession, n_docs: int) -> tuple[DataFrame, DataFrame]:

@@ -4,10 +4,17 @@ Re-expresses the reference's point->cell assignment and hierarchical
 cell encoding as pure JVM-side column expressions (whole-stage codegen;
 no Python in the hot path).
 
+This module is the single home of the K1 cell rule (:func:`cell_cols`,
+its Python twin :func:`cell_of`) and of the neighbour-window literal
+(:func:`window_offsets`); operators call them instead of writing their
+own floor or ``struct(dx, dy)`` array.
+
 Reference semantics being matched (SURVEY.md §2.3):
 - K1 point->cell: ``col = floor((x-minx)/res)``, ``row`` y-flipped so
   rows count from the top (src/lasgrid.cpp:302-314,
   src/finalizedpointstream.cpp:96-106); row-major linear index.
+  Origin-0 callers pass ``minx=0.0``: ``x - 0.0`` is exact, so their
+  keys are bit-identical to ``floor(x/res)``.
 - K2 hierarchical encoding: the reference sorts files by a coarse grid
   index (src/pointstats.cpp:253-272); we generalize to a Morton
   (Z-order) key with level-prefix parents — an H3/S2-class hierarchy on
@@ -85,6 +92,26 @@ def cell_cols(
     return ccol, crow
 
 
+def cell_of(v: float, origin: float, res: float) -> int:
+    """K1 rule for one Python coordinate: the same IEEE
+    ``floor((v-origin)/res)`` :func:`cell_cols` evaluates in the JVM."""
+    return math.floor((v - origin) / res)
+
+
+def window_offsets(n: int, *, center: bool = True) -> Column:
+    """``array<struct<dx long, dy long>>`` literal of the (2n+1)^2
+    neighbour window, dx-major (dx outer, dy inner), so the explode
+    order is fixed. ``center=False`` leaves out (0, 0): with n=1 that is
+    the D8 ring."""
+    items = ", ".join(
+        f"struct({dx}L as dx, {dy}L as dy)"
+        for dx in range(-n, n + 1)
+        for dy in range(-n, n + 1)
+        if center or (dx, dy) != (0, 0)
+    )
+    return F.expr(f"array({items})")
+
+
 def cell_index(ccol: Column, crow: Column, cols: int) -> Column:
     """Row-major linear cell index (the reference's grid idx)."""
     return (crow * F.lit(int(cols)) + ccol).cast("long")
@@ -116,14 +143,15 @@ def with_cell(
     zkey: bool = False,
 ):
     """Attach cell_col / cell_row / cell (linear idx) and optionally a
-    Z-order ``zkey`` column used for range partitioning at scale."""
+    Z-order ``zkey`` column used for range partitioning at scale.
+
+    The coordinates get a projection of their own: the Morton key reads
+    each one 32 times, which would re-evaluate an inlined floor."""
     ccol, crow = cell_cols(
         F.col(x), F.col(y), minx=minx, miny=miny, res=res, rows=rows, yflip=yflip
     )
-    out = df.withColumn("cell_col", ccol).withColumn("cell_row", crow)
-    out = out.withColumn("cell", cell_index(F.col("cell_col"), F.col("cell_row"), cols))
+    cc, cr = F.col("cell_col"), F.col("cell_row")
+    keys = [cell_index(cc, cr, cols).alias("cell")]
     if zkey:
-        out = out.withColumn(
-            "zkey", morton_key(F.col("cell_col"), F.col("cell_row"))
-        )
-    return out
+        keys.append(morton_key(cc, cr).alias("zkey"))
+    return df.select("*", ccol.alias("cell_col"), crow.alias("cell_row")).select("*", *keys)

@@ -33,12 +33,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_D8 = "array(" + ", ".join(
-    f"struct({dx}L as dx, {dy}L as dy)"
-    for dx in (-1, 0, 1)
-    for dy in (-1, 0, 1)
-    if (dx, dy) != (0, 0)
-) + ")"
+from geotools_spark.functions.cells import window_offsets
 
 
 def tree_crowns(
@@ -219,7 +214,7 @@ def tree_crowns_iterative(
     for _ in range(int(math.ceil(radius_cells)) + 1):
         cand = frontier.select(
             "top_id", "_z", "_tc", "_tr", "_tz",
-            F.explode(F.expr(_D8)).alias("off"),
+            F.explode(window_offsets(1, center=False)).alias("off"),
             (F.col("cell_col") + F.col("off.dx")).alias("ncol"),
             (F.col("cell_row") + F.col("off.dy")).alias("nrow"),
         ).drop("off")

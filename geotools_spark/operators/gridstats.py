@@ -5,18 +5,22 @@ single shuffle — the Spark analogue of the reference's one-cache-pass
 multi-aggregate (src/pointstats.cpp:240-247) and lasgrid's streaming
 accumulators + finalize sweep (src/lasgrid.cpp:318-468).
 
-Exact parity rules encoded here (all from the reference, SURVEY.md §2.4):
+This module is the single home of the quantile, median, n<=1 and
+moment rules below; ``operators.salting`` and the zonal stats import
+them. Exact parity rules (all from the reference, SURVEY.md §2.4):
 
 - empty cells never appear in a grouped result; they materialize as the
   nodata sentinel -9999.0 only when densifying to a full grid
   (``densify``), matching include/cellstats.hpp:183 etc.
 - sample variance/stddev with n<=1: lasgrid writes 0, not nodata
   (src/lasgrid.cpp:385-402) — ``n1_rule='zero'``; the cellstats path
-  divides by (n-1)=0 giving NaN — ``n1_rule='nan'``.
+  divides by (n-1)=0 giving NaN — ``n1_rule='nan'``; ``'null'`` keeps
+  Spark's own NULL. Any other rule raises (``n1_rule_expr``).
 - median: sort, even n -> mean of the two middles
-  (include/cellstats.hpp:211-230).
+  (include/cellstats.hpp:211-230) — ``median_pick``.
 - quantiles: index rule ``c = ceil((i/(num+1)) * (cnt-1))`` giving
-  num+2 outputs q0..q(num+1) (src/pointzonalstats.cpp:276-294).
+  num+2 outputs q0..q(num+1) (src/pointzonalstats.cpp:276-294) —
+  ``quantile_rank``.
 - skewness: Fisher-Pearson ``sum((v-mean)^3)/n / s^3`` with s = SAMPLE
   stddev (include/cellstats.hpp:324-342) — Spark's builtin skewness()
   uses population stddev, so it is composed manually from raw moments.
@@ -104,22 +108,83 @@ def point_filters(
     return df
 
 
+N1_RULES = ("zero", "nan", "null")
+
+
+def n1_rule_expr(stat: Column, n: Column, n1_rule: str) -> Column:
+    """A sample variance/stddev column under the n<=1 rule: ``'zero'``
+    and ``'nan'`` replace it by 0 / NaN when ``n <= 1``, ``'null'``
+    leaves Spark's NULL."""
+    if n1_rule not in N1_RULES:
+        raise ValueError(f"unknown n1_rule {n1_rule!r}; valid rules: {N1_RULES}")
+    if n1_rule == "null":
+        return stat
+    return F.when(n <= 1, F.lit(0.0 if n1_rule == "zero" else float("nan"))).otherwise(stat)
+
+
+def median_pick(n: Column, lo: Column, hi: Column) -> Column:
+    """The median tie rule: the middle value ``hi`` for odd ``n``, the
+    mean of the two middles ``lo``/``hi`` for even ``n``."""
+    return F.when(n % 2 == 1, hi).otherwise((lo + hi) / 2.0)
+
+
 def _median_expr(vals: Column, n: Column) -> Column:
     # element_at is 1-based; reference: v[n/2] (0-based) for odd,
     # mean of v[n/2-1], v[n/2] for even.
     half = (n / 2).cast("int")
-    odd = F.element_at(vals, half + 1)
-    even = (F.element_at(vals, half) + F.element_at(vals, half + 1)) / 2.0
-    return F.when(n % 2 == 1, odd).otherwise(even)
+    return median_pick(n, F.element_at(vals, half), F.element_at(vals, half + 1))
 
 
-def _quantile_exprs(vals: Column, n: Column, num: int) -> list[Column]:
-    """q0..q(num+1) with the reference ceil-index rule."""
-    out = []
-    for i in range(num + 2):
-        frac = float(i) / float(num + 1)
-        idx = F.ceil(F.lit(frac) * (n - 1).cast("double")).cast("int")
-        out.append(F.element_at(vals, idx + 1).alias(f"q{i}"))
+def quantile_rank(n: Column, i: int, num: int) -> Column:
+    """0-based sorted position (a long) of quantile ``q<i>`` of ``num``:
+    ``ceil(i/(num+1) * (n-1))``."""
+    return F.ceil(F.lit(float(i) / float(num + 1)) * (n - 1).cast("double"))
+
+
+def quantile_at(vals: Column, n: Column, i: int, num: int) -> Column:
+    """Quantile ``q<i>`` of ``num`` from a sorted value array."""
+    return F.element_at(vals, quantile_rank(n, i, num).cast("int") + 1)
+
+
+def _central_moments(v: Column, nd: Column, mean: Column) -> tuple[Column, Column, Column]:
+    """(m2, m3c, m4c) = sum((v-mean)^k) for k = 2, 3, 4, aggregated from
+    the raw power sums of ``v`` (numerically fine at per-cell
+    magnitudes; parity tests pin the values)."""
+    s1, s2 = F.sum(v), F.sum(v * v)
+    s3, s4 = F.sum(v * v * v), F.sum(v * v * v * v)
+    m2 = s2 - s1 * s1 / nd
+    m3c = s3 - 3.0 * mean * s2 + 3.0 * mean * mean * s1 - nd * mean * mean * mean
+    m4c = (
+        s4
+        - 4.0 * mean * s3
+        + 6.0 * mean * mean * s2
+        - 4.0 * mean * mean * mean * s1
+        + nd * mean * mean * mean * mean
+    )
+    return m2, m3c, m4c
+
+
+def stat_columns(
+    exprs: dict[str, Column],
+    stats: Sequence[str],
+    vals: Column | None,
+    n: Column,
+    quantile_num: int,
+    prefix: str = "",
+) -> list[Column]:
+    """``stats`` in order as ``<prefix><stat>`` columns; ``'quantiles'``
+    expands to q0..q(quantile_num+1) over the sorted array ``vals``."""
+    out: list[Column] = []
+    for s in stats:
+        if s == "quantiles":
+            out.extend(
+                quantile_at(vals, n, i, quantile_num).alias(f"{prefix}q{i}")
+                for i in range(quantile_num + 2)
+            )
+        elif s in exprs:
+            out.append(exprs[s].alias(f"{prefix}{s}"))
+        else:
+            raise ValueError(f"unsupported stat {s!r}; have {[*exprs, 'quantiles']}")
     return out
 
 
@@ -143,29 +208,10 @@ def cell_stat_exprs(
     vals = F.sort_array(F.collect_list(v)) if need_holistic else None
 
     mean = F.avg(v)
-    s1, s2 = F.sum(v), F.sum(v * v)
-    s3, s4 = F.sum(v * v * v), F.sum(v * v * v * v)
     nd = n.cast("double")
-    # Central moments from raw moments (numerically fine at per-cell
-    # magnitudes; parity tests pin the values).
-    m2 = s2 - s1 * s1 / nd  # sum((v-mean)^2)
-    m3c = s3 - 3.0 * mean * s2 + 3.0 * mean * mean * s1 - nd * mean * mean * mean
-    m4c = (
-        s4
-        - 4.0 * mean * s3
-        + 6.0 * mean * mean * s2
-        - 4.0 * mean * mean * mean * s1
-        + nd * mean * mean * mean * mean
-    )
-    var_samp = F.var_samp(v)
-    if n1_rule == "zero":
-        var_s = F.when(n <= 1, F.lit(0.0)).otherwise(var_samp)
-        std_s = F.when(n <= 1, F.lit(0.0)).otherwise(F.stddev_samp(v))
-    elif n1_rule == "nan":
-        var_s = F.when(n <= 1, F.lit(float("nan"))).otherwise(var_samp)
-        std_s = F.when(n <= 1, F.lit(float("nan"))).otherwise(F.stddev_samp(v))
-    else:  # 'null' — idiomatic Spark
-        var_s, std_s = var_samp, F.stddev_samp(v)
+    m2, m3c, m4c = _central_moments(v, nd, mean)
+    var_s = n1_rule_expr(F.var_samp(v), n, n1_rule)
+    std_s = n1_rule_expr(F.stddev_samp(v), n, n1_rule)
 
     std_samp = F.sqrt(m2 / (nd - 1.0))
 
@@ -174,7 +220,7 @@ def cell_stat_exprs(
         "density": nd / (float(res) * float(res)),
         "min": F.min(v),
         "max": F.max(v),
-        "sum": s1,
+        "sum": F.sum(v),
         "mean": mean,
         "variance": var_s,
         "stddev": std_s,
@@ -185,19 +231,7 @@ def cell_stat_exprs(
     }
     if need_holistic:
         exprs["median"] = _median_expr(vals, n)
-
-    out: list[Column] = []
-    for s in stats:
-        if s == "quantiles":
-            out.extend(
-                q.alias(f"{prefix}q{i}")
-                for i, q in enumerate(_quantile_exprs(vals, n, quantile_num))
-            )
-        elif s in exprs:
-            out.append(exprs[s].alias(f"{prefix}{s}"))
-        else:
-            raise ValueError(f"unknown stat {s!r}")
-    return out
+    return stat_columns(exprs, stats, vals, n, quantile_num, prefix)
 
 
 def kurtosis_prefilter(
@@ -218,18 +252,8 @@ def kurtosis_prefilter(
     vf = F.when(predicate, v)
     n_f = F.count(vf)
     n_all = F.count(F.lit(1))
-    s1, s2 = F.sum(vf), F.sum(vf * vf)
-    s3, s4 = F.sum(vf * vf * vf), F.sum(vf * vf * vf * vf)
     nd = n_f.cast("double")
-    mean = s1 / nd
-    m2 = s2 - s1 * s1 / nd
-    m4c = (
-        s4
-        - 4.0 * mean * s3
-        + 6.0 * mean * mean * s2
-        - 4.0 * mean * mean * mean * s1
-        + nd * mean * mean * mean * mean
-    )
+    m2, _, m4c = _central_moments(vf, nd, F.sum(vf) / nd)
     s_samp = F.sqrt(m2 / (nd - 1.0))
     s4p = s_samp * s_samp * s_samp * s_samp
     return points.groupBy(*[F.col(g) for g in group]).agg(
@@ -263,14 +287,9 @@ def quantile_band_filter(
     v = F.col(value)
     vals = F.sort_array(F.collect_list(v))
     n = F.count(v)
-
-    def qval(i: int):
-        frac = float(i) / float(quantiles + 1)
-        idx = F.ceil(F.lit(frac) * (n - 1).cast("double")).cast("int")
-        return F.element_at(vals, idx + 1)
-
     bounds = points.groupBy(*group).agg(
-        qval(q_from).alias("_qlo"), qval(q_to).alias("_qhi")
+        quantile_at(vals, n, q_from, quantiles).alias("_qlo"),
+        quantile_at(vals, n, q_to, quantiles).alias("_qhi"),
     )
     out = points.join(bounds, list(group), "inner").filter(
         (v > F.col("_qlo")) & (v <= F.col("_qhi"))
@@ -367,13 +386,13 @@ def densify(
     """Left-join the sparse per-cell stats onto the full dense grid,
     materializing the reference's nodata sentinel for empty cells —
     the output-edge step of every raster-producing pipeline."""
-    grid = (
-        spark.range(int(cols) * int(rows))
-        .withColumn("cell_col", (F.col("id") % cols).cast("long"))
-        .withColumn("cell_row", (F.col("id") / cols).cast("long"))
-        .drop("id")
+    grid = spark.range(int(cols) * int(rows)).select(
+        (F.col("id") % cols).cast("long").alias("cell_col"),
+        (F.col("id") / cols).cast("long").alias("cell_row"),
     )
     out = grid.join(stats_df, ["cell_col", "cell_row"], "left")
-    for c in stat_cols:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.lit(float(nodata))))
-    return out
+    fill = set(stat_cols)
+    return out.select(
+        *(F.coalesce(F.col(c), F.lit(float(nodata))).alias(c) if c in fill else c
+          for c in out.columns)
+    )

@@ -21,21 +21,11 @@ Reference semantics:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _offsets_expr(n: int) -> str:
-    """array of (dx, dy) struct literals for a (2n+1)^2 window."""
-    items = ", ".join(
-        f"struct({dx}L as dx, {dy}L as dy)"
-        for dx in range(-n, n + 1)
-        for dy in range(-n, n + 1)
-    )
-    return f"array({items})"
+from geotools_spark.functions.cells import cell_cols, window_offsets
 
 
 def radius_cell_join(
@@ -52,21 +42,16 @@ def radius_cell_join(
     ``radius``; downstream groupBy(cell) computes radius-windowed stats
     (lasgrid radius mode). Output adds cell_col/cell_row/dist."""
     n = int((radius * 2) / res / 2) + 1  # safe cover of the reference window
-    exploded = points.select(
-        "*",
-        F.explode(F.expr(_offsets_expr(n))).alias("off"),
-    )
-    base_col = F.floor((F.col(x) - F.lit(minx)) / F.lit(res))
-    base_row = F.floor((F.col(y) - F.lit(miny)) / F.lit(res))
-    out = (
-        exploded.withColumn("cell_col", base_col + F.col("off.dx"))
-        .withColumn("cell_row", base_row + F.col("off.dy"))
-        .drop("off")
+    base_col, base_row = cell_cols(F.col(x), F.col(y), minx=minx, miny=miny, res=res)
+    out = points.select("*", F.explode(window_offsets(n)).alias("off")).select(
+        *points.columns,
+        (base_col + F.col("off.dx")).alias("cell_col"),
+        (base_row + F.col("off.dy")).alias("cell_row"),
     )
     cx = F.lit(minx) + (F.col("cell_col") + 0.5) * F.lit(res)
     cy = F.lit(miny) + (F.col("cell_row") + 0.5) * F.lit(res)
     dist2 = (F.col(x) - cx) * (F.col(x) - cx) + (F.col(y) - cy) * (F.col(y) - cy)
-    return out.withColumn("dist", F.sqrt(dist2)).filter(
+    return out.select("*", F.sqrt(dist2).alias("dist")).filter(
         dist2 <= F.lit(float(radius) * float(radius))
     )
 
@@ -104,9 +89,6 @@ def knn_join(
     ``knn_rank`` column. Only for callers that neither read the rank
     nor depend on per-query candidate order.
     """
-    q = queries.withColumn("qcell_col", F.floor(F.col(qx) / F.lit(res))).withColumn(
-        "qcell_row", F.floor(F.col(qy) / F.lit(res))
-    )
     # The probe side inherits the scan's partitioning (often just a few
     # parquet row groups), but the join FANS OUT ~rings^2 matches per
     # sample and the per-partition WindowGroupLimit sorts that output in
@@ -117,37 +99,40 @@ def knn_join(
     from .partitioning import fanout_partitions
 
     par = fanout_partitions(samples, multiplier=float((2 * rings + 1) ** 2))
-    s = samples.repartition(par).withColumn(
-        "scell_col", F.floor(F.col(sx) / F.lit(res))
-    ).withColumn("scell_row", F.floor(F.col(sy) / F.lit(res)))
-    qe = q.select(
-        "*", F.explode(F.expr(_offsets_expr(rings))).alias("off")
-    ).select(
-        "*",
-        (F.col("qcell_col") + F.col("off.dx")).alias("jcell_col"),
-        (F.col("qcell_row") + F.col("off.dy")).alias("jcell_row"),
-    ).drop("off")
+    scol, srow = cell_cols(F.col(sx), F.col(sy), minx=0.0, miny=0.0, res=res)
+    s = samples.repartition(par).select(
+        "*", scol.alias("scell_col"), srow.alias("scell_row")
+    )
+    # the query cell is keyed once per query, before the window explode
+    qcol, qrow = cell_cols(F.col(qx), F.col(qy), minx=0.0, miny=0.0, res=res)
+    qe = (
+        queries.select("*", qcol.alias("qcell_col"), qrow.alias("qcell_row"))
+        .select("*", F.explode(window_offsets(rings)).alias("off"))
+        .select(
+            *queries.columns,
+            (F.col("qcell_col") + F.col("off.dx")).alias("jcell_col"),
+            (F.col("qcell_row") + F.col("off.dy")).alias("jcell_row"),
+        )
+    )
+    ddx = F.col(qx) - F.col(sx)
+    ddy = F.col(qy) - F.col(sy)
     joined = qe.join(
         s,
         (F.col("jcell_col") == F.col("scell_col"))
         & (F.col("jcell_row") == F.col("scell_row")),
         "inner",
-    )
-    ddx = F.col(qx) - F.col(sx)
-    ddy = F.col(qy) - F.col(sy)
-    # plain multiplication (not pow) so the DuckDB oracle's dist*dist
-    # arithmetic is bit-identical
-    joined = joined.withColumn("dist", F.sqrt(ddx * ddx + ddy * ddy))
-    drop_cols = (
-        "qcell_col", "qcell_row", "scell_col", "scell_row", "jcell_col", "jcell_row"
+    ).select(
+        *queries.columns,
+        *samples.columns,
+        # plain multiplication (not pow) so the DuckDB oracle's dist*dist
+        # arithmetic is bit-identical
+        F.sqrt(ddx * ddx + ddy * ddy).alias("dist"),
     )
     if not ranked:
-        return joined.drop(*drop_cols)
+        return joined
     w = Window.partitionBy(query_id).orderBy(F.col("dist"), F.col(sample_id))
-    return (
-        joined.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-        .drop(*drop_cols)
+    return joined.select("*", F.row_number().over(w).alias("knn_rank")).filter(
+        F.col("knn_rank") <= k
     )
 
 

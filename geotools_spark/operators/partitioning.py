@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread(df: DataFrame, factor: int = 1, *, narrow: bool | None = None) -> DataFrame:
+def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     """Round-robin repartition to cluster parallelism when the input
     arrives in fewer partitions — single-row-group parquet files (and
     any small compacted table) scan as ONE task, and every narrow
@@ -28,21 +28,16 @@ def spread(df: DataFrame, factor: int = 1, *, narrow: bool | None = None) -> Dat
     shuffle write) inherits that. No-op when the source is already
     wide, so a large multi-split scan pays nothing.
 
-    ``narrow`` lets the caller declare the source shape (True: always
-    spread, False: never) without a plan probe.  When None, we probe
-    ``df.rdd`` — an analysis round-trip, and unavailable under Spark
-    Connect, in which case we conservatively spread (the repartition is
-    the whole point at small partition counts; a wide source under
-    Connect should pass ``narrow=False``)."""
-    if narrow is False:  # before any sparkContext touch: Connect-safe
-        return df
+    The source's partition count comes from probing ``df.rdd`` — an
+    analysis round-trip, and unavailable under Spark Connect, in which
+    case we conservatively spread (the repartition is the whole point
+    at small partition counts)."""
     par = default_parallelism(df.sparkSession) * factor
-    if narrow is None:
-        try:
-            if df.rdd.getNumPartitions() >= par:
-                return df
-        except Exception:
-            pass  # Spark Connect: no RDD API — fall through and spread
+    try:
+        if df.rdd.getNumPartitions() >= par:
+            return df
+    except Exception:
+        pass  # Spark Connect: no RDD API — fall through and spread
     return df.repartition(par)
 
 

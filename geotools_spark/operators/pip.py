@@ -23,13 +23,13 @@ oracle SQL evaluates, so cross-engine results are bit-identical.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
+
+from geotools_spark.functions.cells import cell_cols, cell_of
 
 
 def _collect_rings(polygons: DataFrame) -> dict[int, np.ndarray]:
@@ -58,8 +58,8 @@ def _covering_cells(rings: dict[int, np.ndarray], res: float):
     for pid, ring in rings.items():
         minx, miny = ring.min(axis=0)
         maxx, maxy = ring.max(axis=0)
-        for cc in range(math.floor(minx / res), math.floor(maxx / res) + 1):
-            for cr in range(math.floor(miny / res), math.floor(maxy / res) + 1):
+        for cc in range(cell_of(minx, 0.0, res), cell_of(maxx, 0.0, res) + 1):
+            for cr in range(cell_of(miny, 0.0, res), cell_of(maxy, 0.0, res) + 1):
                 out.append(
                     (cc, cr, pid, float(minx), float(miny), float(maxx), float(maxy))
                 )
@@ -127,9 +127,8 @@ def pip_join(
             out[mask] = ray_cast(xv[mask], yv[mask], bc_rings.value[int(pid)])
         return pd.Series(out)
 
-    pts = points.withColumn("pcell_col", F.floor(F.col(x) / F.lit(float(res)))).withColumn(
-        "pcell_row", F.floor(F.col(y) / F.lit(float(res)))
-    )
+    pcol, prow = cell_cols(F.col(x), F.col(y), minx=0.0, miny=0.0, res=res)
+    pts = points.select("*", pcol.alias("pcell_col"), prow.alias("pcell_row"))
     candidates = pts.join(
         F.broadcast(cand), ["pcell_col", "pcell_row"], "inner"
     )

@@ -59,6 +59,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geotools_spark.functions.cells import cell_cols, window_offsets
+
 
 def _window_offsets_expr(size: int) -> str:
     """array<struct<dx,dy>> for a size x size window centered at 0."""
@@ -511,9 +513,8 @@ def spill_points(
         )
     )
     d = float(max_dist)
-    edges = edge.withColumn("_bc", F.floor(F.col("x") / d)).withColumn(
-        "_br", F.floor(F.col("y") / d)
-    )
+    bc, br = cell_cols(F.col("x"), F.col("y"), minx=0.0, miny=0.0, res=d)
+    edges = edge.select("*", bc.alias("_bc"), br.alias("_br"))
     a = edges.select(
         F.col("label").alias("label_a"),
         F.col("x").alias("x_a"),
@@ -877,17 +878,7 @@ def tiles_with_halo(
         "cell_row",
         F.col(value).alias("value"),
         *[F.col(c) for c in extra],
-        F.explode(
-            F.expr(
-                "array("
-                + ", ".join(
-                    f"struct({dx}L as dx, {dy}L as dy)"
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                )
-                + ")"
-            )
-        ).alias("off"),
+        F.explode(window_offsets(1)).alias("off"),
     )
     home_tc = F.floor(F.col("cell_col") / tile)
     home_tr = F.floor(F.col("cell_row") / tile)

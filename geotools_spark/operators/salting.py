@@ -35,7 +35,13 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from geotools_spark.operators.gridstats import _median_expr, _quantile_exprs
+from geotools_spark.operators.gridstats import (
+    _median_expr,
+    median_pick,
+    n1_rule_expr,
+    quantile_rank,
+    stat_columns,
+)
 
 ALGEBRAIC = ("count", "density", "min", "max", "sum", "mean",
              "variance", "stddev", "pvariance", "pstddev")
@@ -108,18 +114,16 @@ def exact_quantiles_by_value(
             val_at(half - 1).alias("_m_lo"),  # even: lower middle
             val_at(half).alias("_m_hi"),      # odd median / even upper
         ]
-    for i in range(quantile_num + 2):
-        frac = float(i) / float(quantile_num + 1)
-        idx = F.ceil(F.lit(frac) * (n - 1).cast("double")).cast("long")
-        aggs.append(val_at(idx).alias(f"_q{i}"))
+    aggs += [
+        val_at(quantile_rank(n, i, quantile_num)).alias(f"_q{i}")
+        for i in range(quantile_num + 2)
+    ]
     out = d.groupBy(*gcols).agg(*aggs)
 
     cols = [*gcols, F.col("_n_out").alias("count")]
     if include_median:
         cols.append(
-            F.when(F.col("_n_out") % 2 == 1, F.col("_m_hi"))
-            .otherwise((F.col("_m_lo") + F.col("_m_hi")) / 2.0)
-            .alias("median")
+            median_pick(F.col("_n_out"), F.col("_m_lo"), F.col("_m_hi")).alias("median")
         )
     cols += [F.col(f"_q{i}").alias(f"q{i}") for i in range(quantile_num + 2)]
     return out.select(*cols)
@@ -185,12 +189,7 @@ def salted_cell_stats(
     m2 = s2 - s1 * s1 / nd
     var_samp = m2 / (nd - 1.0)
     var_pop = m2 / nd
-    if n1_rule == "zero":
-        var_s = F.when(n <= 1, F.lit(0.0)).otherwise(var_samp)
-    elif n1_rule == "nan":
-        var_s = F.when(n <= 1, F.lit(float("nan"))).otherwise(var_samp)
-    else:
-        var_s = var_samp
+    var_s = n1_rule_expr(var_samp, n, n1_rule)
 
     merged_vals = (
         F.sort_array(F.flatten(F.collect_list("_vals"))) if need_holistic else None
@@ -209,16 +208,6 @@ def salted_cell_stats(
     }
     if need_holistic:
         exprs["median"] = _median_expr(merged_vals, n)
-
-    out: list[Column] = []
-    for s in stats:
-        if s == "quantiles":
-            out.extend(
-                q.alias(f"q{i}")
-                for i, q in enumerate(_quantile_exprs(merged_vals, n, quantile_num))
-            )
-        elif s in exprs:
-            out.append(exprs[s].alias(s))
-        else:
-            raise ValueError(f"stat {s!r} not supported in salted mode")
-    return p1.groupBy(*[F.col(g) for g in group]).agg(*out)
+    return p1.groupBy(*[F.col(g) for g in group]).agg(
+        *stat_columns(exprs, stats, merged_vals, n, quantile_num)
+    )

@@ -86,24 +86,29 @@ def parse_point_spans(
         if missing:
             raise ValueError(f"unknown point fields: {sorted(missing)}")
     limit = -1 if fields is None else max(i for i, _, _ in want) + 2
-    out = spans.filter(F.col("kind") == "text").withColumn(
-        "_parts", F.split(F.col("text"), POINT_SEP, limit)
+    keep = [c for c in spans.columns if c not in ("text", "media_ref", "kind")]
+    parts = spans.filter(F.col("kind") == "text").select(
+        *keep, F.split(F.col("text"), POINT_SEP, limit).alias("_parts")
     )
-    for i, name, typ in want:
-        out = out.withColumn(name, F.element_at("_parts", i + 1).cast(typ))
-    return out.drop("text", "media_ref", "kind", "_parts")
+    return parts.select(
+        *keep,
+        *(F.element_at("_parts", i + 1).cast(typ).alias(name) for i, name, typ in want),
+    )
 
 
 def parse_media_spans(spans: DataFrame) -> DataFrame:
     """media spans -> (level, tile_x, tile_y) parsed from
     media_ref='tile/<level>/<tx>/<ty>' — the tile-assignment key."""
-    return (
-        spans.filter(F.col("kind") == "media")
-        .withColumn("_parts", F.split(F.col("media_ref"), "/"))
-        .withColumn("level", F.element_at("_parts", 2).cast("int"))
-        .withColumn("tile_x", F.element_at("_parts", 3).cast("long"))
-        .withColumn("tile_y", F.element_at("_parts", 4).cast("long"))
-        .drop("text", "kind", "_parts")
+    keep = [c for c in spans.columns if c not in ("text", "kind")]
+    # the split gets its own projection, as in parse_point_spans
+    parts = spans.filter(F.col("kind") == "media").select(
+        *keep, F.split(F.col("media_ref"), "/").alias("_parts")
+    )
+    return parts.select(
+        *keep,
+        F.element_at("_parts", 2).cast("int").alias("level"),
+        F.element_at("_parts", 3).cast("long").alias("tile_x"),
+        F.element_at("_parts", 4).cast("long").alias("tile_y"),
     )
 
 

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geotools_spark.functions.cells import cell_cols, window_offsets
 from geotools_spark.functions.geometry import (
     delaunay_edges,
     plane_fit,
@@ -39,15 +40,7 @@ from geotools_spark.functions.geometry import (
     tin_interpolate,
 )
 from geotools_spark.operators.partitioning import cpu_partition
-
-
-def _ring_offsets_expr(n: int) -> str:
-    items = ", ".join(
-        f"struct({dx}L as dx, {dy}L as dy)"
-        for dx in range(-n, n + 1)
-        for dy in range(-n, n + 1)
-    )
-    return f"array({items})"
+from geotools_spark.operators.raster import tiles_with_halo
 
 
 def normalize_heights(
@@ -98,13 +91,12 @@ def normalize_heights(
     aggregate (map-side combined, joined back on the same key the
     stage already shuffles on); cells under the threshold keep k=1
     and pay only that join."""
-    home_c = F.floor(F.col(x) / F.lit(res))
-    home_r = F.floor(F.col(y) / F.lit(res))
+    home_c, home_r = cell_cols(F.col(x), F.col(y), minx=0.0, miny=0.0, res=res)
     ground = points.filter(F.col(cls) == ground_cls).select(
         F.col(x).alias("_gx"),
         F.col(y).alias("_gy"),
         F.col(z).alias("_gz"),
-        F.explode(F.expr(_ring_offsets_expr(rings))).alias("off"),
+        F.explode(window_offsets(rings)).alias("off"),
         home_c.alias("_hc"),
         home_r.alias("_hr"),
     ).select(
@@ -114,29 +106,29 @@ def normalize_heights(
         "_gy",
         "_gz",
     )
-    nong = points.filter(F.col(cls) != ground_cls).withColumn(
-        "_cell_c", home_c
-    ).withColumn("_cell_r", home_r)
-
-    g2 = ground.withColumn("_is_g", F.lit(True))
-    out_cols = [f.name for f in nong.schema.fields if not f.name.startswith("_cell")]
+    nong = points.filter(F.col(cls) != ground_cls).select(
+        "*", home_c.alias("_cell_c"), home_r.alias("_cell_r")
+    )
+    fields = [f for f in points.schema.fields if not f.name.startswith("_cell")]
+    out_cols = [f.name for f in fields]
     p2 = nong.select(
-        "*",
+        *out_cols,
+        "_cell_c",
+        "_cell_r",
         F.lit(False).alias("_is_g"),
         F.lit(None).cast("double").alias("_gx"),
         F.lit(None).cast("double").alias("_gy"),
         F.lit(None).cast("double").alias("_gz"),
     )
-    g3 = g2.select(
-        *[F.lit(None).cast(dict(zip(nong.schema.names, [f.dataType for f in nong.schema.fields]))[c]).alias(c) for c in out_cols],
+    g3 = ground.select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields],
         "_cell_c",
         "_cell_r",
-        "_is_g",
+        F.lit(True).alias("_is_g"),
         "_gx",
         "_gy",
         "_gz",
     )
-    p2 = p2.select(*out_cols, "_cell_c", "_cell_r", "_is_g", "_gx", "_gy", "_gz")
 
     # Hot-cell split (VERDICT r04 #2): a PROBE job counts non-ground
     # points per cell and collects the cells exceeding split_target — a
@@ -523,24 +515,23 @@ def boundary_edges(
     p = points
     if classes:
         p = p.filter(F.col(cls).isin(list(classes)))
-    occ = p.select(
-        F.floor((F.col(x) - F.lit(minx)) / F.lit(res)).alias("c"),
-        F.floor((F.col(y) - F.lit(miny)) / F.lit(res)).alias("r"),
-    ).distinct()
+    c, r = cell_cols(F.col(x), F.col(y), minx=minx, miny=miny, res=res)
+    occ = p.select(c.alias("c"), r.alias("r")).distinct()
     nbr = occ.select(F.col("c").alias("nc"), F.col("r").alias("nr"))
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
-    offs_expr = "array({})".format(
-        ", ".join(f"struct({dx}L as dx, {dy}L as dy)" for dx, dy in offs)
-    )
     ex = occ.select(
-        "c", "r", F.explode(F.expr(offs_expr)).alias("off")
+        "c", "r", F.explode(window_offsets(1, center=False)).alias("off")
     ).select(
         "c", "r",
         (F.col("c") + F.col("off.dx")).alias("nc"),
         (F.col("r") + F.col("off.dy")).alias("nr"),
     ).join(nbr, ["nc", "nr"], "left_semi").groupBy("c", "r").agg(F.count(F.lit(1)).alias("nn"))
-    cand = occ.join(ex, ["c", "r"], "left").filter(
+    centers = occ.join(ex, ["c", "r"], "left").filter(
         F.coalesce(F.col("nn"), F.lit(0)) < 8
+    ).select(
+        F.col("c").alias("cell_col"),
+        F.col("r").alias("cell_row"),
+        (F.col("c") * res + F.lit(minx) + res / 2.0).alias("px"),
+        (F.col("r") * res + F.lit(miny) - res / 2.0).alias("py"),
     )
     out_schema = "x0 double, y0 double, x1 double, y1 double, length double"
 
@@ -564,10 +555,6 @@ def boundary_edges(
         )
 
     if not tiled:
-        centers = cand.select(
-            (F.col("c") * res + F.lit(minx) + res / 2.0).alias("px"),
-            (F.col("r") * res + F.lit(miny) - res / 2.0).alias("py"),
-        )
 
         def _edges(batches):
             parts = [pdf for pdf in batches if len(pdf)]
@@ -579,40 +566,18 @@ def boundary_edges(
             if out is not None:
                 yield out
 
-        return centers.coalesce(1).mapInPandas(_edges, out_schema)
+        return centers.select("px", "py").coalesce(1).mapInPandas(_edges, out_schema)
 
     halo = int(np.ceil(max_edge / res)) + 1
     t = tile_cells if tile_cells > halo else 2 * halo
-    rep = cand.select(
-        "c",
-        "r",
-        F.explode(
-            F.expr(
-                "array("
-                + ", ".join(
-                    f"struct({dx}L as dx, {dy}L as dy)"
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                )
-                + ")"
-            )
-        ).alias("off"),
-    )
-    tc = F.floor(F.col("c") / t) + F.col("off.dx")
-    tr = F.floor(F.col("r") / t) + F.col("off.dy")
-    keep = (
-        (F.col("c") >= tc * t - halo)
-        & (F.col("c") <= (tc + 1) * t + halo - 1)
-        & (F.col("r") >= tr * t - halo)
-        & (F.col("r") <= (tr + 1) * t + halo - 1)
-    )
-    shipped = rep.filter(keep).select(
-        tc.alias("tile_col"),
-        tr.alias("tile_row"),
-        (F.col("c") * res + F.lit(minx) + res / 2.0).alias("px"),
-        (F.col("r") * res + F.lit(miny) - res / 2.0).alias("py"),
+    shipped = tiles_with_halo(centers, tile=t, halo=halo, value="px", extra=("py",)).select(
+        "tile_col",
+        "tile_row",
+        F.col("value").alias("px"),
+        "py",
         (
-            (F.floor(F.col("c") / t) == tc) & (F.floor(F.col("r") / t) == tr)
+            (F.floor(F.col("cell_col") / t) == F.col("tile_col"))
+            & (F.floor(F.col("cell_row") / t) == F.col("tile_row"))
         ).alias("core"),
     )
 

@@ -5,8 +5,8 @@ raster zone x point class — the reference's pointzonalstats
 The zone raster participates as a long-form (cell_col, cell_row,
 zone_id) table; the point->zone lookup (cell calc at
 src/pointzonalstats.cpp:554-556) is a plain equi-join on the computed
-cell key — broadcast when the raster is small, sort-merge + AQE
-otherwise. Output schema mirrors the reference CSV:
+cell key, with the zone raster broadcast. Output schema mirrors the
+reference CSV:
 ``id, cls, count, sum, min, max, mean, median, variance, stddev,
 q0..q(n+1)`` with the ceil-index quantile rule.
 """
@@ -23,10 +23,10 @@ from geotools_spark.operators.gridstats import cell_stat_exprs
 ZONAL_STATS = ("count", "sum", "min", "max", "mean", "median", "variance", "stddev")
 
 
-def zone_lookup(points: DataFrame, zones: DataFrame, *, broadcast: bool = True) -> DataFrame:
-    """J3: attach zone_id by cell key."""
-    z = F.broadcast(zones) if broadcast else zones
-    return points.join(z, ["cell_col", "cell_row"], "inner")
+def zone_lookup(points: DataFrame, zones: DataFrame) -> DataFrame:
+    """J3: attach zone_id by cell key. The zone raster always carries a
+    broadcast hint: it is the small side of the lookup."""
+    return points.join(F.broadcast(zones), ["cell_col", "cell_row"], "inner")
 
 
 def zonal_stats(

@@ -9,7 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from geotools_spark.functions.cells import with_cell
-from geotools_spark.operators.gridstats import DEFAULT_STATS, cell_stats, densify
+from geotools_spark.operators.gridstats import (
+    DEFAULT_STATS,
+    cell_stat_exprs,
+    cell_stats,
+    densify,
+)
+from geotools_spark.operators.salting import salted_cell_stats
 
 # The 32-point fixture, verbatim from the reference's
 # tests/data/lasgrid_data.txt (FIXTURES.md §2).
@@ -119,3 +125,18 @@ def test_skew_kurtosis_composition(spark):
     kurt = ((v - mean) ** 4).sum() / n / s**4 - 3.0
     assert out["skew"] == pytest.approx(skew, rel=1e-9)
     assert out["kurtosis"] == pytest.approx(kurt, rel=1e-9)
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda cells: cell_stat_exprs("z", ("variance",), n1_rule="zeros"),
+        lambda cells: salted_cell_stats(cells, stats=("variance",), n1_rule="zeros"),
+    ],
+    ids=["cell_stat_exprs", "salted_cell_stats"],
+)
+def test_unknown_n1_rule_raises(spark, build):
+    # a typo used to fall through to the 'null' rule: NULL variances
+    cells = spark.createDataFrame([(0, 0, 1.0)], "cell_col long, cell_row long, z double")
+    with pytest.raises(ValueError, match="'zero', 'nan', 'null'"):
+        build(cells)

@@ -1,5 +1,4 @@
-"""Size-aware partitioning + driver-collect guards (VERDICT r02 #5/#7,
-ADVICE r02 partitioning.spread ordering)."""
+"""Size-aware partitioning + collect-size guards (VERDICT r02 #5/#7)."""
 
 import numpy as np
 import pytest
@@ -10,7 +9,6 @@ from geotools_spark.operators.partitioning import (
     default_parallelism,
     fanout_partitions,
     plan_size_bytes,
-    spread,
 )
 from geotools_spark.operators.sampling import collect_capped
 
@@ -39,13 +37,6 @@ def test_fanout_partitions_tracks_input_size(spark):
     assert n_big == par * 8  # ceiling: clamped, but > the small input
     assert n_big > n_small  # the VERDICT ask: two sizes, two answers
     assert plan_size_bytes(big) > plan_size_bytes(small)
-
-
-def test_spread_narrow_false_is_identity_before_context_touch(spark):
-    # ADVICE r02 (medium): narrow=False must return before any
-    # sparkContext access so the documented Spark Connect path holds
-    df = spark.range(10)
-    assert spread(df, narrow=False) is df
 
 
 def test_collect_capped_raises_before_materializing(spark):

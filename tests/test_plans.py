@@ -102,6 +102,26 @@ def test_zone_lookup_broadcasts_zones(spark):
     assert "Broadcast" in plan_of(df)
 
 
+def test_span_parsers_split_once(spark):
+    # each parser splits its payload in a projection of its own, so the
+    # optimized plan holds ONE split( however many fields read it (an
+    # inlined split is re-evaluated per field: 2x on the decode stage)
+    from geotools_spark.operators.spans import (
+        explode_spans, parse_media_spans, parse_point_spans)
+
+    docs = spark.createDataFrame(
+        [("d0", [("text", "1.0;2.0;3.0;4;1;1;2;0;5.0;1", None, 0),
+                 ("media", None, "tile/4/1/2", 1)])],
+        "doc_id string, spans array<struct<kind string, text string,"
+        " media_ref string, offset int>>",
+    )
+    spans = explode_spans(docs)
+    for df in (parse_point_spans(spans), parse_point_spans(spans, fields=("x", "y", "z")),
+               parse_media_spans(spans)):
+        logical = df._jdf.queryExecution().optimizedPlan().toString()
+        assert logical.count("split(") == 1, logical
+
+
 def test_cosine_topk_uses_take_ordered(spark):
     df = entry_mod.queries()["cosine_topk"](spark, SF)
     assert "TakeOrderedAndProject" in plan_of(df)
