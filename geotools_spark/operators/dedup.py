@@ -3,7 +3,8 @@
 Four tiers, all expressed Spark-first (no Python in the hot path except
 where noted):
 
-- exact: window row_number over the normalized text key — one shuffle.
+- exact: a lag window over xxhash64(text) partitions, verified on the
+  real key within each partition — one shuffle.
 - MinHash + LSH: word shingles -> P minhash signatures (xxhash64,
   JVM-side) -> banded bucket join -> candidate pairs -> EXACT shingle
   Jaccard verification. The classic near-dup pipeline (Broder '97) with
@@ -16,6 +17,12 @@ where noted):
   pairs (the verification kernel, also exposed standalone with a DuckDB
   SQL oracle).
 
+The set-similarity rule has one definition here: ``_jaccard_pairs``
+(|A∩B| / (|A|+|B|-|A∩B|) over materialized sizes) verifies both the
+MinHash candidates and the n-gram pairs. The embedding near-dup filter
+scores pairs with ``similarity.pair_cosine_expr``, the cosine of the
+batch ANN joins.
+
 Scale notes: every join here is an equi-join on a computed key (band
 hash / simhash band), so Catalyst plans hash joins and AQE handles the
 inevitable hot buckets (empty-ish shingle sets collide). Signatures are
@@ -27,6 +34,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 
@@ -69,11 +77,24 @@ def char_ngrams_expr(n: int, text_col: str = "text"):
     )
 
 
-def jaccard_expr(a, b):
-    """|a ∩ b| / |a ∪ b| on pre-distinct arrays, via
-    |a|+|b|-|a∩b| so Spark and the SQL oracle share the formula."""
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    return inter / (F.size(a) + F.size(b) - F.size(F.array_intersect(a, b))).cast("double")
+def _jaccard_pairs(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """(id_a, id_b, jaccard) of the distinct-element arrays ``a`` and
+    ``b``: |A∩B| / (|A|+|B|-|A∩B|), the formula the SQL oracles share.
+    The sizes are materialized in their own projection first, so
+    array_intersect runs once per pair (codegen does not CSE it)."""
+    sized = pairs.select(
+        "id_a",
+        "id_b",
+        F.size(a).alias("_sa"),
+        F.size(b).alias("_sb"),
+        F.size(F.array_intersect(a, b)).cast("double").alias("_si"),
+    )
+    si = F.col("_si")
+    return sized.select(
+        "id_a",
+        "id_b",
+        (si / (F.col("_sa") + F.col("_sb") - si).cast("double")).alias("jaccard"),
+    )
 
 
 def exact_dedup(docs: DataFrame, *, key: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -97,8 +118,7 @@ def exact_dedup(docs: DataFrame, *, key: str = "text", id_col: str = "doc_id") -
     first = F.lag(F.lit(1)).over(w).isNull()
     prev = F.lag(key).over(w)
     return (
-        docs.withColumn("_first", first)
-        .withColumn("_prev_key", prev)
+        docs.select("*", first.alias("_first"), prev.alias("_prev_key"))
         .filter(F.col("_first") | ~F.col("_prev_key").eqNullSafe(F.col(key)))
         .drop("_first", "_prev_key")
     )
@@ -129,9 +149,9 @@ def shingle_sets(
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
         )
     ))
-    return docs.withColumn("_toks", tokens_expr(text_col)).select(
-        id_col, sh.alias("shingles")
-    )
+    return docs.select(
+        id_col, text_col, tokens_expr(text_col).alias("_toks")
+    ).select(id_col, sh.alias("shingles"))
 
 
 def minhash_signatures(
@@ -170,8 +190,9 @@ def minhash_signatures(
     consts = [(2 * p * 40503 + 1, p * 9973 + 7) for p in range(num_perm)]
     a_arr = np.asarray([c[0] for c in consts], dtype=np.int64)
     b_arr = np.asarray([c[1] for c in consts], dtype=np.int64)
-    id_t = hashed.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_t}, mh array<bigint>"
+    out_schema = StructType(
+        [hashed.schema[id_col], StructField("mh", ArrayType(LongType()))]
+    )
 
     def _mh(batches):
         import pyarrow as pa
@@ -284,23 +305,8 @@ def minhash_lsh_pairs(
             "id_b",
         )
     )
-    # materialize |A∩B| once — jaccard_expr would evaluate
-    # array_intersect twice per candidate (codegen does not CSE it)
-    wi = cand.select(
-        "id_a",
-        "id_b",
-        F.size("sh_a").alias("_sa"),
-        F.size("sh_b").alias("_sb"),
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double").alias("_si"),
-    )
-    return (
-        wi.withColumn(
-            "jaccard",
-            F.col("_si")
-            / (F.col("_sa") + F.col("_sb") - F.col("_si")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _jaccard_pairs(cand, "sh_a", "sh_b").filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -327,8 +333,9 @@ def simhash(
         F.col(id_col),
         F.transform(tokens_expr(text_col), lambda t: F.xxhash64(t)).alias("_h"),
     ).filter(F.size("_h") > 0)
-    id_t = hashed.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_t}, simhash bigint"
+    out_schema = StructType(
+        [hashed.schema[id_col], StructField("simhash", LongType())]
+    )
 
     def _sh(batches):
         import pyarrow as pa
@@ -406,10 +413,8 @@ def simhash_pairs(
         .filter(~dup_before)
     )
     ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return (
-        cand.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
     )
 
 
@@ -430,19 +435,19 @@ def embedding_near_dup_pairs(
     brute-force scan is pinned in tests. One shuffle on bucket id;
     bucket sizes stay ~N/2^bits, so the quadratic term is local."""
     from geotools_spark.operators.similarity import (
-        _dot_cols_expr,
-        _norm2_expr,
         bucket_expr,
         hyperplanes,
+        norm_expr,
+        pair_cosine_expr,
+        vector_dim,
     )
 
-    first = embeddings.select(F.size(vec_col).alias("d")).first()
-    planes = hyperplanes(int(first.d), bits, seed)
+    planes = hyperplanes(vector_dim(embeddings, vec_col), bits, seed)
     b = embeddings.select(
         F.col(id_col),
         F.col(vec_col),
         bucket_expr(F.col(vec_col), planes).alias("_bkt"),
-        F.sqrt(_norm2_expr(F.col(vec_col))).alias("_nrm"),
+        norm_expr(F.col(vec_col)).alias("_nrm"),
     )
     lhs = b.select(
         F.col("_bkt"),
@@ -457,10 +462,10 @@ def embedding_near_dup_pairs(
         F.col("_nrm").alias("_nb"),
     )
     pairs = lhs.join(rhs, "_bkt").filter(F.col("id_a") < F.col("id_b"))
-    cos = _dot_cols_expr(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-    return pairs.select(
-        "id_a", "id_b", F.round(cos, 6).alias("cosine")
-    ).filter(F.col("cosine") >= threshold)
+    cos = pair_cosine_expr(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
+    return pairs.select("id_a", "id_b", cos.alias("cosine")).filter(
+        F.col("cosine") >= threshold
+    )
 
 
 def ngram_jaccard_pairs(
@@ -492,17 +497,8 @@ def ngram_jaccard_pairs(
     )
     b = g.select(F.col(id_col).alias("id_b"), F.col("_pk"), F.col("grams").alias("g_b"))
     pairs = a.join(b, "_pk").filter(F.col("id_a") < F.col("id_b"))
-    # materialize the intersection size once — the jaccard denominator
-    # reuses it (|A|+|B|-|A∩B|), and whole-stage codegen does not CSE
-    # two array_intersect calls over variable-length arrays
-    inter = F.size(F.array_intersect(F.col("g_a"), F.col("g_b"))).cast("double")
-    with_i = pairs.select("id_a", "id_b", F.size("g_a").alias("_sa"), F.size("g_b").alias("_sb"), inter.alias("_si"))
-    return with_i.select(
-        "id_a",
-        "id_b",
-        F.round(
-            F.col("_si") / (F.col("_sa") + F.col("_sb") - F.col("_si")).cast("double"), 6
-        ).alias("jaccard"),
+    return _jaccard_pairs(pairs, "g_a", "g_b").select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 
@@ -539,8 +535,6 @@ def duplicate_spans(
     representation-independent (same argument as ngram_jaccard's
     hashed grams); the DuckDB oracle groups the literal strings.
     """
-    from pyspark.sql.window import Window
-
     w = int(window)
     toks = tokens_expr(text_col)
     # guard short docs explicitly: sequence(1, 0) would count DOWN
@@ -558,7 +552,7 @@ def duplicate_spans(
         F.count(F.lit(1)).alias("_c")
     )
     nd = F.count(F.lit(1)).over(Window.partitionBy("whash"))
-    flagged = per_doc_hash.withColumn("_nd", nd)
+    flagged = per_doc_hash.select("*", nd.alias("_nd"))
     dup_c = F.sum(F.when(F.col("_nd") >= 2, F.col("_c")).otherwise(F.lit(0)))
     return flagged.groupBy(id_col).agg(
         F.sum("_c").alias("n_windows"),

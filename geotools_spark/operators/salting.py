@@ -99,8 +99,8 @@ def exact_quantiles_by_value(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     wall = Window.partitionBy(*group)
-    d = cnts.withColumn("_cum", F.sum("_c").over(wcum)).withColumn(
-        "_n", F.sum("_c").over(wall)
+    d = cnts.select(
+        "*", F.sum("_c").over(wcum).alias("_cum"), F.sum("_c").over(wall).alias("_n")
     )
     cum, n = F.col("_cum"), F.col("_n")
 
@@ -177,7 +177,7 @@ def salted_cell_stats(
     if need_holistic:
         p1_aggs.append(F.sort_array(F.collect_list(v)).alias("_vals"))
 
-    p1 = points.withColumn("_salt", salt).groupBy(
+    p1 = points.select("*", salt.alias("_salt")).groupBy(
         *[F.col(g) for g in group], F.col("_salt")
     ).agg(*p1_aggs)
 

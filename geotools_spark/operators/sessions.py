@@ -39,8 +39,8 @@ def sessionize(
     wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     prev = F.lag(us).over(w)
     new_flag = F.when(prev.isNull() | ((us - prev) > gap_us), 1).otherwise(0)
-    return events.withColumn("_us", us).withColumn(
-        "session_id", F.sum(new_flag).over(wsum) - 1
+    return events.select(
+        "*", us.alias("_us"), (F.sum(new_flag).over(wsum) - 1).alias("session_id")
     )
 
 
@@ -70,12 +70,10 @@ def merge_intervals(
     new_flag = F.when(
         prev_max_end.isNull() | (F.col(start) > prev_max_end + tolerance_us), 1
     ).otherwise(0)
-    grouped = intervals.withColumn(
-        "_grp",
-        F.sum(new_flag).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - 1,
-    )
-    return grouped.groupBy(key, "_grp").agg(
+    grp = F.sum(new_flag).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    grouped = intervals.select("*", (grp - 1).alias("_grp"))
+    return grouped.groupBy(key, F.col("_grp").alias("interval_id")).agg(
         F.min(start).alias("m_start"),
         F.max(end).alias("m_end"),
         F.count("*").alias("n_merged"),
-    ).withColumnRenamed("_grp", "interval_id")
+    )

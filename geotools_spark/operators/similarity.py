@@ -1,34 +1,58 @@
 """Similarity search over embedding columns (array<float>).
 
+Operators:
+
 - ``cosine_topk``: brute-force cosine against one query vector as pure
   JVM fold expressions (zip_with + aggregate) — the exactness baseline
-  and the verification oracle for the ANN path.
-- ``lsh_ann_topk``: random-hyperplane LSH (sign-bit bucketing) — the
-  scale path. Buckets turn the similarity scan into an equi-join; the
-  exact cosine runs only inside candidate buckets. Multi-probe (flip
-  each single bit) keeps recall high without widening the fan-out
-  beyond bits+1 probes per vector.
+  and the re-rank stage of every ANN path below.
+- ``lsh_ann_topk`` / ``lsh_ann_join``: random-hyperplane LSH (sign-bit
+  buckets with multi-probe) for one query vector / a whole query set.
+  Buckets turn the similarity scan into an equi-join; the exact cosine
+  runs only inside candidate buckets.
+- ``ivf_ann_topk``, ``build_ivf_index``, ``ivf_probe_scan``,
+  ``ivf_ann_topk_indexed``: IVF — a coarse quantizer splits the corpus
+  into cells and a query scans only its ``nprobe`` nearest cells (in
+  memory, or from a cell-partitioned table that prunes at listing).
+- ``pq_ann_topk``, ``ivf_pq_ann_topk``, ``ivf_pq_ann_join``: product
+  quantization — ADC scores from m one-byte codes, then the exact
+  cosine re-ranks the ``rerank * k`` best (optionally behind the IVF
+  probe filter, for one query or a query set).
 
-At 100 TB the brute-force path is a full scan per query (fine for one
-query vector, unacceptable for query sets); the LSH path's bucket join
-shuffles each side once on bucket id.
+This module is the single home of the vector rules that the Catalyst
+expressions, the NumPy Arrow kernels and the DuckDB oracle must all
+evaluate identically for the ANN hash gates to hold:
+
+- squared distance is the LEFT-TO-RIGHT fold over the dimension axis
+  (``_sq_dist_exprs`` in Catalyst, ``_np_left_fold_sq`` in NumPy);
+- argmin is first-min: ties go to the lowest centroid index;
+- the quantizer is the affine-mod sample (``sample_centroids``): IVF
+  centres are its first ``nlist`` rows and PQ codebooks the sub-slices
+  of its first ``ksub`` rows, taken from ONE collect (``_quantizers``);
+- a pair's score is ``pair_cosine_expr`` (rounded to 6 dp) and each
+  query keeps its top k by (cosine desc, id asc) (``_top_per_query``).
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
+QUANT_SEED = 1299709
 
-def _dot_expr(col, qvec: list[float]):
-    arr = F.array(*[F.lit(float(v)) for v in qvec])
-    return F.aggregate(
-        F.zip_with(col, arr, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+
+def _lit_array(v):
+    return F.array(*[F.lit(float(x)) for x in v])
 
 
 def _dot_cols_expr(a, b):
@@ -40,9 +64,46 @@ def _dot_cols_expr(a, b):
     )
 
 
-def _norm2_expr(col):
-    return F.aggregate(
+def norm_expr(col):
+    """Euclidean norm of an array column as a JVM fold."""
+    return F.sqrt(F.aggregate(
         col, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
+    ))
+
+
+def pair_cosine_expr(a, b, norm_a, norm_b):
+    """Cosine of two array columns rounded to 6 dp, given their norms
+    (``norm_expr`` or a materialized copy) — the one pair score of the
+    batch ANN joins and the embedding near-dup filter."""
+    return F.round(_dot_cols_expr(a, b) / (norm_a * norm_b), 6)
+
+
+def vector_dim(df: DataFrame, vec_col: str) -> int:
+    """Length of the first vector of ``vec_col`` (one ``first()`` job);
+    0 for an empty frame, which has nothing to bucket."""
+    row = df.select(F.size(vec_col).alias("d")).first()
+    return 0 if row is None else int(row.d)
+
+
+def _top_per_query(df: DataFrame, q_id_col: str, order, k: int, rank_col: str):
+    """Rows ranked 1..k per query by ``order`` — the window partitions by
+    query id, so no single-partition stage."""
+    w = Window.partitionBy(q_id_col).orderBy(*order)
+    return df.select("*", F.row_number().over(w).alias(rank_col)).filter(
+        F.col(rank_col) <= int(k)
+    )
+
+
+def _pair_rank_topk(pairs, *, k, q_id_col, q_vec_col, id_col, vec_col):
+    """Exact pair cosine + per-query top-k: the tail of both batch joins."""
+    q, v = F.col(q_vec_col), F.col(vec_col)
+    scored = pairs.select(
+        q_id_col,
+        id_col,
+        pair_cosine_expr(q, v, norm_expr(q), norm_expr(v)).alias("cosine"),
+    )
+    return _top_per_query(
+        scored, q_id_col, [F.desc("cosine"), F.col(id_col)], k, "rank"
     )
 
 
@@ -57,8 +118,8 @@ def cosine_topk(
     """Exact top-k by cosine similarity to ``query_vec``; deterministic
     (rounded cosine desc, id asc) ordering."""
     qnorm = float(np.sqrt(np.sum(np.asarray(query_vec, dtype=np.float64) ** 2)))
-    cos = _dot_expr(F.col(vec_col), query_vec) / (
-        F.sqrt(_norm2_expr(F.col(vec_col))) * F.lit(qnorm)
+    cos = _dot_cols_expr(F.col(vec_col), _lit_array(query_vec)) / (
+        norm_expr(F.col(vec_col)) * F.lit(qnorm)
     )
     scored = embeddings.select(id_col, F.round(cos, 6).alias("cosine"))
     # orderBy+limit compiles to TakeOrderedAndProject: each partition keeps
@@ -67,7 +128,7 @@ def cosine_topk(
     # over exactly k rows, so its single partition is intentional and tiny.
     topk = scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
     w = Window.orderBy(F.desc("cosine"), F.col(id_col))
-    return topk.withColumn("rank", F.row_number().over(w))
+    return topk.select("*", F.row_number().over(w).alias("rank"))
 
 
 def hyperplanes(dim: int, bits: int, seed: int = 7) -> np.ndarray:
@@ -81,13 +142,10 @@ def bucket_expr(vec_col, planes: np.ndarray):
     as JVM fold expressions (one per plane)."""
     bucket = F.lit(0).cast("long")
     for b in range(planes.shape[0]):
-        dot = _dot_expr(vec_col, planes[b].tolist())
+        dot = _dot_cols_expr(vec_col, _lit_array(planes[b]))
         bit = F.when(dot > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
         bucket = bucket.bitwiseOR(F.shiftleft(bit, b))
     return bucket
-
-
-QUANT_SEED = 1299709
 
 
 # ---------------------------------------------------------------- Arrow
@@ -132,10 +190,11 @@ def _np_vectors(col) -> np.ndarray:
 def _np_left_fold_sq(X: np.ndarray, c: np.ndarray) -> np.ndarray:
     """Per-row squared distance as the sequential dim-axis fold:
     ((0 + d0^2) + d1^2) + ... — the exact operation order of the
-    F.aggregate expression and the oracle's list_sum comprehension."""
+    F.aggregate expression and the oracle's list_sum comprehension.
+    ``c`` is one vector (broadcast to every row) or one per row."""
     acc = np.zeros(X.shape[0], dtype=np.float64)
     for j in range(X.shape[1]):
-        d = X[:, j] - c[j]
+        d = X[:, j] - c[..., j]
         acc = acc + d * d
     return acc
 
@@ -148,36 +207,17 @@ def _np_assign(V: np.ndarray, centers: np.ndarray) -> np.ndarray:
 
 def _np_codes(V: np.ndarray, books: list[np.ndarray]) -> np.ndarray:
     """(n, m) int32 PQ codes — per-subspace first-min argmin."""
-    m = len(books)
     sub = books[0].shape[1]
-    cols = []
-    for s in range(m):
-        Vs = V[:, s * sub : (s + 1) * sub]
-        D = np.column_stack([_np_left_fold_sq(Vs, c) for c in books[s]])
-        cols.append(D.argmin(axis=1).astype(np.int32))
-    return np.column_stack(cols)
+    return np.column_stack([
+        _np_assign(V[:, s * sub : (s + 1) * sub], book)
+        for s, book in enumerate(books)
+    ])
 
 
 def _np_adc_codes(codes: np.ndarray, tables: np.ndarray) -> np.ndarray:
-    """ADC = t0[c0] + t1[c1] + ... (left-assoc, no 0-seed — matches the
-    expression chain ``adc = term if adc is None else adc + term``)."""
-    acc = tables[0][codes[:, 0]]
-    for s in range(1, tables.shape[0]):
-        acc = acc + tables[s][codes[:, s]]
-    return acc
-
-
-def _seq_sq_dist(a, b) -> float:
-    """Squared euclidean distance as a LEFT-TO-RIGHT fold in pure
-    Python doubles — the same IEEE operation chain the Spark
-    ``assign_cell_expr`` aggregate and the DuckDB ``list_sum``
-    comprehension evaluate, so all three engines rank centroids
-    identically (no vectorized-reorder drift)."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        d = float(x) - float(y)
-        acc = acc + d * d
-    return acc
+    """ADC = t0[c0] + t1[c1] + ... (left-assoc, no 0-seed — the order
+    the oracle's ADC sum evaluates)."""
+    return reduce(np.add, [tables[s][codes[:, s]] for s in range(tables.shape[0])])
 
 
 def sample_centroids(
@@ -193,8 +233,7 @@ def sample_centroids(
     learned state, so centroid choice, cell assignment, and probe
     ranking all replay exactly in ANSI SQL (the ann_ivf oracle). A
     coarse quantizer governs recall through nprobe, not centroid
-    optimality (the recall tests pin that); KMeans refinement stays
-    available via ``method='kmeans'`` where SQL parity is not needed."""
+    optimality (the recall tests pin that)."""
     rows = (
         embeddings.select(
             F.col(id_col).alias("_id"),
@@ -210,23 +249,74 @@ def sample_centroids(
     return [[float(x) for x in r._v] for r in rows]
 
 
-def assign_cell_expr(vec_col: str, centers: list[list[float]]):
-    """JVM-side cell assignment: argmin over per-centroid squared
-    distances (first-min tie-break = lowest centroid index), each a
-    sequential fold so the oracle's left-associated sum matches
-    bit-for-bit. Whole-stage-codegen — no ML runtime, no Python."""
+def _quantizers(embeddings, *, nlist, m, ksub, id_col, vec_col, seed):
+    """(IVF centres, PQ codebooks) from ONE sample collect: the
+    affine-mod order is fixed, so the centres are its first ``nlist``
+    rows and the m codebooks the sub-slices of its first ``ksub``
+    rows. Codebooks are an index-time artifact of the full corpus,
+    never of a per-query probe subset."""
+    full = sample_centroids(
+        embeddings, nlist=max(nlist, ksub), id_col=id_col, vec_col=vec_col,
+        seed=seed,
+    )
+    dim = len(full[0])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    sub = dim // m
+    books = [[c[s * sub : (s + 1) * sub] for c in full[:ksub]] for s in range(m)]
+    return full[:nlist], books
+
+
+def _sq_dist_exprs(vec_col: str, centers: list[list[float]]):
+    """Per-centroid squared distances of ``vec_col``, in centroid order:
+    each the left-to-right fold that ``_np_left_fold_sq`` and the
+    oracle's ``list_sum`` also evaluate, so the three engines rank
+    centroids identically."""
     vc = F.col(vec_col).cast("array<double>")
-    dists = []
-    for c in centers:
-        carr = F.array(*[F.lit(float(v)) for v in c])
-        sq = F.aggregate(
-            F.zip_with(vc, carr, lambda a, b: (a - b) * (a - b)),
+    return [
+        F.aggregate(
+            F.zip_with(vc, _lit_array(c), lambda a, b: (a - b) * (a - b)),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-        dists.append(sq)
-    darr = F.array(*dists)
+        for c in centers
+    ]
+
+
+def assign_cell_expr(vec_col: str, centers: list[list[float]]):
+    """JVM-side cell assignment: argmin over per-centroid squared
+    distances (first-min tie-break = lowest centroid index).
+    Whole-stage-codegen — no Python."""
+    darr = F.array(*_sq_dist_exprs(vec_col, centers))
     return (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
+
+
+def probe_cells_expr(vec_col: str, centers: list[list[float]], nprobe: int):
+    """Per-ROW nprobe closest centroid indices as an array column —
+    the query-set analogue of the driver-side ``_probe_cells``. The
+    (distance, index) structs sort lexicographically, giving the same
+    first-min tie-break."""
+    pairs = F.array(*[
+        F.struct(d.alias("d"), F.lit(i).cast("int").alias("i"))
+        for i, d in enumerate(_sq_dist_exprs(vec_col, centers))
+    ])
+    return F.slice(
+        F.transform(F.array_sort(pairs), lambda s: s.getField("i")),
+        1,
+        nprobe,
+    )
+
+
+def _probe_cells(
+    centers: list[list[float]], query_vec: list[float], nprobe: int
+) -> list[int]:
+    """Driver-side nprobe nearest centroid indices, (distance, index)
+    ascending."""
+    d = _np_left_fold_sq(
+        np.asarray(centers, dtype=np.float64),
+        np.asarray(query_vec, dtype=np.float64),
+    )
+    return np.argsort(d, kind="stable")[:nprobe].tolist()
 
 
 def probe_masks(bits: int, probe_flips: int) -> list[int]:
@@ -245,11 +335,15 @@ def probe_masks(bits: int, probe_flips: int) -> list[int]:
     return masks
 
 
-def _probe_cells(
-    centers: list[list[float]], query_vec: list[float], nprobe: int
-) -> list[int]:
-    dists = [_seq_sq_dist(c, query_vec) for c in centers]
-    return sorted(range(len(centers)), key=lambda i: (dists[i], i))[:nprobe]
+def _assign_cells(embeddings, *, nlist, id_col, vec_col, seed, cell_col):
+    """(centres, (id, vec, cell)): the sample quantizer and the cell
+    assignment of every vector."""
+    centers = sample_centroids(
+        embeddings, nlist=nlist, id_col=id_col, vec_col=vec_col, seed=seed
+    )
+    return centers, embeddings.select(
+        id_col, vec_col, assign_cell_expr(vec_col, centers).alias(cell_col)
+    )
 
 
 def ivf_ann_topk(
@@ -261,45 +355,19 @@ def ivf_ann_topk(
     nprobe: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int | None = None,
-    max_iter: int = 8,
-    method: str = "sample",
+    seed: int = QUANT_SEED,
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: a coarse quantizer partitions vectors
-    into nlist cells; queries scan only the nprobe closest cells. The
-    default quantizer is the deterministic ``sample_centroids`` (SQL-
-    replayable — the driver's ann_ivf hash gate); ``method='kmeans'``
-    fits pyspark.ml KMeans instead (low ``max_iter``: a coarse
-    quantizer needs balanced partitions, not converged centroids —
-    recall is governed by nprobe, pinned by the recall-vs-brute
-    tests). At serving time the candidate scan is
+    """IVF (inverted-file) ANN: the deterministic ``sample_centroids``
+    quantizer (SQL-replayable — the ann_ivf oracle's hash check)
+    partitions vectors into nlist cells; queries scan only the nprobe
+    closest cells. At serving time the candidate scan is
     ``filter(cell IN probes)`` — partition-prunable when the table is
-    written bucketed by cell id. Exact cosine runs on candidates only.
+    written by ``build_ivf_index``. Exact cosine runs on candidates only.
     """
-    if method == "sample":
-        centers = sample_centroids(
-            embeddings, nlist=nlist, id_col=id_col, vec_col=vec_col,
-            **({} if seed is None else {"seed": seed}),
-        )
-        assigned = embeddings.select(id_col, vec_col).withColumn(
-            "_cell", assign_cell_expr(vec_col, centers)
-        )
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        va = embeddings.select(
-            F.col(id_col),
-            F.col(vec_col),
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias("_feat"),
-        )
-        km = KMeans(
-            k=nlist, seed=7 if seed is None else seed, maxIter=int(max_iter),
-            featuresCol="_feat", predictionCol="_cell",
-        )
-        model = km.fit(va)
-        assigned = model.transform(va).drop("_feat")
-        centers = [[float(v) for v in c] for c in model.clusterCenters()]
+    centers, assigned = _assign_cells(
+        embeddings, nlist=nlist, id_col=id_col, vec_col=vec_col, seed=seed,
+        cell_col="_cell",
+    )
     probes = _probe_cells(centers, query_vec, nprobe)
     cand = assigned.filter(F.col("_cell").isin(probes)).drop("_cell")
     return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
@@ -312,10 +380,8 @@ def build_ivf_index(
     nlist: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int | None = None,
-    max_iter: int = 8,
+    seed: int = QUANT_SEED,
     run_id: str = "ivf-build",
-    method: str = "sample",
 ) -> str:
     """Materialize the IVF index as a CELL-PARTITIONED table: vectors
     are written ``partitionBy(cell)`` through the lineage/checkpoint
@@ -326,8 +392,7 @@ def build_ivf_index(
     the corpus is never read (PartitionFilters, pinned by
     test_plans.py) — the Spark analogue of the reference's R-tree
     bbox query (include/sqlite.hpp:182). Build is one assignment pass
-    + one partitioned write (plus a KMeans fit under
-    ``method='kmeans'``), all distributed; rebuild is resumable
+    + one partitioned write, all distributed; rebuild is resumable
     (checkpointed_write skips committed cells)."""
     import json
     import os
@@ -338,30 +403,10 @@ def build_ivf_index(
     # the manifest (VERDICT r04 #9); fail before the expensive build
     path = lineage.require_local_path(path, "build_ivf_index")
 
-    if method == "sample":
-        centers = sample_centroids(
-            embeddings, nlist=nlist, id_col=id_col, vec_col=vec_col,
-            **({} if seed is None else {"seed": seed}),
-        )
-        assigned = embeddings.select(id_col, vec_col).withColumn(
-            "cell", assign_cell_expr(vec_col, centers)
-        )
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        va = embeddings.select(
-            F.col(id_col),
-            F.col(vec_col),
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias("_feat"),
-        )
-        km = KMeans(
-            k=nlist, seed=7 if seed is None else seed, maxIter=int(max_iter),
-            featuresCol="_feat", predictionCol="cell",
-        )
-        model = km.fit(va)
-        assigned = model.transform(va).drop("_feat")
-        centers = [[float(v) for v in c] for c in model.clusterCenters()]
+    centers, assigned = _assign_cells(
+        embeddings, nlist=nlist, id_col=id_col, vec_col=vec_col, seed=seed,
+        cell_col="cell",
+    )
     lineage.checkpointed_write(assigned, path, part_col="cell", run_id=run_id)
     tmp = os.path.join(path, "_centroids.json.tmp")
     with open(tmp, "w") as fh:
@@ -427,197 +472,14 @@ def lsh_ann_topk(
     all buckets within ``probe_flips`` bit flips (multi-probe LSH —
     recall/candidate-count dial; bits sizes the bucket count to the
     corpus: ~log2(N / desired_candidates_per_bucket))."""
-    dim = len(query_vec)
-    planes = hyperplanes(dim, bits, seed)
+    planes = hyperplanes(len(query_vec), bits, seed)
     q = np.asarray(query_vec, dtype=np.float64)
     qbucket = 0
     for b in range(bits):
         if float(planes[b] @ q) > 0:
             qbucket |= 1 << b
     probes = sorted({qbucket ^ m for m in probe_masks(bits, probe_flips)})
-    bucketed = embeddings.withColumn("_bucket", bucket_expr(F.col(vec_col), planes))
-    cand = bucketed.filter(F.col("_bucket").isin(probes))
-    return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
-
-
-# ------------------------------------------------ product quantization
-
-def pq_codebooks(
-    embeddings: DataFrame,
-    *,
-    m: int = 8,
-    ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = QUANT_SEED,
-) -> list[list[list[float]]]:
-    """m per-subspace codebooks of ksub sub-centroids — the sub-slices
-    of ksub affine-mod-sampled embeddings (same deterministic
-    quantizer as IVF, so codebook choice, encoding, and ADC scoring
-    all replay exactly in ANSI SQL). PQ is the 100 TB memory answer:
-    a 64-float embedding (256 B) stores as m one-byte codes (8 B),
-    and query scoring reads only the codes column."""
-    full = sample_centroids(
-        embeddings, nlist=ksub, id_col=id_col, vec_col=vec_col, seed=seed
-    )
-    dim = len(full[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    return [[c[s * sub : (s + 1) * sub] for c in full] for s in range(m)]
-
-
-def pq_adc_tables(
-    codebooks: list[list[list[float]]], query_vec: list[float]
-) -> list[list[float]]:
-    """Asymmetric-distance tables: squared distance from each query
-    sub-vector to each sub-centroid, as left-folded Python doubles
-    (the literal values both the Spark plan and the SQL oracle embed,
-    so the three engines agree bit-for-bit)."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    return [
-        [
-            _seq_sq_dist(query_vec[s * sub : (s + 1) * sub], c)
-            for c in codebooks[s]
-        ]
-        for s in range(m)
-    ]
-
-
-def pq_ann_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    *,
-    k: int = 50,
-    m: int = 8,
-    ksub: int = 16,
-    rerank: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-) -> DataFrame:
-    """PQ ANN with exact re-rank: encode the corpus to m-byte codes,
-    score candidates by ADC table lookups (a per-row sum of m array
-    element reads — no vector math on the scan side), keep the
-    ``rerank * k`` best by approximate distance, then run the exact
-    cosine top-k on the candidates only.
-
-    At scale the codes column is what the probe scan reads (8 B/vector
-    vs 256 B), and the ADC sum is whole-stage-codegen over literals —
-    the classic IVF-PQ serving shape with the IVF stage available via
-    ``ivf_ann_topk``'s cell filter when both are combined."""
-    books = codebooks if codebooks is not None else pq_codebooks(
-        embeddings, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col,
-        **({} if seed is None else {"seed": seed}),
-    )
-    tables = np.asarray(pq_adc_tables(books, query_vec), dtype=np.float64)
-    B = [np.asarray(book, dtype=np.float64) for book in books]
-    in_df = embeddings.select(id_col, vec_col)
-    vec_t = dict(zip(in_df.schema.names, in_df.schema.fields))[vec_col]
-    out_schema = (
-        f"{id_col} {in_df.schema[id_col].dataType.simpleString()}, "
-        f"{vec_col} {vec_t.dataType.simpleString()}, _adc double"
-    )
-
-    def _enc(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            V = _np_vectors(b.column(1))
-            adc = _np_adc_codes(_np_codes(V, B), tables)
-            yield b.append_column("_adc", pa.array(adc, type=pa.float64()))
-
-    enc = in_df.mapInArrow(_enc, out_schema)
-    cand = (
-        enc.select(id_col, vec_col, F.round("_adc", 6).alias("_adc"))
-        .orderBy("_adc", id_col)
-        .limit(int(rerank * k))
-        .drop("_adc")
-    )
-    return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
-
-
-def ivf_pq_ann_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    *,
-    k: int = 50,
-    nlist: int = 16,
-    nprobe: int = 3,
-    m: int = 8,
-    ksub: int = 16,
-    rerank: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int | None = None,
-) -> DataFrame:
-    """IVF-PQ — the standard billion-vector serving shape: the IVF
-    coarse quantizer prunes the scan to ``nprobe`` of ``nlist`` cells
-    (partition-prunable when the table is written bucketed by cell,
-    see ``build_ivf_index``), PQ ADC scores the survivors from their
-    m one-byte codes, and the exact cosine re-ranks the ``rerank*k``
-    best. Both quantizers are the deterministic sample kind, so the
-    whole pipeline replays in SQL."""
-    # ONE sample job covers both quantizers: the affine-mod order is
-    # identical, so the IVF centers are exactly the first nlist rows
-    # of the PQ sample (two separate collects would rescan the corpus)
-    nsamp = max(nlist, ksub)
-    full = sample_centroids(
-        embeddings, nlist=nsamp, id_col=id_col, vec_col=vec_col,
-        **({} if seed is None else {"seed": seed}),
-    )
-    centers = full[:nlist]
-    probes = _probe_cells(centers, query_vec, nprobe)
-    # PQ codebooks are an INDEX-TIME artifact: sampled from the full
-    # corpus, not from the per-query probe subset
-    dim = len(full[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    books = [
-        [c[s_ * sub : (s_ + 1) * sub] for c in full[:ksub]]
-        for s_ in range(m)
-    ]
-    # ONE Arrow pass does coarse assignment, probe filter, PQ encode
-    # and ADC scoring (see the _np_* kernel notes: bit-identical to the
-    # expression path, without its ~10^5-char plan)
-    tables = np.asarray(pq_adc_tables(books, query_vec), dtype=np.float64)
-    B = [np.asarray(book, dtype=np.float64) for book in books]
-    C = np.asarray(centers, dtype=np.float64)
-    probe_set = np.asarray(sorted(int(p) for p in probes), dtype=np.int64)
-    in_df = embeddings.select(id_col, vec_col)
-    out_schema = (
-        f"{id_col} {in_df.schema[id_col].dataType.simpleString()}, "
-        f"{vec_col} {in_df.schema[vec_col].dataType.simpleString()}, "
-        "_adc double"
-    )
-
-    def _enc(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            V = _np_vectors(b.column(1))
-            keep = np.flatnonzero(np.isin(_np_assign(V, C), probe_set))
-            if len(keep) == 0:
-                continue
-            adc = _np_adc_codes(_np_codes(V[keep], B), tables)
-            yield b.take(pa.array(keep)).append_column(
-                "_adc", pa.array(adc, type=pa.float64())
-            )
-
-    enc = in_df.mapInArrow(_enc, out_schema)
-    cand = (
-        enc.select(id_col, vec_col, F.round("_adc", 6).alias("_adc"))
-        .orderBy("_adc", id_col)
-        .limit(int(rerank * k))
-        .drop("_adc")
-    )
+    cand = embeddings.filter(bucket_expr(F.col(vec_col), planes).isin(probes))
     return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
@@ -628,7 +490,6 @@ def lsh_ann_join(
     k: int = 10,
     bits: int = 8,
     probe_flips: int = 2,
-    dim: int = 64,
     q_id_col: str = "query_id",
     q_vec_col: str = "query_vec",
     id_col: str = "vec_id",
@@ -648,61 +509,172 @@ def lsh_ann_join(
     output. The window partitions by query id — no single-partition
     stage anywhere. Equivalent by construction to pairing every
     (query, vector) with hamming(buckets) <= probe_flips, which is
-    what the DuckDB oracle replays."""
-    planes = hyperplanes(dim, bits, seed)
+    what the DuckDB oracle replays. The planes take their dimension
+    from the first query vector."""
+    planes = hyperplanes(vector_dim(queries, q_vec_col), bits, seed)
     masks = probe_masks(bits, probe_flips)
-    emb_b = embeddings.select(id_col, vec_col).withColumn(
-        "_bucket", bucket_expr(F.col(vec_col), planes)
+    emb_b = embeddings.select(
+        id_col, vec_col, bucket_expr(F.col(vec_col), planes).alias("_bucket")
     )
-    q_exp = (
-        queries.select(q_id_col, q_vec_col)
-        .withColumn("_qb", bucket_expr(F.col(q_vec_col), planes))
-        .withColumn(
-            "_bucket",
-            F.explode(
-                F.array(
-                    *[F.col("_qb").bitwiseXOR(F.lit(int(m))) for m in masks]
-                )
-            ),
-        )
-        .drop("_qb")
+    # the query bucket stays in its own projection: inlined into the
+    # explode array it would be re-folded once per mask
+    q_exp = queries.select(
+        q_id_col, q_vec_col, bucket_expr(F.col(q_vec_col), planes).alias("_qb")
+    ).select(
+        q_id_col,
+        q_vec_col,
+        F.explode(
+            F.array(*[F.col("_qb").bitwiseXOR(F.lit(int(m))) for m in masks])
+        ).alias("_bucket"),
     )
-    j = q_exp.join(emb_b, "_bucket").drop("_bucket")
-    cos = _dot_cols_expr(F.col(q_vec_col), F.col(vec_col)) / (
-        F.sqrt(_norm2_expr(F.col(vec_col)))
-        * F.sqrt(_norm2_expr(F.col(q_vec_col)))
+    return _pair_rank_topk(
+        q_exp.join(emb_b, "_bucket"), k=k, q_id_col=q_id_col,
+        q_vec_col=q_vec_col, id_col=id_col, vec_col=vec_col,
     )
-    scored = j.select(q_id_col, id_col, F.round(cos, 6).alias("cosine"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return scored.withColumn(
-        "rank", F.row_number().over(w)
-    ).filter(F.col("rank") <= k)
 
 
-def probe_cells_expr(vec_col: str, centers: list[list[float]], nprobe: int):
-    """Per-ROW nprobe closest centroid indices as an array column —
-    the query-set analogue of the driver-side ``_probe_cells``. The
-    (distance, index) structs sort lexicographically, giving the same
-    first-min tie-break."""
-    vc = F.col(vec_col).cast("array<double>")
-    dists = []
-    for c in centers:
-        carr = F.array(*[F.lit(float(v)) for v in c])
-        dists.append(
-            F.aggregate(
-                F.zip_with(vc, carr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    pairs = F.array(*[
-        F.struct(d.alias("d"), F.lit(i).cast("int").alias("i"))
-        for i, d in enumerate(dists)
-    ])
-    return F.slice(
-        F.transform(F.array_sort(pairs), lambda s: s.getField("i")),
-        1,
-        nprobe,
+# ------------------------------------------------ product quantization
+
+def pq_codebooks(
+    embeddings: DataFrame,
+    *,
+    m: int = 8,
+    ksub: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = QUANT_SEED,
+) -> list[list[list[float]]]:
+    """m per-subspace codebooks of ksub sub-centroids — the sub-slices
+    of ksub affine-mod-sampled embeddings (same deterministic
+    quantizer as IVF, so codebook choice, encoding, and ADC scoring
+    all replay exactly in ANSI SQL). PQ is the 100 TB memory answer:
+    a 64-float embedding (256 B) stores as m one-byte codes (8 B),
+    and query scoring reads only the codes column."""
+    return _quantizers(
+        embeddings, nlist=0, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col,
+        seed=seed,
+    )[1]
+
+
+def pq_adc_tables(
+    codebooks: list[list[list[float]]], query_vec: list[float]
+) -> list[list[float]]:
+    """Asymmetric-distance tables: squared distance from each query
+    sub-vector to each sub-centroid as the left fold (the values both
+    the Spark kernels and the SQL oracle use, so the three engines
+    agree bit-for-bit)."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    sub = len(codebooks[0][0])
+    return [
+        _np_left_fold_sq(
+            np.asarray(book, dtype=np.float64), q[s * sub : (s + 1) * sub]
+        ).tolist()
+        for s, book in enumerate(codebooks)
+    ]
+
+
+def _adc_rerank_topk(
+    embeddings, query_vec, books, *, keep=None, k, rerank, id_col, vec_col
+):
+    """PQ tail of the single-query paths: ONE Arrow pass encodes each
+    batch (after the optional ``keep(V) -> row indices`` filter) and
+    scores it by ADC; the ``rerank * k`` best by rounded ADC go to the
+    exact ``cosine_topk``."""
+    tables = np.asarray(pq_adc_tables(books, query_vec), dtype=np.float64)
+    B = [np.asarray(book, dtype=np.float64) for book in books]
+    in_df = embeddings.select(id_col, vec_col)
+    out_schema = StructType(
+        [*in_df.schema.fields, StructField("_adc", DoubleType())]
+    )
+
+    def _enc(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            V = _np_vectors(b.column(1))
+            if keep is not None:
+                rows = keep(V)
+                if len(rows) == 0:
+                    continue
+                b, V = b.take(pa.array(rows)), V[rows]
+            adc = _np_adc_codes(_np_codes(V, B), tables)
+            yield b.append_column("_adc", pa.array(adc, type=pa.float64()))
+
+    cand = (
+        in_df.mapInArrow(_enc, out_schema)
+        .select(id_col, vec_col, F.round("_adc", 6).alias("_adc"))
+        .orderBy("_adc", id_col)
+        .limit(int(rerank * k))
+        .drop("_adc")
+    )
+    return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
+
+
+def pq_ann_topk(
+    embeddings: DataFrame,
+    query_vec: list[float],
+    *,
+    k: int = 50,
+    m: int = 8,
+    ksub: int = 16,
+    rerank: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = QUANT_SEED,
+    codebooks: list[list[list[float]]] | None = None,
+) -> DataFrame:
+    """PQ ANN with exact re-rank: encode the corpus to m-byte codes,
+    score candidates by ADC table lookups (a per-row sum of m table
+    reads — no vector math on the scan side), keep the ``rerank * k``
+    best by approximate distance, then run the exact cosine top-k on
+    the candidates only.
+
+    At scale the codes column is what the probe scan reads (8 B/vector
+    vs 256 B) — the classic IVF-PQ serving shape with the IVF stage
+    added by ``ivf_pq_ann_topk``."""
+    books = codebooks if codebooks is not None else pq_codebooks(
+        embeddings, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col, seed=seed
+    )
+    return _adc_rerank_topk(
+        embeddings, query_vec, books, k=k, rerank=rerank, id_col=id_col,
+        vec_col=vec_col,
+    )
+
+
+def ivf_pq_ann_topk(
+    embeddings: DataFrame,
+    query_vec: list[float],
+    *,
+    k: int = 50,
+    nlist: int = 16,
+    nprobe: int = 3,
+    m: int = 8,
+    ksub: int = 16,
+    rerank: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = QUANT_SEED,
+) -> DataFrame:
+    """IVF-PQ — the standard billion-vector serving shape: the IVF
+    coarse quantizer prunes the scan to ``nprobe`` of ``nlist`` cells
+    (partition-prunable when the table is written bucketed by cell,
+    see ``build_ivf_index``), PQ ADC scores the survivors from their
+    m one-byte codes, and the exact cosine re-ranks the ``rerank*k``
+    best. Both quantizers are the deterministic sample kind, so the
+    whole pipeline replays in SQL. The coarse assignment and probe
+    filter run in the same Arrow pass as the encode."""
+    centers, books = _quantizers(
+        embeddings, nlist=nlist, m=m, ksub=ksub, id_col=id_col,
+        vec_col=vec_col, seed=seed,
+    )
+    C = np.asarray(centers, dtype=np.float64)
+    probe_set = np.asarray(sorted(_probe_cells(centers, query_vec, nprobe)))
+    return _adc_rerank_topk(
+        embeddings, query_vec, books,
+        keep=lambda V: np.flatnonzero(np.isin(_np_assign(V, C), probe_set)),
+        k=k, rerank=rerank, id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -720,44 +692,33 @@ def ivf_pq_ann_join(
     q_vec_col: str = "query_vec",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int | None = None,
+    seed: int = QUANT_SEED,
 ) -> DataFrame:
     """Batch IVF-PQ: top-k for a whole QUERY SET in one job — the
     full billion-vector serving shape (ann_ivfpq is its single-query
     twin, lsh_ann_join its LSH sibling).
 
-    Corpus side carries (cell, m-byte codes) — index-time artifacts.
-    Queries explode to their nprobe cells and equi-join on cell id (a
-    partition-prunable scan when the corpus is written bucketed by
-    cell); ADC scores each (query, vector) pair from the codes via m
-    sub-distance folds; a per-query rank window keeps the rerank*k
-    best; exact cosine re-ranks those. Windows partition by query id —
-    no single-partition stage."""
-    nsamp = max(nlist, ksub)
-    full = sample_centroids(
-        embeddings, nlist=nsamp, id_col=id_col, vec_col=vec_col,
-        **({} if seed is None else {"seed": seed}),
+    Corpus side carries (cell, m-byte codes) — index-time artifacts,
+    computed in one Arrow pass. Queries explode to their nprobe cells
+    and equi-join on cell id (a partition-prunable scan when the
+    corpus is written bucketed by cell); ADC scores each (query,
+    vector) pair from the codes via m sub-distance folds in a second
+    Arrow pass; a per-query rank window keeps the rerank*k best; exact
+    cosine re-ranks those. Windows partition by query id — no
+    single-partition stage."""
+    centers, books = _quantizers(
+        embeddings, nlist=nlist, m=m, ksub=ksub, id_col=id_col,
+        vec_col=vec_col, seed=seed,
     )
-    centers = full[:nlist]
-    dim = len(full[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    books = [
-        [c[s_ * sub : (s_ + 1) * sub] for c in full[:ksub]]
-        for s_ in range(m)
-    ]
-    # Corpus pass in Arrow: coarse cell + PQ codes in one opaque node
-    # (see the _np_* kernel notes — bit-identical to the expression
-    # path, none of its planning cost)
     B = [np.asarray(book, dtype=np.float64) for book in books]
     C = np.asarray(centers, dtype=np.float64)
+    sub = B[0].shape[1]
     e_in = embeddings.select(id_col, vec_col)
-    enc_schema = (
-        f"{id_col} {e_in.schema[id_col].dataType.simpleString()}, "
-        f"{vec_col} {e_in.schema[vec_col].dataType.simpleString()}, "
-        "_cell int, _codes array<int>"
-    )
+    enc_schema = StructType([
+        *e_in.schema.fields,
+        StructField("_cell", IntegerType()),
+        StructField("_codes", ArrayType(IntegerType())),
+    ])
 
     def _enc(batches):
         import pyarrow as pa
@@ -766,36 +727,28 @@ def ivf_pq_ann_join(
             if b.num_rows == 0:
                 continue
             V = _np_vectors(b.column(1))
-            cells = _np_assign(V, C)
-            codes = _np_codes(V, B)
+            codes = pa.FixedSizeListArray.from_arrays(
+                pa.array(_np_codes(V, B).reshape(-1), type=pa.int32()), m
+            ).cast(pa.list_(pa.int32()))
             yield b.append_column(
-                "_cell", pa.array(cells, type=pa.int32())
-            ).append_column(
-                "_codes",
-                pa.FixedSizeListArray.from_arrays(
-                    pa.array(codes.reshape(-1), type=pa.int32()), m
-                ).cast(pa.list_(pa.int32())),
-            )
+                "_cell", pa.array(_np_assign(V, C), type=pa.int32())
+            ).append_column("_codes", codes)
 
-    enc = e_in.mapInArrow(_enc, enc_schema)
-    q_exp = queries.select(q_id_col, q_vec_col).withColumn(
-        "_cell",
-        F.explode(probe_cells_expr(q_vec_col, centers, nprobe)),
+    q_exp = queries.select(
+        q_id_col,
+        q_vec_col,
+        F.explode(probe_cells_expr(q_vec_col, centers, nprobe)).alias("_cell"),
     )
-    j = q_exp.join(enc, "_cell").drop("_cell")
-    # ADC for a query SET: the tables depend on the query vector, so
-    # each subspace term is the fold of (query sub-vector - chosen
-    # sub-centroid)^2 with the centroid picked by the stored code —
-    # second Arrow pass over the (query, candidate) join output
-    j_in = j.select(q_id_col, q_vec_col, id_col, vec_col, "_codes")
-    adc_schema = (
-        f"{q_id_col} {j_in.schema[q_id_col].dataType.simpleString()}, "
-        f"{q_vec_col} {j_in.schema[q_vec_col].dataType.simpleString()}, "
-        f"{id_col} {j_in.schema[id_col].dataType.simpleString()}, "
-        f"{vec_col} {j_in.schema[vec_col].dataType.simpleString()}, "
-        "_adc double"
+    j_in = q_exp.join(e_in.mapInArrow(_enc, enc_schema), "_cell").select(
+        q_id_col, q_vec_col, id_col, vec_col, "_codes"
+    )
+    adc_schema = StructType(
+        [*j_in.schema.fields[:4], StructField("_adc", DoubleType())]
     )
 
+    # each subspace term is the fold of (query sub-vector - the
+    # sub-centroid its stored code picks)^2 — the tables depend on the
+    # query vector, so they are not precomputed
     def _adc(batches):
         import pyarrow as pa
 
@@ -804,33 +757,21 @@ def ivf_pq_ann_join(
                 continue
             Q = _np_vectors(b.column(1))
             codes = _np_vectors(b.column(4)).astype(np.int64)
-            total = None
-            for s_ in range(m):
-                Cs = B[s_][codes[:, s_]]
-                acc = np.zeros(len(Q), dtype=np.float64)
-                for d_ in range(sub):
-                    dd = Q[:, s_ * sub + d_] - Cs[:, d_]
-                    acc = acc + dd * dd
-                total = acc if total is None else total + acc
+            adc = reduce(np.add, [
+                _np_left_fold_sq(Q[:, s * sub : (s + 1) * sub], B[s][codes[:, s]])
+                for s in range(m)
+            ])
             yield b.drop_columns(["_codes"]).append_column(
-                "_adc", pa.array(total, type=pa.float64())
+                "_adc", pa.array(adc, type=pa.float64())
             )
 
-    scored_adc = j_in.mapInArrow(_adc, adc_schema)
-    wadc = Window.partitionBy(q_id_col).orderBy("_adc", F.col(id_col))
-    cand = (
-        scored_adc.select(q_id_col, q_vec_col, id_col, vec_col,
-                          F.round("_adc", 6).alias("_adc"))
-        .withColumn("_arank", F.row_number().over(wadc))
-        .filter(F.col("_arank") <= int(rerank * k))
-        .drop("_adc", "_arank")
+    rounded = j_in.mapInArrow(_adc, adc_schema).select(
+        q_id_col, q_vec_col, id_col, vec_col, F.round("_adc", 6).alias("_adc")
     )
-    cos = _dot_cols_expr(F.col(q_vec_col), F.col(vec_col)) / (
-        F.sqrt(_norm2_expr(F.col(vec_col)))
-        * F.sqrt(_norm2_expr(F.col(q_vec_col)))
+    cand = _top_per_query(
+        rounded, q_id_col, ["_adc", F.col(id_col)], rerank * k, "_arank"
     )
-    scored = cand.select(q_id_col, id_col, F.round(cos, 6).alias("cosine"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return scored.withColumn(
-        "rank", F.row_number().over(w)
-    ).filter(F.col("rank") <= k)
+    return _pair_rank_topk(
+        cand, k=k, q_id_col=q_id_col, q_vec_col=q_vec_col, id_col=id_col,
+        vec_col=vec_col,
+    )

@@ -40,7 +40,7 @@ def text_metrics(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     digit ratio, and a composite quality score in [0, 1]."""
     # materialize the tokenization once — repeated split+filter
     # subexpressions are NOT deduplicated by codegen (see spans.py)
-    docs = docs.withColumn("_toks", tokens_expr(text_col))
+    docs = docs.select("doc_id", text_col, tokens_expr(text_col).alias("_toks"))
     toks = F.col("_toks")
     n_tok = F.size(toks)
     n_char = F.length(F.col(text_col))
@@ -82,9 +82,11 @@ def lang_id(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     # materialize the tokenization AND each language score once: the
     # tie-break CASE chain references every score several times and
     # codegen re-evaluates split+filter per reference otherwise
-    docs = docs.withColumn("_toks", tokens_expr(text_col))
-    for lang in STOPWORDS:
-        docs = docs.withColumn(f"_sc_{lang}", _stop_count(F.col("_toks"), lang))
+    toks = docs.select("doc_id", tokens_expr(text_col).alias("_toks"))
+    docs = toks.select(
+        "doc_id",
+        *[_stop_count(F.col("_toks"), lang).alias(f"_sc_{lang}") for lang in STOPWORDS],
+    )
     scores = {lang: F.col(f"_sc_{lang}") for lang in STOPWORDS}
     langs = list(STOPWORDS)
     # first-match CASE chain: earlier language wins ties

@@ -102,7 +102,7 @@ def test_embedding_near_dup_recall(spark):
 
 
 def test_ivf_ann_recall(spark):
-    """IVF (KMeans coarse quantizer) ANN recall vs exact top-k."""
+    """IVF (sample coarse quantizer) ANN recall vs exact top-k."""
     from pyspark.sql import functions as F
     from geotools_spark.operators.similarity import cosine_topk, ivf_ann_topk
 
@@ -298,11 +298,16 @@ def test_ivf_pq_ann_recall(spark):
 def test_lsh_ann_join_batch_recall(spark):
     """Batch LSH join: per-query top-k over a query SET in one bucket
     join. Each query's result matches the per-query multiprobe
-    lsh_ann_topk (same planes, same hamming<=2 probe set), and every
-    query retrieves itself at rank 1."""
+    lsh_ann_topk (same planes, same hamming<=probe_flips probe set),
+    and every query retrieves itself at rank 1. The second input is a
+    16-dim slice of the corpus with one probe flip, where bucket
+    pruning changes the top-k: the planes must take the data's
+    dimension (64-dim planes over 16-dim vectors put every vector in
+    bucket 0, silently turning the join into brute force)."""
     import pyspark.sql.functions as F
 
     from geotools_spark.operators.similarity import (
+        cosine_topk,
         lsh_ann_join,
         lsh_ann_topk,
     )
@@ -310,27 +315,86 @@ def test_lsh_ann_join_batch_recall(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").localCheckpoint(
         eager=True
     )
-    qs = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
+    emb16 = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
+    for corpus, flips in ((emb, 2), (emb16, 1)):
+        qs = corpus.filter(F.col("vec_id") < 3).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        )
+        out = lsh_ann_join(qs, corpus, k=10, bits=6, probe_flips=flips).collect()
+        by_q = {}
+        for r in out:
+            by_q.setdefault(r.query_id, []).append((r.rank, r.vec_id))
+        assert set(by_q) == {0, 1, 2}
+        pruned = False
+        for qid, rows in by_q.items():
+            rows.sort()
+            assert rows[0] == (1, qid)  # self at rank 1
+            qvec = [
+                float(v)
+                for v in corpus.filter(F.col("vec_id") == qid).first().embedding
+            ]
+            single = [
+                (r.rank, r.vec_id)
+                for r in lsh_ann_topk(
+                    corpus, qvec, k=10, bits=6, probe_flips=flips
+                ).collect()
+            ]
+            assert rows == sorted(single), qid
+            exact = [
+                (r.rank, r.vec_id)
+                for r in cosine_topk(corpus, qvec, k=10).collect()
+            ]
+            pruned |= rows != sorted(exact)
+        if corpus is emb16:
+            assert pruned  # the buckets really cut the candidate set
+    # an empty query set has no dimension to read and no neighbours
+    assert lsh_ann_join(qs.limit(0), corpus, k=10, bits=6).count() == 0
+
+
+def test_centroid_ties_pick_lowest_index(spark):
+    """The first-min rule on exact ties: a vector equidistant from
+    several nearest centroids goes to the lowest index in the Catalyst
+    ``assign_cell_expr``, the NumPy ``_np_assign`` and the driver-side
+    ``_probe_cells``; ``probe_cells_expr`` ranks every row exactly as
+    ``_probe_cells`` does, ties included."""
+    import numpy as np
+
+    from geotools_spark.operators.similarity import (
+        _np_assign,
+        _probe_cells,
+        assign_cell_expr,
+        probe_cells_expr,
     )
-    out = lsh_ann_join(qs, emb, k=10, bits=6, probe_flips=2).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r.query_id, []).append((r.rank, r.vec_id))
-    assert set(by_q) == {0, 1, 2}
-    for qid, rows in by_q.items():
-        rows.sort()
-        assert rows[0] == (1, qid)  # self at rank 1
-        qvec = [
-            float(v)
-            for v in emb.filter(F.col("vec_id") == qid).first().embedding
-        ]
-        single = [
-            (r.rank, r.vec_id)
-            for r in lsh_ann_topk(emb, qvec, k=10, bits=6).collect()
-        ]
-        assert rows == sorted(single), qid
+
+    # centroid 4 duplicates centroid 2
+    centers = [[1.0, 0.0], [-1.0, 0.0], [0.0, 1.0], [0.0, -1.0], [0.0, 1.0]]
+    want = {  # vector -> lowest index among its equidistant nearest
+        (0.0, 0.0): 0,  # all five tie
+        (0.5, 0.5): 0,  # 0 and 2 (and 4) tie
+        (-0.5, -0.5): 1,  # 1 and 3 tie
+        (-1.0, -1.0): 1,
+        (0.0, 2.0): 2,  # 2 and its duplicate 4 tie
+        (0.25, -3.0): 3,  # no tie
+    }
+    vecs = list(want)
+    for v, idx in want.items():
+        d = [sum((a - b) * (a - b) for a, b in zip(v, c)) for c in centers]
+        assert d.index(min(d)) == idx
+    df = spark.createDataFrame(
+        [(i, list(v)) for i, v in enumerate(vecs)], "i int, v array<double>"
+    )
+    got = df.select(
+        "i",
+        assign_cell_expr("v", centers).alias("cell"),
+        probe_cells_expr("v", centers, len(centers)).alias("probes"),
+    ).collect()
+    np_cells = _np_assign(np.asarray(vecs), np.asarray(centers))
+    for r in got:
+        v = vecs[r.i]
+        assert r.cell == want[v] == np_cells[r.i], v
+        assert _probe_cells(centers, list(v), 1) == [want[v]], v
+        assert list(r.probes) == _probe_cells(centers, list(v), len(centers)), v
 
 
 def test_probe_masks_generalize_beyond_two_flips():
