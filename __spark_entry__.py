@@ -1371,6 +1371,7 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed==in-memory parity stay pinned in tests)."""
     import os
 
+    from geotools_spark import _native
     from geotools_spark.operators.similarity import (
         build_ivf_index,
         ivf_ann_topk,
@@ -1387,8 +1388,13 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nanosecond mtimes (1 s granularity could alias a same-second
     # regeneration of byte-identical size) and a sorted walk (listing
     # order must not change the fingerprint) — both review findings
+    # a single-file parquet has nothing to walk: fingerprint the file
+    listing = (
+        os.walk(src) if os.path.isdir(src)
+        else [(os.path.dirname(src), [], [os.path.basename(src)])]
+    )
     ents = []
-    for root, _dirs, files in os.walk(src):
+    for root, _dirs, files in listing:
         for f_ in files:
             if f_.startswith(("_", ".")):
                 continue
@@ -1404,10 +1410,13 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             fp * 1000003
             + zlib.crc32(f"{name}:{mtns}:{size}".encode())
         ) % (1 << 62)
-    idx = (
-        f"/tmp/geotools_spark_ivf_{os.path.basename(sf_dir.rstrip('/'))}_{fp:x}"
-    )
     try:
+        # the index lives in the per-user 0700 cache: a directory another
+        # user owns (or can write into) is refused, never served
+        idx = _native.owned_dir(os.path.join(
+            _native.owned_dir(_native.CACHE_DIR),
+            f"ivf_{os.path.basename(sf_dir.rstrip('/'))}_{fp:x}",
+        ))
         if not os.path.exists(os.path.join(idx, "_centroids.json")):
             build_ivf_index(emb, idx, nlist=8)
         out = ivf_ann_topk_indexed(spark, idx, qvec, k=20, nprobe=3)

@@ -13,6 +13,9 @@ be a real directory and the ``.so`` a regular file (no symlinks).
 Because no one else can write into a 0700 dir we own, the checked file
 cannot be swapped between the check and the load. A file that fails
 the check is refused, never rebuilt over.
+:func:`owned_dir` is that create-0700-then-check step; other caches
+that must not serve another user's files (the IVF index of the
+``ann_ivf`` query) go through it too.
 
 No compiler, a failed build or a refused file -> ``load`` returns None,
 the caller keeps its NumPy / Python loop (bit-identical results, only
@@ -57,10 +60,18 @@ def _check_owned(path: str, is_dir: bool) -> None:
         raise PermissionError(f"{path} is group- or world-writable")
 
 
+def owned_dir(path: str) -> str:
+    """``path``, created with mode 0700 if absent; raises
+    PermissionError unless it is a real directory this uid owns and no
+    one else can write into."""
+    os.makedirs(path, mode=0o700, exist_ok=True)
+    _check_owned(path, is_dir=True)
+    return path
+
+
 def _build(name: str, source: str, cflags: list[str]) -> str:
     """Path of the trusted compiled library, compiling it if absent."""
-    os.makedirs(CACHE_DIR, mode=0o700, exist_ok=True)
-    _check_owned(CACHE_DIR, is_dir=True)
+    owned_dir(CACHE_DIR)
     tag = hashlib.md5((source + " ".join(cflags)).encode()).hexdigest()[:12]
     so = os.path.join(CACHE_DIR, f"{name}_{tag}.so")
     if not os.path.lexists(so):

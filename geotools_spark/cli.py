@@ -75,13 +75,12 @@ def _with_cells(df, args):
     # points exactly on the snapped max bound floor to cell == cols
     # (and yflip maps them to row -1): clamp onto the last cell, the
     # closed-max convention of the reference's bounds containment
-    return out.withColumn(
-        "cell_col", F.least(F.greatest(F.col("cell_col"), F.lit(0)),
-                            F.lit(cols - 1))
-    ).withColumn(
-        "cell_row", F.least(F.greatest(F.col("cell_row"), F.lit(0)),
-                            F.lit(rows - 1))
-    )
+    clamp = {"cell_col": cols - 1, "cell_row": rows - 1}
+    return out.select(*[
+        F.least(F.greatest(F.col(c), F.lit(0)), F.lit(clamp[c])).alias(c)
+        if c in clamp else F.col(c)
+        for c in out.columns
+    ])
 
 
 def _write(df, args) -> None:
@@ -234,7 +233,8 @@ def _cmd_lasvalidate(args) -> None:
     spark = _spark(args)
     from geotools_spark.operators.terrain import validate_stations
 
-    pts = _read_points(spark, args).withColumnRenamed("pid", "sid")
+    pts = _read_points(spark, args)
+    pts = pts.toDF(*["sid" if c == "pid" else c for c in pts.columns])
     stations = spark.read.parquet(args.stations)
     _write(validate_stations(stations, pts, radius=args.radius), args)
 

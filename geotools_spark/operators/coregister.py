@@ -80,8 +80,8 @@ def apply_shifts(points: DataFrame, shifts: dict[str, float], *, raster_col: str
     sdf = spark.createDataFrame(
         [(k, float(v)) for k, v in shifts.items()], f"{raster_col} string, _shift double"
     )
-    return (
-        points.join(F.broadcast(sdf), raster_col, "left")
-        .withColumn(z, F.col(z) + F.coalesce(F.col("_shift"), F.lit(0.0)))
-        .drop("_shift")
+    j = points.join(F.broadcast(sdf), raster_col, "left")
+    shifted = F.col(z) + F.coalesce(F.col("_shift"), F.lit(0.0))
+    return j.select(
+        *[shifted.alias(c) if c == z else F.col(c) for c in j.columns if c != "_shift"]
     )

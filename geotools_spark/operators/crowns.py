@@ -61,53 +61,37 @@ def tree_crowns(
     import numpy as np
     import pandas as pd
 
-    from geotools_spark.operators.raster import tiles_with_halo
+    from geotools_spark.operators.raster import D8, HaloTiles, shift_slices
 
     r2 = float(radius_cells) * float(radius_cells)
     waves = int(math.ceil(radius_cells)) + 1
-    halo = waves + 1
-    t = int(tile)
-    if halo >= t:
-        t = 2 * halo
-    rast_s = tiles_with_halo(
-        raster.select("cell_col", "cell_row", F.col(value).alias("value")),
-        tile=t, halo=halo,
-    )
-    tops_s = tiles_with_halo(
+    tiles = HaloTiles(tile, waves + 1)
+    w = tiles.width
+    rast_s = tiles.ship(raster.select("cell_col", "cell_row", F.col(value).alias("value")))
+    tops_s = tiles.ship(
         tops.select("cell_col", "cell_row", F.col("z").alias("value"), "top_id"),
-        tile=t, halo=halo, extra=("top_id",),
+        extra=("top_id",),
     )
     mh = float(min_height)
     frac = float(height_fraction)
 
     def _grow(key, rast_pdf: pd.DataFrame, tops_pdf: pd.DataFrame) -> pd.DataFrame:
-        tcol, trow = int(key[0]), int(key[1])
-        x0, y0 = tcol * t - halo, trow * t - halo
-        w = t + 2 * halo
-        val = np.full((w, w), np.nan)
-        cc = rast_pdf["cell_col"].to_numpy() - x0
-        rr = rast_pdf["cell_row"].to_numpy() - y0
-        inb = (cc >= 0) & (cc < w) & (rr >= 0) & (rr < w)
-        val[rr[inb], cc[inb]] = rast_pdf["value"].to_numpy(dtype=np.float64)[inb]
+        val, x0, y0 = tiles.grid(
+            key, rast_pdf, rast_pdf["value"].to_numpy(dtype=np.float64), np.nan
+        )
+
         # seeds: tid grid (int64, -1 = unassigned) + per-top attributes
-        tid = np.full((w, w), -1, dtype=np.int64)
-        zcur = np.full((w, w), np.nan)      # the wave's comparison z
-        tz = np.full((w, w), np.nan)        # top z (fraction test)
-        tcx = np.full((w, w), 0.0)          # top position (radius test)
-        tcy = np.full((w, w), 0.0)
-        scc = tops_pdf["cell_col"].to_numpy() - x0
-        srr = tops_pdf["cell_row"].to_numpy() - y0
-        sz = tops_pdf["value"].to_numpy(dtype=np.float64)
-        sid = tops_pdf["top_id"].to_numpy(dtype=np.int64)
-        sin = (scc >= 0) & (scc < w) & (srr >= 0) & (srr < w)
-        tid[srr[sin], scc[sin]] = sid[sin]
-        zcur[srr[sin], scc[sin]] = sz[sin]
-        tz[srr[sin], scc[sin]] = sz[sin]
-        tcx[srr[sin], scc[sin]] = scc[sin] + x0
-        tcy[srr[sin], scc[sin]] = srr[sin] + y0
+        def seed(values, fill):
+            return tiles.grid(key, tops_pdf, values, fill)[0]
+
+        tid = seed(tops_pdf["top_id"].to_numpy(dtype=np.int64), -1)
+        zcur = seed(tops_pdf["value"].to_numpy(dtype=np.float64), np.nan)  # the wave's comparison z
+        tz = zcur.copy()  # top z (fraction test)
+        # top position (radius test)
+        tcx = seed(tops_pdf["cell_col"].to_numpy(dtype=np.float64), 0.0)
+        tcy = seed(tops_pdf["cell_row"].to_numpy(dtype=np.float64), 0.0)
         frontier = tid >= 0
         gx, gy = np.meshgrid(np.arange(w) + x0, np.arange(w) + y0)
-        shifts = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
         big = np.iinfo(np.int64).max
         for _ in range(waves):
             if not frontier.any():
@@ -117,40 +101,36 @@ def tree_crowns(
             btz = np.empty((w, w))
             btcx = np.empty((w, w))
             btcy = np.empty((w, w))
-            for dx, dy in shifts:
-                # source slice -> target slice shifted by (dx, dy)
-                ts_r = slice(max(0, dy), w + min(0, dy))
-                ts_c = slice(max(0, dx), w + min(0, dx))
-                ss_r = slice(max(0, -dy), w + min(0, -dy))
-                ss_c = slice(max(0, -dx), w + min(0, -dx))
-                src_f = frontier[ss_r, ss_c]
-                src_tid = tid[ss_r, ss_c]
-                src_z = zcur[ss_r, ss_c]
-                src_tz = tz[ss_r, ss_c]
-                src_tcx = tcx[ss_r, ss_c]
-                src_tcy = tcy[ss_r, ss_c]
-                tv = val[ts_r, ts_c]
-                d2 = (src_tcx - gx[ts_r, ts_c]) ** 2 + (src_tcy - gy[ts_r, ts_c]) ** 2
+            for dx, dy in D8:
+                ts, ss = shift_slices(dx, dy, w)
+                src_f = frontier[ss]
+                src_tid = tid[ss]
+                src_z = zcur[ss]
+                src_tz = tz[ss]
+                src_tcx = tcx[ss]
+                src_tcy = tcy[ss]
+                tv = val[ts]
+                d2 = (src_tcx - gx[ts]) ** 2 + (src_tcy - gy[ts]) ** 2
                 with np.errstate(invalid="ignore"):
                     ok = (
                         src_f
-                        & (tid[ts_r, ts_c] < 0)
+                        & (tid[ts] < 0)
                         & ~np.isnan(tv)
                         & (tv < src_z)
                         & (tv >= mh)
                         & ((tv / src_tz) >= frac)
                         & (d2 <= r2)
-                        & (src_tid < best[ts_r, ts_c])
+                        & (src_tid < best[ts])
                     )
-                sub = best[ts_r, ts_c]
+                sub = best[ts]
                 sub[ok] = src_tid[ok]
-                best[ts_r, ts_c] = sub
+                best[ts] = sub
                 for grid_, src_ in (
                     (bz, tv), (btz, src_tz), (btcx, src_tcx), (btcy, src_tcy),
                 ):
-                    g2 = grid_[ts_r, ts_c]
+                    g2 = grid_[ts]
                     g2[ok] = src_[ok]
-                    grid_[ts_r, ts_c] = g2
+                    grid_[ts] = g2
             won = best < big
             if not won.any():
                 break
@@ -160,9 +140,7 @@ def tree_crowns(
             tcx[won] = btcx[won]
             tcy[won] = btcy[won]
             frontier = won
-        core = np.zeros((w, w), dtype=bool)
-        core[halo : halo + t, halo : halo + t] = True
-        emit = (tid >= 0) & core
+        emit = (tid >= 0) & tiles.core_mask()
         er, ec = np.nonzero(emit)
         return pd.DataFrame(
             {
@@ -271,7 +249,7 @@ def treetops_pipeline(
 
     smoothed = gaussian_smooth(
         chm, sigma=smooth_sigma, size=smooth_size, cols=cols, rows=rows
-    ).withColumnRenamed("smoothed", "value")
+    ).select("cell_col", "cell_row", F.col("smoothed").alias("value"))
     tops = local_maxima(
         smoothed, window=tops_window, min_height=min_height, cols=cols, rows=rows
     )

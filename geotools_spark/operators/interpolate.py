@@ -30,7 +30,7 @@ def interp_idw(
     res: float = 1.0, rings: int = 2,
 ) -> DataFrame:
     knn = knn_join(queries, samples, k=k, res=res, rings=rings)
-    return _idw_kernel(knn, power=power).withColumnRenamed("idw", "value")
+    return _idw_kernel(knn, power=power).toDF("qid", "value")
 
 
 def interp_idw_all(
@@ -48,7 +48,7 @@ def interp_idw_all(
         + (F.col("qy") - F.col("y")) * (F.col("qy") - F.col("y"))
     )
     knn = j.select("qid", "z", d.alias("dist"))
-    return _idw_kernel(knn, power=power).withColumnRenamed("idw", "value")
+    return _idw_kernel(knn, power=power).toDF("qid", "value")
 
 
 def interp_avg(
@@ -72,7 +72,7 @@ def interp_shift(queries: DataFrame, samples: DataFrame, **_) -> DataFrame:
 def interp_planar(queries: DataFrame, samples: DataFrame, **_) -> DataFrame:
     from geotools_spark.operators.terrain import planar_interpolate
 
-    return planar_interpolate(samples, queries).withColumnRenamed("plane_z", "value")
+    return planar_interpolate(samples, queries).toDF(*queries.columns, "value")
 
 
 def interp_kriging(
@@ -84,7 +84,7 @@ def interp_kriging(
 
     return simple_kriging(
         samples, queries, nugget=nugget, sill=sill, vrange=vrange, model=model
-    ).withColumnRenamed("kriged", "value")
+    ).toDF(*queries.columns, "value")
 
 
 def interp_loess(
@@ -145,26 +145,13 @@ def interp_natural_neighbour(queries: DataFrame, samples: DataFrame, **_) -> Dat
     import numpy as np
 
     from geotools_spark.functions.geometry import natural_neighbour
+    from geotools_spark.operators.sampling import map_with_samples
 
-    from geotools_spark.operators.sampling import collect_sample_xyz
+    def _nn(pts, pdf):
+        vals, located = natural_neighbour(pts, pdf[["qx", "qy"]].to_numpy(dtype=np.float64))
+        return np.where(located, vals, np.nan)
 
-    pts = collect_sample_xyz(samples, ("x", "y", "z"))
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast(pts)
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in queries.schema.fields
-    ) + ", value double"
-
-    def _nn(batches):
-        s = bc.value
-        for pdf in batches:
-            q = pdf[["qx", "qy"]].to_numpy(dtype=np.float64)
-            vals, located = natural_neighbour(s, q)
-            out = pdf.copy()
-            out["value"] = np.where(located, vals, np.nan)
-            yield out
-
-    return queries.mapInPandas(_nn, out_schema)
+    return map_with_samples(queries, samples, ("x", "y", "z"), "value", _nn)
 
 
 REGISTRY = {

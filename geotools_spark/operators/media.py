@@ -287,7 +287,7 @@ def resize_image_meta(df: DataFrame, *, width: int, height: int) -> DataFrame:
         F.col("meta.sample_rate").alias("sample_rate"),
         F.col("meta.duration_ms").alias("duration_ms"),
     )
-    return df.withColumn("meta", new_meta)
+    return df.select(*[new_meta.alias(c) if c == "meta" else F.col(c) for c in df.columns])
 
 
 def _bilinear_resample(px: np.ndarray, width: int, height: int) -> np.ndarray:
@@ -356,7 +356,10 @@ def frame_sample(df: DataFrame, *, every_ms: int = 1000) -> DataFrame:
     return (
         df.filter(F.col("kind") == "video")
         .select("media_ref", "meta", F.explode(frames).alias("ts_ms"))
-        .withColumn("frame_idx", (F.col("ts_ms") / every_ms).cast("int"))
+        .select(
+            "media_ref", "meta", "ts_ms",
+            (F.col("ts_ms") / every_ms).cast("int").alias("frame_idx"),
+        )
     )
 
 

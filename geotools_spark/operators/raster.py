@@ -18,7 +18,10 @@ also nodata). Two physical strategies, both pure public-API Spark:
    src/raster.cpp:240-262). One shuffle on tile key, then a vectorized
    NumPy kernel per tile. The right trade for large kernels and
    iterative per-tile math: shuffle volume is (1 + 2*halo/T)^2 x input,
-   independent of kernel size.
+   independent of kernel size. :class:`HaloTiles` is the one home of
+   the tile rule: the tile size (``tile``, grown to ``2*halo`` when
+   ``halo >= tile``), the halo shipping, the tile origin
+   ``tile_col*T - halo`` and the dense (T+2*halo)^2 grid scatter.
 
 Iterative algorithms (feather W7, flood/label W10) run a bounded driver
 loop of DataFrame steps with ``localCheckpoint`` to cut lineage — the
@@ -73,6 +76,40 @@ def _window_offsets_expr(size: int) -> str:
     return f"array({items})"
 
 
+#: NumPy D8 neighbour shifts (dx, dy), dx-major like ``window_offsets(1, center=False)``
+D8 = tuple((dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0))
+
+
+def shift_slices(dx: int, dy: int, w: int):
+    """(target, source) index pairs that move a (w, w) grid by (dx, dy):
+    ``target_grid[t] op= source_grid[s]`` reads each cell's neighbour
+    at (-dx, -dy)."""
+    return (
+        (slice(max(0, dy), w + min(0, dy)), slice(max(0, dx), w + min(0, dx))),
+        (slice(max(0, -dy), w + min(0, -dy)), slice(max(0, -dx), w + min(0, -dx))),
+    )
+
+
+def _window_fold(raster: DataFrame, size: int, value: str, fields, aggs) -> DataFrame:
+    """Ship every cell to each target cell of its size x size window and
+    fold per target: ``fields(v, dx, dy)`` are the shipped columns
+    (offsets are source -> target), ``aggs`` the folds over them.
+    Output: (tcol, trow, *aggs). The dy-major offset order fixes the
+    float-sum order smooth relies on."""
+    ex = raster.select(
+        "cell_col",
+        "cell_row",
+        F.col(value).alias("_v"),
+        F.explode(F.expr(_window_offsets_expr(size))).alias("off"),
+    )
+    dx, dy = F.col("off.dx"), F.col("off.dy")
+    return ex.select(
+        (F.col("cell_col") + dx).alias("tcol"),
+        (F.col("cell_row") + dy).alias("trow"),
+        *fields(F.col("_v"), dx, dy),
+    ).groupBy("tcol", "trow").agg(*aggs)
+
+
 def gaussian_weight_expr(dx, dy, sigma: float):
     """Reference kernel weight as a JVM expression (src/raster.cpp:41-55)."""
     s2 = 2.0 * float(sigma) * float(sigma)
@@ -112,24 +149,18 @@ def gaussian_smooth(
     if size % 2 == 0:
         size += 1
     half = size // 2
-    # Each SOURCE cell lands in the windows of all targets within +-half;
-    # the kernel is symmetric so the weight depends only on the offset.
-    ex = raster.select(
-        "cell_col",
-        "cell_row",
-        F.col(value).alias("_v"),
-        F.explode(F.expr(_window_offsets_expr(size))).alias("off"),
-    )
-    ex = ex.select(
-        (F.col("cell_col") + F.col("off.dx")).alias("tcol"),
-        (F.col("cell_row") + F.col("off.dy")).alias("trow"),
-        (F.col("_v") * gaussian_weight_expr(F.col("off.dx"), F.col("off.dy"), sigma)).alias("_wv"),
-        F.col("_v").isNull().cast("int").alias("_nd"),
-    )
-    agg = ex.groupBy("tcol", "trow").agg(
-        F.sum("_wv").alias("_sum"),
-        F.count(F.lit(1)).alias("_n"),  # contributions incl. nodata rows
-        F.sum("_nd").alias("_nnd"),
+    # the kernel is symmetric so the weight depends only on the offset
+    agg = _window_fold(
+        raster, size, value,
+        lambda v, dx, dy: [
+            (v * gaussian_weight_expr(dx, dy, sigma)).alias("_wv"),
+            v.isNull().cast("int").alias("_nd"),
+        ],
+        [
+            F.sum("_wv").alias("_sum"),
+            F.count(F.lit(1)).alias("_n"),  # contributions incl. nodata rows
+            F.sum("_nd").alias("_nnd"),
+        ],
     )
     full = size * size
     ok = (F.col("_n") == full) & (F.col("_nnd") == 0) & _interior(
@@ -159,28 +190,25 @@ def local_maxima(
     Output: (top_id, cell_col, cell_row, z) — top_id = (col<<32)|row.
     """
     half = window // 2
-    ex = raster.select(
-        "cell_col",
-        "cell_row",
-        F.col(value).alias("_v"),
-        F.explode(F.expr(_window_offsets_expr(window))).alias("off"),
-    )
-    is_center = (F.col("off.dx") == 0) & (F.col("off.dy") == 0)
-    # row-major scan order: a cell precedes the center iff dy<0, or dy==0 & dx<0
-    before = (F.col("off.dy") > 0) | ((F.col("off.dy") == 0) & (F.col("off.dx") > 0))
-    # NOTE: offsets here are source->target, so the SOURCE precedes the
-    # TARGET center in scan order when the offset it travels is positive.
-    ex = ex.select(
-        (F.col("cell_col") + F.col("off.dx")).alias("tcol"),
-        (F.col("cell_row") + F.col("off.dy")).alias("trow"),
-        F.when(is_center, F.col("_v")).alias("_center"),
-        F.when(~is_center & before, F.col("_v")).alias("_before_v"),
-        F.when(~is_center & ~before, F.col("_v")).alias("_after_v"),
-    )
-    agg = ex.groupBy("tcol", "trow").agg(
-        F.max("_center").alias("center"),
-        F.max("_before_v").alias("max_before"),
-        F.max("_after_v").alias("max_after"),
+
+    def fields(v, dx, dy):
+        is_center = (dx == 0) & (dy == 0)
+        # row-major scan order: the SOURCE precedes the TARGET center
+        # when the (source->target) offset it travels is positive
+        before = (dy > 0) | ((dy == 0) & (dx > 0))
+        return [
+            F.when(is_center, v).alias("_center"),
+            F.when(~is_center & before, v).alias("_before_v"),
+            F.when(~is_center & ~before, v).alias("_after_v"),
+        ]
+
+    agg = _window_fold(
+        raster, window, value, fields,
+        [
+            F.max("_center").alias("center"),
+            F.max("_before_v").alias("max_before"),
+            F.max("_after_v").alias("max_after"),
+        ],
     )
     is_top = (
         F.col("center").isNotNull()
@@ -209,22 +237,14 @@ def local_minima(
     """W3: strict 3x3 minima (src/utils/findmin.cpp:30-64) — inverted
     W2 without the >0 quirk; ties suppress both candidates."""
     half = window // 2
-    ex = raster.select(
-        "cell_col",
-        "cell_row",
-        F.col(value).alias("_v"),
-        F.explode(F.expr(_window_offsets_expr(window))).alias("off"),
-    )
-    is_center = (F.col("off.dx") == 0) & (F.col("off.dy") == 0)
-    ex = ex.select(
-        (F.col("cell_col") + F.col("off.dx")).alias("tcol"),
-        (F.col("cell_row") + F.col("off.dy")).alias("trow"),
-        F.when(is_center, F.col("_v")).alias("_center"),
-        F.when(~is_center, F.col("_v")).alias("_nbr"),
-    )
-    agg = ex.groupBy("tcol", "trow").agg(
-        F.max("_center").alias("center"),
-        F.min("_nbr").alias("min_nbr"),
+
+    def fields(v, dx, dy):
+        is_center = (dx == 0) & (dy == 0)
+        return [F.when(is_center, v).alias("_center"), F.when(~is_center, v).alias("_nbr")]
+
+    agg = _window_fold(
+        raster, window, value, fields,
+        [F.max("_center").alias("center"), F.min("_nbr").alias("min_nbr")],
     )
     ok = (
         F.col("center").isNotNull()
@@ -255,7 +275,7 @@ def edge_pixels(
     ex = raster.filter(F.col(value).isNotNull()).select(
         "cell_col",
         "cell_row",
-        F.explode(F.expr(_window_offsets_expr(3))).alias("off"),
+        F.explode(window_offsets(1)).alias("off"),
     )
     # look up the neighbor's validity by joining back to the raster
     nbr = raster.select(
@@ -294,7 +314,7 @@ def feather(
     """W7a: alpha mask by edge snow-in (src/mosaic.cpp:56-99), computed
     as a halo-tile distance transform: the synchronous peel wave means a
     cell's layer index IS its (border-quirk-aware) D8 peel distance, so
-    one ``tiles_with_halo`` shuffle + a vectorized per-tile NumPy
+    one halo-tile shuffle + a vectorized per-tile NumPy
     erosion loop replaces the ~steps driver-side Spark jobs of the
     literal formulation (kept as :func:`feather_iterative`, pinned
     equal by tests). Halo = steps+2 cells: the wave advances one
@@ -304,16 +324,11 @@ def feather(
     reference's own per-tile border artifacts are NOT reproduced)."""
     steps = max(1.0, float(distance) / float(resolution))
     n_peel = int(math.floor(steps)) + 1
-    halo = n_peel + 1
-    t = int(tile)
-    if halo >= t:
-        t = 2 * halo
-    shipped = tiles_with_halo(
+    tiles = HaloTiles(tile, n_peel + 1)
+    shipped = tiles.ship(
         raster.filter(F.col(value).isNotNull()).select(
             "cell_col", "cell_row", F.col(value).alias("value")
-        ),
-        tile=t,
-        halo=halo,
+        )
     )
     alphas = [
         math.tanh(((min(steps, float(s)) - steps / 2.0) / (steps / 2.0)) * math.pi)
@@ -323,14 +338,9 @@ def feather(
     ]
 
     def _peel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tcol, trow = int(key[0]), int(key[1])
-        x0, y0 = tcol * t - halo, trow * t - halo
-        w = t + 2 * halo
-        valid = np.zeros((w, w), dtype=bool)
-        cc = pdf["cell_col"].to_numpy() - x0
-        rr = pdf["cell_row"].to_numpy() - y0
-        inb = (cc >= 0) & (cc < w) & (rr >= 0) & (rr < w)
-        valid[rr[inb], cc[inb]] = True
+        # presence, not values: a NaN (non-NULL) cell is valid
+        valid, x0, y0 = tiles.grid(key, pdf, True, False)
+        w = tiles.width
         orig = valid.copy()
         # border-edge quirk: the 3x3 neighbor-coord test makes the two
         # outermost GLOBAL rings always edges
@@ -346,22 +356,15 @@ def feather(
         for s in range(n_peel):
             inv = ~valid
             adj = inv.copy()
-            adj[:-1, :] |= inv[1:, :]
-            adj[1:, :] |= inv[:-1, :]
-            adj[:, :-1] |= inv[:, 1:]
-            adj[:, 1:] |= inv[:, :-1]
-            adj[:-1, :-1] |= inv[1:, 1:]
-            adj[:-1, 1:] |= inv[1:, :-1]
-            adj[1:, :-1] |= inv[:-1, 1:]
-            adj[1:, 1:] |= inv[:-1, :-1]
+            for dx, dy in D8:
+                tgt, src = shift_slices(dx, dy, w)
+                adj[tgt] |= inv[src]
             edge = valid & (adj | border)
             if not edge.any():
                 break
             layer[edge] = s
             valid &= ~edge
-        core = np.zeros((w, w), dtype=bool)
-        core[halo : halo + t, halo : halo + t] = True
-        emit = orig & core
+        emit = orig & tiles.core_mask()
         er, ec = np.nonzero(emit)
         lay = layer[er, ec]
         lut = np.array(alphas + [1.0])  # index n_peel = never peeled
@@ -405,7 +408,7 @@ def feather_iterative(
     step = 0.0
     while step <= steps:
         edges = edge_pixels(
-            mask.withColumn("value", F.lit(1.0)),
+            mask.select("cell_col", "cell_row", F.lit(1.0).alias("value")),
             cols=cols,
             rows=rows,
         ).filter(F.col("is_edge"))
@@ -478,7 +481,7 @@ def spill_points(
         "cell_col",
         "cell_row",
         "label",
-        F.explode(F.expr(_window_offsets_expr(3))).alias("off"),
+        F.explode(window_offsets(1, center=False)).alias("off"),
     ).select(
         "cell_col",
         "cell_row",
@@ -490,7 +493,6 @@ def spill_points(
         & (F.col("nrow") >= 0)
         & (F.col("ncol") < cols)
         & (F.col("nrow") < rows)
-        & ~((F.col("ncol") == F.col("cell_col")) & (F.col("nrow") == F.col("cell_row")))
     )
     nbr = lab.select(
         F.col("cell_col").alias("ncol"),
@@ -519,7 +521,7 @@ def spill_points(
         F.col("label").alias("label_a"),
         F.col("x").alias("x_a"),
         F.col("y").alias("y_a"),
-        F.explode(F.expr(_window_offsets_expr(3))).alias("off"),
+        F.explode(window_offsets(1)).alias("off"),
         (F.col("_bc")).alias("_abc"),
         (F.col("_br")).alias("_abr"),
     ).select(
@@ -539,7 +541,7 @@ def spill_points(
     return (
         a.join(b, ["_bc", "_br"])
         .filter(F.col("label_a") < F.col("label_b"))
-        .withColumn("dist", F.sqrt(dx * dx + dy * dy))
+        .select("*", F.sqrt(dx * dx + dy * dy).alias("dist"))
         .filter(F.col("dist") <= d)
         .select(
             "label_a", "x_a", "y_a", "label_b", "x_b", "y_b",
@@ -576,16 +578,10 @@ def flood_label(
     Labels are the min linear cell id (row<<32|col) of the component —
     deterministic. Output: (cell_col, cell_row, label).
     """
-    if connectivity == 4:
-        offs = ((-1, 0), (1, 0), (0, -1), (0, 1))
-    else:
-        offs = tuple(
-            (dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)
-        )
+    offs = ((-1, 0), (1, 0), (0, -1), (0, 1)) if connectivity == 4 else D8
     big = 1 << 32
-    cells = raster.filter(predicate).select("cell_col", "cell_row")
-    shipped = tiles_with_halo(
-        cells.withColumn("value", F.lit(1.0)), tile=tile, halo=1
+    shipped = HaloTiles(tile, 1).ship(
+        raster.filter(predicate).select("cell_col", "cell_row", F.lit(1.0).alias("value"))
     )
 
     def _local_label(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -763,7 +759,7 @@ def raster_pair_diff_stats(
         .filter(F.col("rid0") < F.col("rid1"))
         .filter(F.col("v0").isNotNull() & F.col("v1").isNotNull())
         .join(F.broadcast(classes), ["cell_col", "cell_row"], "inner")
-        .withColumn("d", F.col("v0") - F.col("v1"))
+        .select("rid0", "rid1", "cls", (F.col("v0") - F.col("v1")).alias("d"))
     )
     return j.groupBy("rid0", "rid1", "cls").agg(
         F.count("d").alias("count"),
@@ -856,47 +852,74 @@ def spectral_pivot(
 # ---------------------------------------------------------------------------
 
 
-def tiles_with_halo(
-    raster: DataFrame,
-    *,
-    tile: int,
-    halo: int,
-    value: str = "value",
-    extra: tuple[str, ...] = (),
-) -> DataFrame:
-    """Assign each cell to its home tile plus every neighbor tile whose
-    core lies within ``halo`` cells — the halo-duplication exchange.
-    Output adds (tile_col, tile_row); core cells are the ones whose
-    home tile equals the shipped tile. ``extra`` columns pass through
-    (e.g. seed ids for region growing)."""
-    if halo >= tile:
-        raise ValueError("halo must be < tile")
-    # A cell can influence up to 1 tile over in each direction when it
-    # sits within `halo` of that tile's border.
-    ex = raster.select(
-        "cell_col",
-        "cell_row",
-        F.col(value).alias("value"),
-        *[F.col(c) for c in extra],
-        F.explode(window_offsets(1)).alias("off"),
-    )
-    home_tc = F.floor(F.col("cell_col") / tile)
-    home_tr = F.floor(F.col("cell_row") / tile)
-    tc = home_tc + F.col("off.dx")
-    tr = home_tr + F.col("off.dy")
-    # ship to neighbor tile iff the cell is within halo of that tile's span
-    lo_c, hi_c = tc * tile - halo, (tc + 1) * tile + halo - 1
-    lo_r, hi_r = tr * tile - halo, (tr + 1) * tile + halo - 1
-    keep = (
-        (F.col("cell_col") >= lo_c)
-        & (F.col("cell_col") <= hi_c)
-        & (F.col("cell_row") >= lo_r)
-        & (F.col("cell_row") <= hi_r)
-    )
-    return ex.filter(keep).select(
-        tc.alias("tile_col"), tr.alias("tile_row"), "cell_col", "cell_row", "value",
-        *extra,
-    )
+class HaloTiles:
+    """The tile rule of every halo-tiled kernel. ``halo`` is how far (in
+    cells) the kernel reads past a tile's core; the tile edge is
+    ``tile``, grown to ``2 * halo`` when ``halo >= tile`` so a cell is
+    never shipped past its neighbouring tiles."""
+
+    def __init__(self, tile: int, halo: int):
+        self.halo = int(halo)
+        self.tile = int(tile) if self.halo < int(tile) else 2 * self.halo
+        self.width = self.tile + 2 * self.halo
+
+    def ship(
+        self, raster: DataFrame, *, value: str = "value", extra: tuple[str, ...] = ()
+    ) -> DataFrame:
+        """Assign each cell to its home tile plus every neighbor tile
+        whose core lies within ``halo`` cells — the halo-duplication
+        exchange. Output adds (tile_col, tile_row); core cells are the
+        ones whose home tile equals the shipped tile. ``extra`` columns
+        pass through (e.g. seed ids for region growing)."""
+        tile, halo = self.tile, self.halo
+        # A cell can influence up to 1 tile over in each direction when it
+        # sits within `halo` of that tile's border.
+        ex = raster.select(
+            "cell_col",
+            "cell_row",
+            F.col(value).alias("value"),
+            *[F.col(c) for c in extra],
+            F.explode(window_offsets(1)).alias("off"),
+        )
+        home_tc = F.floor(F.col("cell_col") / tile)
+        home_tr = F.floor(F.col("cell_row") / tile)
+        tc = home_tc + F.col("off.dx")
+        tr = home_tr + F.col("off.dy")
+        # ship to neighbor tile iff the cell is within halo of that tile's span
+        lo_c, hi_c = tc * tile - halo, (tc + 1) * tile + halo - 1
+        lo_r, hi_r = tr * tile - halo, (tr + 1) * tile + halo - 1
+        keep = (
+            (F.col("cell_col") >= lo_c)
+            & (F.col("cell_col") <= hi_c)
+            & (F.col("cell_row") >= lo_r)
+            & (F.col("cell_row") <= hi_r)
+        )
+        return ex.filter(keep).select(
+            tc.alias("tile_col"), tr.alias("tile_row"), "cell_col", "cell_row", "value",
+            *extra,
+        )
+
+    def grid(self, key, pdf: pd.DataFrame, values, fill):
+        """Dense (width, width) grid of tile ``key``: ``values`` (one
+        per row of the shipped ``pdf``, or one scalar for all) at each
+        row's cell, ``fill`` elsewhere. Returns (grid, x0, y0) with
+        grid[r, c] the cell (x0 + c, y0 + r)."""
+        x0 = int(key[0]) * self.tile - self.halo
+        y0 = int(key[1]) * self.tile - self.halo
+        w = self.width
+        v = np.asarray(values)
+        grid = np.full((w, w), fill, dtype=v.dtype)
+        cc = pdf["cell_col"].to_numpy() - x0
+        rr = pdf["cell_row"].to_numpy() - y0
+        inb = (cc >= 0) & (cc < w) & (rr >= 0) & (rr < w)
+        grid[rr[inb], cc[inb]] = v[inb] if v.ndim else v
+        return grid, x0, y0
+
+    def core_mask(self) -> np.ndarray:
+        """(width, width) mask of the tile's own cells (halo excluded)."""
+        core = np.zeros((self.width, self.width), dtype=bool)
+        core[self.halo : self.halo + self.tile, self.halo : self.halo + self.tile] = True
+        return core
 
 
 def gaussian_smooth_tiled(
@@ -913,8 +936,6 @@ def gaussian_smooth_tiled(
     """W1 scale path: same semantics as :func:`gaussian_smooth`, but one
     shuffle on tile key + a vectorized NumPy convolution per tile
     (applyInPandas). Verified equal to the explode path in tests."""
-    import numpy as np
-
     if size % 2 == 0:
         size += 1
     half = size // 2
@@ -923,33 +944,23 @@ def gaussian_smooth_tiled(
     wx = np.exp(-(offs[None, :] ** 2 + offs[:, None] ** 2) / s2) / (math.pi * s2)
     hi_adj = 2 if parity else 1
 
-    shipped = tiles_with_halo(
-        raster.select("cell_col", "cell_row", F.col(value).alias("value")),
-        tile=tile,
-        halo=half,
-    )
+    tiles = HaloTiles(tile, half)
+    t = tiles.tile
+    shipped = tiles.ship(raster.select("cell_col", "cell_row", F.col(value).alias("value")))
 
     def _conv(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tcol, trow = int(key[0]), int(key[1])
-        x0, y0 = tcol * tile - half, trow * tile - half
-        w = tile + 2 * half
-        grid = np.full((w, w), np.nan)
-        cc = pdf["cell_col"].to_numpy() - x0
-        rr = pdf["cell_row"].to_numpy() - y0
-        vals = pdf["value"].to_numpy(dtype=np.float64)
-        inb = (cc >= 0) & (cc < w) & (rr >= 0) & (rr < w)
-        grid[rr[inb], cc[inb]] = vals[inb]
+        grid, x0, y0 = tiles.grid(key, pdf, pdf["value"].to_numpy(dtype=np.float64), np.nan)
         # vectorized stacked-shift convolution over the core block; a
         # NaN anywhere in a window propagates to NaN, which is exactly
         # the "skip incomplete windows" rule
-        acc = np.zeros((tile, tile))
+        acc = np.zeros((t, t))
         for dy in range(-half, half + 1):
             for dx in range(-half, half + 1):
                 acc += wx[dy + half, dx + half] * grid[
-                    half + dy : half + dy + tile, half + dx : half + dx + tile
+                    half + dy : half + dy + t, half + dx : half + dx + t
                 ]
-        col_abs = np.arange(x0 + half, x0 + half + tile)
-        row_abs = np.arange(y0 + half, y0 + half + tile)
+        col_abs = np.arange(x0 + half, x0 + half + t)
+        row_abs = np.arange(y0 + half, y0 + half + t)
         ok_c = (col_abs >= half) & (col_abs <= cols - half - hi_adj)
         ok_r = (row_abs >= half) & (row_abs <= rows - half - hi_adj)
         mask = ok_r[:, None] & ok_c[None, :] & ~np.isnan(acc)
@@ -964,6 +975,40 @@ def gaussian_smooth_tiled(
 
     return shipped.groupBy("tile_col", "tile_row").applyInPandas(
         _conv, "cell_col long, cell_row long, smoothed double"
+    )
+
+
+def _fill_nodata(
+    raster: DataFrame, fill_cell, *, cols: int, rows: int, tile: int, halo: int, value: str
+) -> DataFrame:
+    """The nodata-fill loop of the tiled fillers: every in-bounds core
+    cell keeps its value, or takes ``fill_cell(grid, gx, gy, x0, y0)``
+    (NaN = unfillable) when it is nodata. (gx, gy) index the tile's
+    dense grid, whose cell (0, 0) is (x0, y0). A NaN returned through
+    Arrow arrives as NULL."""
+    tiles = HaloTiles(tile, halo)
+    t = tiles.tile
+    shipped = tiles.ship(raster.select("cell_col", "cell_row", F.col(value).alias("value")))
+
+    def _fill(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        grid, x0, y0 = tiles.grid(key, pdf, pdf["value"].to_numpy(dtype=np.float64), np.nan)
+        out_c, out_r, out_v = [], [], []
+        for gy in range(halo, halo + t):
+            if not 0 <= y0 + gy < rows:
+                continue
+            for gx in range(halo, halo + t):
+                if not 0 <= x0 + gx < cols:
+                    continue
+                v = grid[gy, gx]
+                out_c.append(x0 + gx)
+                out_r.append(y0 + gy)
+                out_v.append(fill_cell(grid, gx, gy, x0, y0) if np.isnan(v) else v)
+        df = pd.DataFrame({"cell_col": out_c, "cell_row": out_r, "value": out_v})
+        df["value"] = df["value"].astype(float)
+        return df
+
+    return shipped.groupBy("tile_col", "tile_row").applyInPandas(
+        _fill, "cell_col long, cell_row long, value double"
     )
 
 
@@ -982,85 +1027,36 @@ def ring_fill_mean(
     size with any. The reference CLAMPS ring indices to the grid edge,
     double-counting border cells — reproduced. Tiled numpy with halo =
     max_size (the reference searches to size 1000; callers bound it)."""
-    import numpy as np
 
-    halo = int(max_size) + 1
-    t = max(tile, 2 * halo + 2)
-    shipped = tiles_with_halo(
-        raster.select("cell_col", "cell_row", F.col(value).alias("value")),
-        tile=t,
-        halo=halo,
-    )
+    def _ring(grid, gx, gy, x0, y0):
+        # reference ring loops in GLOBAL grid coords with clamping;
+        # replicate using absolute coords mapped into the (haloed) grid
+        col_abs, row_abs = x0 + gx, y0 + gy
+        w = grid.shape[0]
+        for size in range(1, max_size + 1):
+            tsum, n = 0.0, 0
+            for c_abs in range(max(0, col_abs - size), min(cols, col_abs + size + 1)):
+                for r_abs in (max(0, row_abs - size), min(rows - 1, row_abs + size)):
+                    vv = grid[r_abs - y0, c_abs - x0] if (
+                        0 <= c_abs - x0 < w and 0 <= r_abs - y0 < w
+                    ) else np.nan
+                    if not np.isnan(vv):
+                        tsum += vv
+                        n += 1
+            for r_abs in range(max(1, row_abs - size), min(rows, row_abs + size + 1)):
+                for c_abs in (max(0, col_abs - size), min(cols - 1, col_abs + size)):
+                    vv = grid[r_abs - y0, c_abs - x0] if (
+                        0 <= c_abs - x0 < w and 0 <= r_abs - y0 < w
+                    ) else np.nan
+                    if not np.isnan(vv):
+                        tsum += vv
+                        n += 1
+            if n > 0:
+                return tsum / n
+        return np.nan
 
-    def _fill(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tcol, trow = int(key[0]), int(key[1])
-        x0, y0 = tcol * t - halo, trow * t - halo
-        w = t + 2 * halo
-        grid = np.full((w, w), np.nan)
-        cc = pdf["cell_col"].to_numpy() - x0
-        rr = pdf["cell_row"].to_numpy() - y0
-        vals = pdf["value"].to_numpy(dtype=np.float64)
-        inb = (cc >= 0) & (cc < w) & (rr >= 0) & (rr < w)
-        grid[rr[inb], cc[inb]] = vals[inb]
-        out_c, out_r, out_v = [], [], []
-        for gy in range(halo, halo + t):
-            row_abs = y0 + gy
-            if row_abs < 0 or row_abs >= rows:
-                continue
-            for gx in range(halo, halo + t):
-                col_abs = x0 + gx
-                if col_abs < 0 or col_abs >= cols:
-                    continue
-                v = grid[gy, gx]
-                if np.isnan(v):
-                    # reference ring loops in GLOBAL grid coords with
-                    # clamping; replicate using absolute coords mapped
-                    # into the (haloed) local grid
-                    filled = np.nan
-                    for size in range(1, max_size + 1):
-                        tsum, n = 0.0, 0
-                        for c_abs in range(
-                            max(0, col_abs - size), min(cols, col_abs + size + 1)
-                        ):
-                            for r_abs in (
-                                max(0, row_abs - size),
-                                min(rows - 1, row_abs + size),
-                            ):
-                                vv = grid[r_abs - y0, c_abs - x0] if (
-                                    0 <= c_abs - x0 < w and 0 <= r_abs - y0 < w
-                                ) else np.nan
-                                if not np.isnan(vv):
-                                    tsum += vv
-                                    n += 1
-                        for r_abs in range(
-                            max(1, row_abs - size), min(rows, row_abs + size + 1)
-                        ):
-                            for c_abs in (
-                                max(0, col_abs - size),
-                                min(cols - 1, col_abs + size),
-                            ):
-                                vv = grid[r_abs - y0, c_abs - x0] if (
-                                    0 <= c_abs - x0 < w and 0 <= r_abs - y0 < w
-                                ) else np.nan
-                                if not np.isnan(vv):
-                                    tsum += vv
-                                    n += 1
-                        if n > 0:
-                            filled = tsum / n
-                            break
-                    v = filled
-                out_c.append(col_abs)
-                out_r.append(row_abs)
-                out_v.append(v)
-        df = pd.DataFrame({"cell_col": out_c, "cell_row": out_r, "value": out_v})
-        df["value"] = df["value"].astype(float)
-        return df
-
-    out = shipped.groupBy("tile_col", "tile_row").applyInPandas(
-        _fill, "cell_col long, cell_row long, value double"
-    )
-    return out.withColumn(
-        "value", F.when(F.isnan(F.col("value")), F.lit(None)).otherwise(F.col("value"))
+    return _fill_nodata(
+        raster, _ring, cols=cols, rows=rows, tile=tile, halo=int(max_size) + 1, value=value
     )
 
 
@@ -1087,64 +1083,26 @@ def void_fill_idw(
     Scale path: tiled NumPy with halo = max_radius (bounded, else the
     op degenerates to all-pairs). Dense rasters only.
     """
-    import numpy as np
-
     maxr = float(max_radius if max_radius is not None else radius * 4)
-    halo = int(math.ceil(maxr)) + 1
-    t = max(tile, 2 * halo + 2)
-    shipped = tiles_with_halo(
-        raster.select("cell_col", "cell_row", F.col(value).alias("value")),
-        tile=t,
-        halo=halo,
-    )
 
-    def _fill(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tcol, trow = int(key[0]), int(key[1])
-        x0, y0 = tcol * t - halo, trow * t - halo
-        w = t + 2 * halo
-        grid = np.full((w, w), np.nan)
-        cc = pdf["cell_col"].to_numpy() - x0
-        rr = pdf["cell_row"].to_numpy() - y0
-        vals = pdf["value"].to_numpy(dtype=np.float64)
-        inb = (cc >= 0) & (cc < w) & (rr >= 0) & (rr < w)
-        grid[rr[inb], cc[inb]] = vals[inb]
-        out_c, out_r, out_v = [], [], []
-        for gy in range(halo, halo + t):
-            row_abs = y0 + gy
-            if row_abs < 0 or row_abs >= rows:
-                continue
-            for gx in range(halo, halo + t):
-                col_abs = x0 + gx
-                if col_abs < 0 or col_abs >= cols:
-                    continue
-                v = grid[gy, gx]
-                filled = v
-                if np.isnan(v):
-                    rad = float(radius)
-                    filled = np.nan
-                    while rad <= maxr:
-                        d = rad * rad
-                        r0 = slice(max(0, gy - int(rad)), min(w, gy + int(rad) + 1))
-                        c0 = slice(max(0, gx - int(rad)), min(w, gx + int(rad) + 1))
-                        sub = grid[r0, c0]
-                        ry, rx = np.mgrid[r0, c0]
-                        d0 = (ry - gy) ** 2.0 + (rx - gx) ** 2.0
-                        m = (d0 <= d) & ~np.isnan(sub) & (d0 > 0)
-                        if int(m.sum()) >= count:
-                            dp = 1.0 / np.power(d0[m], exp)
-                            filled = float((dp * sub[m]).sum() / dp.sum())
-                            break
-                        rad += 1.0
-                out_c.append(col_abs)
-                out_r.append(row_abs)
-                out_v.append(filled)
-        df = pd.DataFrame({"cell_col": out_c, "cell_row": out_r, "value": out_v})
-        df["value"] = df["value"].astype(float)
-        return df
+    def _idw(grid, gx, gy, x0, y0):
+        w = grid.shape[0]
+        rad = float(radius)
+        while rad <= maxr:
+            d = rad * rad
+            r0 = slice(max(0, gy - int(rad)), min(w, gy + int(rad) + 1))
+            c0 = slice(max(0, gx - int(rad)), min(w, gx + int(rad) + 1))
+            sub = grid[r0, c0]
+            ry, rx = np.mgrid[r0, c0]
+            d0 = (ry - gy) ** 2.0 + (rx - gx) ** 2.0
+            m = (d0 <= d) & ~np.isnan(sub) & (d0 > 0)
+            if int(m.sum()) >= count:
+                dp = 1.0 / np.power(d0[m], exp)
+                return float((dp * sub[m]).sum() / dp.sum())
+            rad += 1.0
+        return np.nan
 
-    out = shipped.groupBy("tile_col", "tile_row").applyInPandas(
-        _fill, "cell_col long, cell_row long, value double"
-    )
-    return out.withColumn(
-        "value", F.when(F.isnan(F.col("value")), F.lit(None)).otherwise(F.col("value"))
+    return _fill_nodata(
+        raster, _idw, cols=cols, rows=rows, tile=tile,
+        halo=int(math.ceil(maxr)) + 1, value=value,
     )

@@ -49,7 +49,9 @@ def class_remap(points: DataFrame, mappings: Mapping[int, int], *, cls: str = "c
         cond = col == int(src)
         expr = F.when(cond, int(dst)) if expr is None else expr.when(cond, int(dst))
     out = col if expr is None else expr.otherwise(col)
-    return points.withColumn(cls, out.cast("int"))
+    return points.select(
+        *[out.cast("int").alias(c) if c == cls else F.col(c) for c in points.columns]
+    )
 
 
 def bucketed_time_intervals(
@@ -70,10 +72,10 @@ def bucketed_time_intervals(
     prev = F.lag(t).over(w)
     flag = F.when(prev.isNull() | ((F.col(t) - prev) > gap), 1).otherwise(0)
     sid = F.sum(flag).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    # _sid's window partitions by _b, so _b gets its own projection first
     return (
-        points.select(F.col(t))
-        .withColumn("_b", b)
-        .withColumn("_sid", sid)
+        points.select(F.col(t), b.alias("_b"))
+        .select(t, "_b", sid.alias("_sid"))
         .groupBy("_b", "_sid")
         .agg(F.min(t).alias("m_start"), F.max(t).alias("m_end"))
     )
@@ -148,9 +150,9 @@ def assign_flight_line(
         (F.col(t) >= F.col(start)) & (F.col(t) <= F.col(end)),
         "left",
     )
-    return (
-        j.withColumn("line_id", F.coalesce(F.col(seg_id), F.lit(0)).cast("long"))
-        .drop(seg_id, start, end)
+    return j.select(
+        *[F.col(c) for c in points.columns],
+        F.coalesce(F.col(seg_id), F.lit(0)).cast("long").alias("line_id"),
     )
 
 

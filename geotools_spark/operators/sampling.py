@@ -15,6 +15,7 @@ import os
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 #: default cap on driver-collected sample rows (~48 MB of float64 xyz)
 MAX_SAMPLE_ROWS = int(os.environ.get("GEOTOOLS_SPARK_MAX_SAMPLE_ROWS", "2000000"))
@@ -40,15 +41,30 @@ def collect_capped(
 def collect_sample_xyz(
     samples: DataFrame, cols: tuple[str, str, str], *, max_rows: int | None = None
 ) -> np.ndarray:
-    """Collect (x, y, z) sample rows to the driver, raising if the side
-    exceeds ``max_rows`` BEFORE materializing it all."""
-    cap = MAX_SAMPLE_ROWS if max_rows is None else int(max_rows)
-    rows = samples.select(*cols).limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise ValueError(
-            f"sample side exceeds the driver-collect cap ({cap} rows): "
-            "this operator solves a sample-sized dense system on the "
-            "driver by contract; pre-aggregate or tile the samples, or "
-            "raise GEOTOOLS_SPARK_MAX_SAMPLE_ROWS explicitly"
-        )
+    """Collect (x, y, z) sample rows to the driver through
+    :func:`collect_capped`."""
+    rows = collect_capped(samples, cols, max_rows=max_rows, what="sample side")
     return np.array([[r[0], r[1], r[2]] for r in rows], dtype=np.float64).reshape(-1, 3)
+
+
+def map_with_samples(
+    queries: DataFrame, samples: DataFrame, cols, out_col: str, evaluate, *, prepare=None
+) -> DataFrame:
+    """Collect the (x, y, z) ``samples`` with :func:`collect_sample_xyz`,
+    broadcast ``prepare(xyz)`` (the xyz array itself when ``prepare``
+    is None) and add the double column ``out_col`` =
+    ``evaluate(state, batch)`` to each Arrow batch of ``queries``."""
+    xyz = collect_sample_xyz(samples, cols)
+    bc = queries.sparkSession.sparkContext.broadcast(
+        xyz if prepare is None else prepare(xyz)
+    )
+    schema = StructType([*queries.schema.fields, StructField(out_col, DoubleType())])
+
+    def _map(batches):
+        state = bc.value
+        for pdf in batches:
+            out = pdf.copy()
+            out[out_col] = evaluate(state, pdf)
+            yield out
+
+    return queries.mapInPandas(_map, schema)

@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from geotools_spark.functions.cells import cell_cols, window_offsets
 from geotools_spark.functions.geometry import (
@@ -40,7 +41,10 @@ from geotools_spark.functions.geometry import (
     tin_interpolate,
 )
 from geotools_spark.operators.partitioning import cpu_partition
-from geotools_spark.operators.raster import tiles_with_halo
+from geotools_spark.operators.raster import HaloTiles
+
+#: most salted sub-groups one hot cell of normalize_heights splits into
+MAX_SPLITS = 32
 
 
 def normalize_heights(
@@ -55,7 +59,6 @@ def normalize_heights(
     z: str = "z",
     cls: str = "cls",
     split_target: int | None = None,
-    max_splits: int = 32,
 ) -> DataFrame:
     """M6/M7 (pointnormalize): subtract the TIN-of-ground surface from
     every non-ground point's z, clamped at 0 (src/pointnormalize.cpp:
@@ -81,7 +84,7 @@ def normalize_heights(
     detection probe gated on a >=4 GiB Catalyst size estimate — see
     the inline comment; passing an explicit value always probes) is
     split into
-    ``ceil(count / split_target)`` (capped at ``max_splits``) salted
+    ``ceil(count / split_target)`` (capped at ``MAX_SPLITS``) salted
     sub-groups; each sub-group carries a FULL copy of the cell's
     ground halo and re-triangulates it, so the TIN every sub-group
     interpolates against is identical to the unsplit one and the
@@ -109,27 +112,6 @@ def normalize_heights(
     nong = points.filter(F.col(cls) != ground_cls).select(
         "*", home_c.alias("_cell_c"), home_r.alias("_cell_r")
     )
-    fields = [f for f in points.schema.fields if not f.name.startswith("_cell")]
-    out_cols = [f.name for f in fields]
-    p2 = nong.select(
-        *out_cols,
-        "_cell_c",
-        "_cell_r",
-        F.lit(False).alias("_is_g"),
-        F.lit(None).cast("double").alias("_gx"),
-        F.lit(None).cast("double").alias("_gy"),
-        F.lit(None).cast("double").alias("_gz"),
-    )
-    g3 = ground.select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields],
-        "_cell_c",
-        "_cell_r",
-        F.lit(True).alias("_is_g"),
-        "_gx",
-        "_gy",
-        "_gz",
-    )
-
     # Hot-cell split (VERDICT r04 #2): a PROBE job counts non-ground
     # points per cell and collects the cells exceeding split_target — a
     # bounded driver-side scalar set like the variogram size probe.
@@ -164,13 +146,14 @@ def normalize_heights(
             .agg(
                 F.least(
                     F.ceil(F.count(F.lit(1)) / F.lit(int(target))),
-                    F.lit(int(max_splits)),
+                    F.lit(MAX_SPLITS),
                 ).cast("int").alias("_k")
             )
             .filter(F.col("_k") > 1)
             .limit(max_hot_cells)
             .collect()
         )
+    salt_p = salt_g = F.lit(0)
     if hot_rows:
         spark = points.sparkSession
         hot = F.broadcast(
@@ -179,38 +162,47 @@ def normalize_heights(
                 "_cell_c long, _cell_r long, _k int",
             )
         )
-        p2 = p2.join(hot, ["_cell_c", "_cell_r"], "left").withColumn(
-            "_salt",
-            F.when(F.col("_k").isNull(), F.lit(0)).otherwise(
-                F.pmod(F.xxhash64(F.col(x), F.col(y), F.col(z)), F.col("_k"))
-            ).cast("int"),
-        ).drop("_k")
-        g3 = (
-            g3.join(hot, ["_cell_c", "_cell_r"], "left")
-            .withColumn(
-                "_salt",
-                F.explode(
-                    F.sequence(F.lit(0), F.coalesce(F.col("_k"), F.lit(1)) - 1)
-                ),
-            )
-            .withColumn("_salt", F.col("_salt").cast("int"))
-            .drop("_k")
-        )
-    else:
-        p2 = p2.withColumn("_salt", F.lit(0))
-        g3 = g3.withColumn("_salt", F.lit(0))
+        nong = nong.join(hot, ["_cell_c", "_cell_r"], "left")
+        ground = ground.join(hot, ["_cell_c", "_cell_r"], "left")
+        k = F.col("_k")
+        salt_p = F.when(k.isNull(), F.lit(0)).otherwise(
+            F.pmod(F.xxhash64(F.col(x), F.col(y), F.col(z)), k)
+        ).cast("int")
+        salt_g = F.explode(F.sequence(F.lit(0), F.coalesce(k, F.lit(1)) - 1))
 
+    fields = [f for f in points.schema.fields if not f.name.startswith("_cell")]
+    out_cols = [f.name for f in fields]
+    p2 = nong.select(
+        *out_cols,
+        "_cell_c",
+        "_cell_r",
+        F.lit(False).alias("_is_g"),
+        F.lit(None).cast("double").alias("_gx"),
+        F.lit(None).cast("double").alias("_gy"),
+        F.lit(None).cast("double").alias("_gz"),
+        salt_p.alias("_salt"),
+    )
+    g3 = ground.select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields],
+        "_cell_c",
+        "_cell_r",
+        F.lit(True).alias("_is_g"),
+        "_gx",
+        "_gy",
+        "_gz",
+        salt_g.alias("_salt"),
+    )
     both = p2.unionByName(g3)
-    schema_out = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in nong.schema.fields if not f.name.startswith("_")
-    ) + ", z_norm double"
+    out_fields = [f for f in fields if not f.name.startswith("_")]
+    names = [f.name for f in out_fields]
+    schema_out = StructType([*out_fields, StructField("z_norm", DoubleType())])
 
     def _norm(pdf: pd.DataFrame) -> pd.DataFrame:
         g = pdf[pdf["_is_g"]]
         p = pdf[~pdf["_is_g"]]
         if len(p) == 0:
-            return pd.DataFrame(columns=[c for c in out_cols if not c.startswith("_")] + ["z_norm"])
-        res_df = p[[c for c in out_cols if not c.startswith("_")]].copy()
+            return pd.DataFrame(columns=[*names, "z_norm"])
+        res_df = p[names].copy()
         if len(g) >= 3:
             ground_xyz = np.column_stack(
                 [g["_gx"].to_numpy(), g["_gy"].to_numpy(), g["_gz"].to_numpy()]
@@ -230,11 +222,8 @@ def normalize_heights(
         return res_df
 
     both = cpu_partition(both, "_cell_c", "_cell_r", "_salt")
-    out = both.groupBy("_cell_c", "_cell_r", "_salt").applyInPandas(
+    return both.groupBy("_cell_c", "_cell_r", "_salt").applyInPandas(
         lambda _, pdf: _norm(pdf), schema_out
-    )
-    return out.withColumn(
-        "z_norm", F.when(F.isnan("z_norm"), F.lit(None)).otherwise(F.col("z_norm"))
     )
 
 
@@ -281,7 +270,7 @@ def planar_interpolate(
         + (F.col(qx) - F.lit(cx)) * F.lit(a1)
         + (F.col(qy) - F.lit(cy)) * F.lit(a2)
     )
-    return queries.withColumn("plane_z", val)
+    return queries.select("*", val.alias("plane_z"))
 
 
 def validate_stations(
@@ -345,10 +334,7 @@ def validate_stations(
         .groupBy("qid")
         .applyInPandas(_station, "qid long, qz double, n_returns int, interp_z double")
     )
-    interp = F.when(F.isnan("interp_z"), F.lit(None)).otherwise(F.col("interp_z"))
-    found = out.select(
-        "qid", "n_returns", interp.alias("interp_z")
-    )
+    found = out.select("qid", "n_returns", "interp_z")
     # every station gets a row (the reference writes one per survey
     # point): stations with zero in-radius returns report n_returns=0
     # and NULL interp_z/dz instead of vanishing from the inner join
@@ -441,45 +427,38 @@ def simple_kriging(
     same weights, same result, none of the per-cell inversions.
     The variogram model params come in explicitly (the reference asks
     a Qt dialog)."""
-    from geotools_spark.operators.sampling import collect_sample_xyz
+    from geotools_spark.operators.sampling import map_with_samples
 
-    pts = collect_sample_xyz(samples, (sx, sy, sz))
-    n = len(pts)
     mfun = _vario_model(model)
-    dmat = np.sqrt(
-        (pts[:, 0][:, None] - pts[:, 0][None, :]) ** 2
-        + (pts[:, 1][:, None] - pts[:, 1][None, :]) ** 2
+
+    def factor(pts):
+        n = len(pts)
+        dmat = np.sqrt(
+            (pts[:, 0][:, None] - pts[:, 0][None, :]) ** 2
+            + (pts[:, 1][:, None] - pts[:, 1][None, :]) ** 2
+        )
+        A = np.zeros((n + 1, n + 1))
+        A[:n, :n] = mfun(dmat, nugget, sill, vrange)
+        A[n, :n] = 1.0
+        A[:n, n] = 1.0
+        return pts, np.linalg.inv(A)
+
+    def krige(state, pdf):
+        spts, sAi = state
+        qxv = pdf[qx].to_numpy(dtype=np.float64)
+        qyv = pdf[qy].to_numpy(dtype=np.float64)
+        d = np.sqrt(
+            (qxv[:, None] - spts[:, 0][None, :]) ** 2
+            + (qyv[:, None] - spts[:, 1][None, :]) ** 2
+        )
+        b = np.ones((len(pdf), len(spts) + 1))
+        b[:, :-1] = mfun(d, nugget, sill, vrange)
+        w = b @ sAi.T  # (nq, n+1); last col = Lagrangian, ignored
+        return w[:, :-1] @ spts[:, 2]
+
+    return map_with_samples(
+        queries, samples, (sx, sy, sz), "kriged", krige, prepare=factor
     )
-    A = np.zeros((n + 1, n + 1))
-    A[:n, :n] = mfun(dmat, nugget, sill, vrange)
-    A[n, :n] = 1.0
-    A[:n, n] = 1.0
-    Ai = np.linalg.inv(A)
-    spark = samples.sparkSession
-    bc = spark.sparkContext.broadcast((pts, Ai, nugget, sill, vrange, model))
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in queries.schema.fields
-    ) + ", kriged double"
-
-    def _krige(batches):
-        spts, sAi, snug, ssill, srng, smodel = bc.value
-        sm = _vario_model(smodel)
-        zs = spts[:, 2]
-        for pdf in batches:
-            qxv = pdf[qx].to_numpy(dtype=np.float64)
-            qyv = pdf[qy].to_numpy(dtype=np.float64)
-            d = np.sqrt(
-                (qxv[:, None] - spts[:, 0][None, :]) ** 2
-                + (qyv[:, None] - spts[:, 1][None, :]) ** 2
-            )
-            b = np.ones((len(pdf), len(spts) + 1))
-            b[:, :-1] = sm(d, snug, ssill, srng)
-            w = b @ sAi.T  # (nq, n+1); last col = Lagrangian, ignored
-            out = pdf.copy()
-            out["kriged"] = w[:, :-1] @ zs
-            yield out
-
-    return queries.mapInPandas(_krige, out_schema)
 
 
 def boundary_edges(
@@ -568,9 +547,9 @@ def boundary_edges(
 
         return centers.select("px", "py").coalesce(1).mapInPandas(_edges, out_schema)
 
-    halo = int(np.ceil(max_edge / res)) + 1
-    t = tile_cells if tile_cells > halo else 2 * halo
-    shipped = tiles_with_halo(centers, tile=t, halo=halo, value="px", extra=("py",)).select(
+    tiles = HaloTiles(tile_cells, int(np.ceil(max_edge / res)) + 1)
+    t = tiles.tile
+    shipped = tiles.ship(centers, value="px", extra=("py",)).select(
         "tile_col",
         "tile_row",
         F.col("value").alias("px"),

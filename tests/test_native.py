@@ -68,3 +68,56 @@ def test_foreign_library_refused(cache, monkeypatch, tamper):
         before.st_uid, before.st_mode, before.st_mtime_ns,
     )
     assert all(o == native_out for o in outs)
+
+
+def test_ivf_index_cache_is_owner_checked(spark, cache, monkeypatch, capsys):
+    """The ann_ivf query keeps its IVF index under the owner-checked
+    cache dir; an index dir it may not trust is never read — the query
+    falls back to the in-memory path, which returns the same rows."""
+    import __spark_entry__ as entry_mod
+    from geotools_spark.operators import similarity
+
+    query = entry_mod.queries()["ann_ivf"]
+    sf = entry_mod.SF0001
+    indexed = sorted(query(spark, sf).collect())
+    (idx,) = [p for p in cache.iterdir() if p.name.startswith("ivf_")]
+    assert (idx / "_centroids.json").exists()
+    assert stat.S_IMODE(os.stat(cache).st_mode) == 0o700
+
+    if os.getuid() == 0:
+        os.chown(idx, 12345, 12345)
+    else:
+        os.chmod(idx, 0o777)
+    served = []
+    real = similarity.ivf_ann_topk_indexed
+
+    def spy(spark_, path, *a, **kw):
+        served.append(path)
+        return real(spark_, path, *a, **kw)
+
+    monkeypatch.setattr(similarity, "ivf_ann_topk_indexed", spy)
+    capsys.readouterr()
+    fallback = sorted(query(spark, sf).collect())
+    assert served == []
+    assert "in-memory fallback" in capsys.readouterr().err
+    assert fallback == indexed
+
+
+def test_ivf_index_cache_tracks_a_single_file_source(spark, cache, tmp_path):
+    """The index cache key fingerprints the embeddings source even when
+    it is one parquet file, not a directory: rewriting the file builds
+    a fresh index instead of serving the old one."""
+    import shutil
+
+    import __spark_entry__ as entry_mod
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = sf / "embeddings.parquet"
+    shutil.copy(f"{entry_mod.SF0001}/embeddings.parquet", src)
+    query = entry_mod.queries()["ann_ivf"]
+    first = sorted(query(spark, str(sf)).collect())
+    st = src.stat()
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert sorted(query(spark, str(sf)).collect()) == first
+    assert len([p for p in cache.iterdir() if p.name.startswith("ivf_")]) == 2

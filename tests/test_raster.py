@@ -158,12 +158,14 @@ def test_gaussian_smooth_tiled_equals_explode(spark):
     a = collect_grid(
         gaussian_smooth(df, sigma=1.1, size=5, cols=COLS, rows=ROWS), "smoothed", g.shape
     )
-    b = collect_grid(
-        gaussian_smooth_tiled(df, sigma=1.1, size=5, cols=COLS, rows=ROWS, tile=8),
-        "smoothed",
-        g.shape,
-    )
-    assert np.allclose(np.nan_to_num(a, nan=-1), np.nan_to_num(b, nan=-1), atol=1e-9)
+    # tile=2 is narrower than the size-5 halo: the tile grows to 2*halo
+    for tile in (8, 2):
+        b = collect_grid(
+            gaussian_smooth_tiled(df, sigma=1.1, size=5, cols=COLS, rows=ROWS, tile=tile),
+            "smoothed",
+            g.shape,
+        )
+        assert np.allclose(np.nan_to_num(a, nan=-1), np.nan_to_num(b, nan=-1), atol=1e-9)
 
 
 def test_local_maxima_matches_oracle(spark):
@@ -355,6 +357,11 @@ def test_void_fill_idw(spark):
         "value",
         g.shape,
     )
+    # the tile size only changes the partitioning, never a value
+    default = collect_grid(
+        void_fill_idw(df, radius=2.0, count=3, exp=1.0, cols=10, rows=10), "value", g.shape
+    )
+    assert np.array_equal(out, default, equal_nan=True)
     assert out[5, 5] == pytest.approx(7.0)
     assert out[0, 9] == pytest.approx(7.0)
     # valid cells unchanged
@@ -404,6 +411,29 @@ def test_ring_fill_matches_oracle(spark):
     assert np.allclose(
         np.nan_to_num(out, nan=-1), np.nan_to_num(want, nan=-1), atol=1e-9
     )
+    default = collect_grid(
+        ring_fill_mean(df, cols=COLS, rows=ROWS, max_size=8), "value", g.shape
+    )
+    assert np.array_equal(out, default, equal_nan=True)
+
+
+def test_unfillable_cells_come_back_null(spark):
+    """A cell no fill reaches is NULL, not NaN: the kernels return NaN
+    and the Arrow hop out of applyInPandas turns it into NULL."""
+    from geotools_spark.operators.raster import ring_fill_mean
+
+    g = np.full((12, 12), np.nan)
+    g[0, 0] = 5.0  # the only valid cell: far cells are out of every reach
+    df = to_df(spark, g)
+    for out in (
+        ring_fill_mean(df, cols=12, rows=12, tile=4, max_size=2),
+        void_fill_idw(df, radius=1.0, count=1, exp=1.0, cols=12, rows=12, tile=4),
+    ):
+        assert out.count() == 144
+        assert out.filter(F.isnan("value")).count() == 0
+        nulls = {(r.cell_col, r.cell_row) for r in out.filter(F.col("value").isNull()).collect()}
+        assert (11, 11) in nulls and (0, 0) not in nulls
+        assert out.filter(F.col("value").isNotNull()).count() == 144 - len(nulls)
 
 
 def test_spill_points_matches_quadruple_loop(spark):

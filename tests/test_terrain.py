@@ -404,8 +404,43 @@ def test_normalize_heights_split_parity(spark):
     plain = {r.pid: r.z_norm for r in normalize_heights(df, res=10.0, rings=1).collect()}
     split = {
         r.pid: r.z_norm
-        for r in normalize_heights(
-            df, res=10.0, rings=1, split_target=20, max_splits=8
-        ).collect()
+        for r in normalize_heights(df, res=10.0, rings=1, split_target=20).collect()
     }
     assert plain == split  # bit-identical incl. NULL pattern
+
+
+@pytest.mark.parametrize("op", ["kriging", "natural_neighbour", "normalize_heights"])
+def test_output_schema_keeps_column_names_verbatim(spark, op):
+    """A pass-through column whose name is not a bare SQL identifier
+    reaches the output under the same name and with its values."""
+    from geotools_spark.operators.interpolate import interpolate
+
+    rs = np.random.RandomState(7)
+    xy = rs.uniform(0, 20, (40, 2))
+    if op == "normalize_heights":
+        rows = [
+            (i, float(a), float(b), 10.0 + 5.0 * (i % 2), 1 + (i + 1) % 2, i % 3)
+            for i, (a, b) in enumerate(xy)
+        ]
+        df = spark.createDataFrame(
+            rows, "pid int, x double, y double, z double, cls int, `grid id` int"
+        )
+        out = normalize_heights(df, res=10.0, rings=1)
+        key = "pid"
+    else:
+        samples = spark.createDataFrame(
+            [(float(a), float(b), float(3.0 + 0.4 * a - 0.25 * b)) for a, b in xy],
+            "x double, y double, z double",
+        )
+        queries = spark.createDataFrame(
+            [(0, 5.0, 5.0, 0), (1, 10.0, 10.0, 1), (2, 15.0, 7.0, 2)],
+            "qid long, qx double, qy double, `grid id` int",
+        )
+        if op == "kriging":
+            out = simple_kriging(samples, queries, nugget=0.0, sill=10.0, vrange=20.0)
+        else:
+            out = interpolate("natural_neighbour", queries, samples)
+        key = "qid"
+    assert "grid id" in out.columns
+    got = out.collect()
+    assert got and all(r["grid id"] == r[key] % 3 for r in got)
