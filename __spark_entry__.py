@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from geotools_spark.functions.cells import with_cell
 from geotools_spark.operators import gridstats
+from geotools_spark.operators.sampling import local_frame
 from geotools_spark.operators.spans import (
     POINT_SEP,
     explode_spans,
@@ -305,7 +306,7 @@ def _polygons_df(spark: SparkSession) -> DataFrame:
         (pid, [{"x": float(x), "y": float(y)} for x, y in ring])
         for pid, ring in _PIP_POLYGONS
     ]
-    return spark.createDataFrame(rows, "poly_id int, ring array<struct<x:double,y:double>>")
+    return local_frame(spark, rows, "poly_id int, ring array<struct<x:double,y:double>>")
 
 
 def _q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,7 +750,7 @@ def _q_coregister(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shifts = coregister_shifts(pair, root="a")
     rows = [(k, round(v, 6)) for k, v in sorted(shifts.items())]
-    return spark.createDataFrame(rows, "raster_id string, shift double")
+    return local_frame(spark, rows, "raster_id string, shift double")
 
 
 def _q_raster_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1358,6 +1359,21 @@ def _q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frames.join(pf, "media_ref", "inner").join(emb, "media_ref", "inner")
 
 
+def _prune_ivf_siblings(cache: str, prefix: str, keep: str) -> None:
+    """Remove the IVF indexes in ``cache`` that ``keep`` supersedes:
+    ``<prefix><hex fingerprint>`` directories of the same sf, built from
+    an older version of its source. Indexes of other sfs stay."""
+    import os
+    import re
+    import shutil
+
+    stale = re.compile(re.escape(prefix) + "[0-9a-f]+")
+    for name in os.listdir(cache):
+        path = os.path.join(cache, name)
+        if stale.fullmatch(name) and path != keep and os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+
+
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN served from a MATERIALIZED cell-partitioned index: the
     probe scan reads only the nprobe nearest cell partitions
@@ -1413,12 +1429,12 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # the index lives in the per-user 0700 cache: a directory another
         # user owns (or can write into) is refused, never served
-        idx = _native.owned_dir(os.path.join(
-            _native.owned_dir(_native.CACHE_DIR),
-            f"ivf_{os.path.basename(sf_dir.rstrip('/'))}_{fp:x}",
-        ))
+        cache = _native.owned_dir(_native.CACHE_DIR)
+        prefix = f"ivf_{os.path.basename(sf_dir.rstrip('/'))}_"
+        idx = _native.owned_dir(os.path.join(cache, f"{prefix}{fp:x}"))
         if not os.path.exists(os.path.join(idx, "_centroids.json")):
             build_ivf_index(emb, idx, nlist=8)
+            _prune_ivf_siblings(cache, prefix, keep=idx)
         out = ivf_ann_topk_indexed(spark, idx, qvec, k=20, nprobe=3)
     except Exception as e:  # noqa: BLE001 — index dir unusable in ANY
         # way (perms, disk full, reaped part-files -> AnalysisException,

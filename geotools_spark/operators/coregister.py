@@ -23,14 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sampling import collect_capped, local_frame
+
 
 def coregister_shifts(diff_stats: DataFrame, *, root: str) -> dict[str, float]:
     """diff_stats: (rid0, rid1, count, mean) with rid0 < rid1 in sort
     order and mean = mean(value(rid0) - value(rid1)) over the overlap.
     Returns {raster_id: z_shift}; the root shifts 0; greedy-unreachable
     nodes are absent (reference: chain is None -> skipped)."""
-    from .sampling import collect_capped
-
     # aggregated pair table is O(#rasters^2) by contract; capped so a
     # mis-wired un-aggregated input raises instead of flooding the driver
     rows = collect_capped(
@@ -76,9 +76,10 @@ def apply_shifts(points: DataFrame, shifts: dict[str, float], *, raster_col: str
     """las2las z-translate step: z + shift per source raster; points
     from rasters without a chain pass through unshifted (reference
     skips them)."""
-    spark = points.sparkSession
-    sdf = spark.createDataFrame(
-        [(k, float(v)) for k, v in shifts.items()], f"{raster_col} string, _shift double"
+    sdf = local_frame(
+        points.sparkSession,
+        [(k, float(v)) for k, v in shifts.items()],
+        f"{raster_col} string, _shift double",
     )
     j = points.join(F.broadcast(sdf), raster_col, "left")
     shifted = F.col(z) + F.coalesce(F.col("_shift"), F.lit(0.0))

@@ -75,7 +75,7 @@ def tree_crowns(
     mh = float(min_height)
     frac = float(height_fraction)
 
-    def _grow(key, rast_pdf: pd.DataFrame, tops_pdf: pd.DataFrame) -> pd.DataFrame:
+    def _grow(key, rast_pdf, tops_pdf):
         val, x0, y0 = tiles.grid(
             key, rast_pdf, rast_pdf["value"].to_numpy(dtype=np.float64), np.nan
         )

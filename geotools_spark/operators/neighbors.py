@@ -27,6 +27,8 @@ from pyspark.sql.window import Window
 
 from geotools_spark.functions.cells import cell_cols, window_offsets
 
+from .partitioning import spread
+
 
 def radius_cell_join(
     points: DataFrame,
@@ -89,20 +91,15 @@ def knn_join(
     ``knn_rank`` column. Only for callers that neither read the rank
     nor depend on per-query candidate order.
     """
-    # The probe side inherits the scan's partitioning (often just a few
-    # parquet row groups), but the join FANS OUT ~rings^2 matches per
-    # sample and the per-partition WindowGroupLimit sorts that output in
-    # the same stage — so spread the cheap input BEFORE the fan-out or
-    # three tasks end up sorting the whole candidate set.  Partition
-    # count is sized from Catalyst's byte estimate times the fan-out
-    # multiplier (a fixed parallelism*2 under-partitions at 100x).
-    from .partitioning import fanout_partitions
-
-    par = fanout_partitions(samples, multiplier=float((2 * rings + 1) ** 2))
+    # A small query side is broadcast by the planner; the sample side
+    # stays where the scan put it, and the plan's partial
+    # WindowGroupLimit cuts each task's candidates to k per query before
+    # the qid exchange. A round-robin shuffle of the samples would only
+    # cost, so ``spread`` repartitions only an input narrower than the
+    # cluster (a single-row-group file scans as ONE task, which would
+    # then sort the whole fan-out alone).
     scol, srow = cell_cols(F.col(sx), F.col(sy), minx=0.0, miny=0.0, res=res)
-    s = samples.repartition(par).select(
-        "*", scol.alias("scell_col"), srow.alias("scell_row")
-    )
+    s = spread(samples).select("*", scol.alias("scell_col"), srow.alias("scell_row"))
     # the query cell is keyed once per query, before the window explode
     qcol, qrow = cell_cols(F.col(qx), F.col(qy), minx=0.0, miny=0.0, res=res)
     qe = (

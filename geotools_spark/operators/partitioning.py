@@ -69,41 +69,6 @@ def plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-
-def _parse_bytes(v) -> int:
-    """Spark byte-size conf strings: '64MB', '64m', '67108864'."""
-    try:
-        s = str(v).strip().lower().removesuffix("b")
-        if s and s[-1] in _UNITS:
-            return int(float(s[:-1]) * _UNITS[s[-1]])
-        return int(s)
-    except Exception:
-        return 64 * 1024 * 1024
-
-
-def fanout_partitions(
-    df: DataFrame, *, multiplier: float = 1.0, max_factor: int = 8
-) -> int:
-    """Partition count for a stage about to FAN OUT ``df`` by
-    ``multiplier`` (e.g. a (2*rings+1)^2 neighbor-cell explode): sized
-    from Catalyst's byte estimate against the AQE advisory partition
-    size, clamped to [parallelism, parallelism * max_factor].  A fixed
-    ``parallelism * k`` under-partitions big inputs at 100x and
-    over-partitions tiny ones; bytes-based sizing tracks the input."""
-    spark = df.sparkSession
-    par = default_parallelism(spark)
-    size = plan_size_bytes(df)
-    if size is None:
-        return par * 2  # Connect / no stats: the old fixed heuristic
-    advisory = _parse_bytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-    )
-    want = int(size * float(multiplier) // max(advisory, 1)) + 1
-    return max(par, min(want, par * max_factor))
-
-
 def cpu_partition(df: DataFrame, *keys: str, factor: int = 2) -> DataFrame:
     """Hash-repartition on ``keys`` to ``factor`` x cluster parallelism
     so a downstream Python-heavy groupBy runs one task per core with a

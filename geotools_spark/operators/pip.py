@@ -11,33 +11,36 @@ Spark-first design for 100 TB:
   broadcast — the point side joins on the grid cell key, so candidate
   generation is a broadcast HASH join (no nested-loop scan of every
   polygon per point, which is what the reference does).
-- the exact even-odd ray-cast runs only on candidates, vectorized in
-  NumPy inside an Arrow pandas UDF (points x edges per polygon batch).
-  Shapely is intentionally not required.
+- the exact even-odd ray-cast runs only on candidates that pass the
+  polygon's bbox, as one Catalyst predicate over the polygon's edge
+  array (a second broadcast table, one row per polygon): the whole
+  join runs in the JVM, with no Python worker. Shapely is
+  intentionally not required.
 
 The crossing rule — edge (x1,y1)-(x2,y2) crosses the +x ray from
 (px,py) iff ``(y1 > py) != (y2 > py)`` and
-``px < (x2-x1)*(py-y1)/(y2-y1) + x1`` — is the same formula the DuckDB
-oracle SQL evaluates, so cross-engine results are bit-identical.
+``px < (x2-x1)*(py-y1)/(y2-y1) + x1`` — is the same formula, with the
+same operations in the same order, as the DuckDB oracle SQL, so
+cross-engine results are bit-identical. The division sits in the
+branch of a ``CASE`` on the straddle test, so a horizontal edge
+(``y1 == y2``) never divides and ANSI mode cannot raise on it.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from geotools_spark.functions.cells import cell_cols, cell_of
+
+from .sampling import collect_capped, local_frame
 
 
 def _collect_rings(polygons: DataFrame) -> dict[int, np.ndarray]:
     """Driver-side collect of the (small-by-contract) polygon table ->
     ring arrays, capped so a mis-sized polygon side raises instead of
     flooding the driver (same guard as sampling.collect_sample_xyz)."""
-    from .sampling import collect_capped
-
     rings: dict[int, np.ndarray] = {}
     for row in collect_capped(
         polygons, ("poly_id", "ring"), what="polygon side"
@@ -51,8 +54,8 @@ def _collect_rings(polygons: DataFrame) -> dict[int, np.ndarray]:
 def _covering_cells(rings: dict[int, np.ndarray], res: float):
     """bbox-covering cells per polygon (over-approximation; exact test
     follows), each carrying the polygon's exact bbox so a codegen-side
-    range filter can reject candidates BEFORE the Arrow hop into the
-    ray-cast UDF. This is the engine's replacement for the R-tree: a
+    range filter can reject candidates BEFORE the edges are joined and
+    ray-cast. This is the engine's replacement for the R-tree: a
     broadcastable equi-join key plus the R-tree's bbox test."""
     out = []
     for pid, ring in rings.items():
@@ -66,17 +69,30 @@ def _covering_cells(rings: dict[int, np.ndarray], res: float):
     return out
 
 
-def ray_cast(xs: np.ndarray, ys: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Vectorized even-odd point-in-polygon over one ring."""
-    x1, y1 = ring[:-1, 0], ring[:-1, 1]
-    x2, y2 = ring[1:, 0], ring[1:, 1]
-    px = xs[:, None]
-    py = ys[:, None]
-    straddle = (y1[None, :] > py) != (y2[None, :] > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = (x2 - x1)[None, :] * (py - y1[None, :]) / (y2 - y1)[None, :] + x1[None, :]
-    crossings = straddle & (px < xint)
-    return (crossings.sum(axis=1) % 2).astype(bool)
+def _edge_rows(rings: dict[int, np.ndarray]):
+    """One (poly_id, edges) row per polygon, each edge a consecutive
+    vertex pair of the closed ring."""
+    return [
+        (pid, [
+            {"x1": float(x1), "y1": float(y1), "x2": float(x2), "y2": float(y2)}
+            for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:])
+        ])
+        for pid, ring in rings.items()
+    ]
+
+
+def inside_expr(px: Column, py: Column, edges: Column) -> Column:
+    """Even-odd test of (px, py) against ``edges``
+    (array<struct<x1,y1,x2,y2>>): an odd number of edges cross the +x
+    ray."""
+
+    def crosses(e):
+        return F.when(
+            (e["y1"] > py) != (e["y2"] > py),
+            px < (e["x2"] - e["x1"]) * (py - e["y1"]) / (e["y2"] - e["y1"]) + e["x1"],
+        ).otherwise(F.lit(False))
+
+    return F.size(F.filter(edges, crosses)) % 2 == 1
 
 
 def pip_join(
@@ -109,23 +125,17 @@ def pip_join(
         raise ValueError(f"points carries pip-internal column names: {sorted(reserved)}")
     spark = points.sparkSession
     rings = _collect_rings(polygons)
-    cand = spark.createDataFrame(
+    cand = local_frame(
+        spark,
         _covering_cells(rings, res),
         "pcell_col long, pcell_row long, poly_id int, "
         "_bxmin double, _bymin double, _bxmax double, _bymax double",
     )
-    bc_rings = spark.sparkContext.broadcast({k: v for k, v in rings.items()})
-
-    @F.pandas_udf(BooleanType())
-    def inside_udf(xs: pd.Series, ys: pd.Series, pids: pd.Series) -> pd.Series:
-        xv = xs.to_numpy(dtype=np.float64)
-        yv = ys.to_numpy(dtype=np.float64)
-        pv = pids.to_numpy()
-        out = np.zeros(len(xv), dtype=bool)
-        for pid in np.unique(pv):
-            mask = pv == pid
-            out[mask] = ray_cast(xv[mask], yv[mask], bc_rings.value[int(pid)])
-        return pd.Series(out)
+    edges = local_frame(
+        spark,
+        _edge_rows(rings),
+        "poly_id int, _edges array<struct<x1:double,y1:double,x2:double,y2:double>>",
+    )
 
     pcol, prow = cell_cols(F.col(x), F.col(y), minx=0.0, miny=0.0, res=res)
     pts = points.select("*", pcol.alias("pcell_col"), prow.alias("pcell_row"))
@@ -134,16 +144,18 @@ def pip_join(
     )
     # exact-bbox rejection in whole-stage codegen: a point outside the
     # polygon's closed bbox can never be inside it, so this prunes the
-    # Arrow batch volume into the ray-cast UDF (the coarse cell grid
-    # over-approximates by up to res on every side)
+    # rows that join the edge table and run the ray-cast (the coarse
+    # cell grid over-approximates by up to res on every side)
     candidates = candidates.filter(
         (F.col(x) >= F.col("_bxmin"))
         & (F.col(x) <= F.col("_bxmax"))
         & (F.col(y) >= F.col("_bymin"))
         & (F.col(y) <= F.col("_bymax"))
     )
-    inside = candidates.filter(inside_udf(F.col(x), F.col(y), F.col("poly_id"))).drop(
-        "pcell_col", "pcell_row", "_bxmin", "_bymin", "_bxmax", "_bymax"
+    inside = (
+        candidates.join(F.broadcast(edges), "poly_id", "inner")
+        .filter(inside_expr(F.col(x), F.col(y), F.col("_edges")))
+        .select(*points.columns, "poly_id")
     )
     if how == "inner":
         return inside

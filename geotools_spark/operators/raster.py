@@ -337,7 +337,7 @@ def feather(
         for s in range(n_peel)
     ]
 
-    def _peel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _peel(key, pdf):
         # presence, not values: a NaN (non-NULL) cell is valid
         valid, x0, y0 = tiles.grid(key, pdf, True, False)
         w = tiles.width
@@ -584,7 +584,7 @@ def flood_label(
         raster.filter(predicate).select("cell_col", "cell_row", F.lit(1.0).alias("value"))
     )
 
-    def _local_label(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _local_label(key, pdf):
         # Vectorized min-label propagation with pointer compression (no
         # per-cell Python dict union-find): each round takes the min
         # over neighbors, then follows the label indirection twice —
@@ -948,7 +948,7 @@ def gaussian_smooth_tiled(
     t = tiles.tile
     shipped = tiles.ship(raster.select("cell_col", "cell_row", F.col(value).alias("value")))
 
-    def _conv(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _conv(key, pdf):
         grid, x0, y0 = tiles.grid(key, pdf, pdf["value"].to_numpy(dtype=np.float64), np.nan)
         # vectorized stacked-shift convolution over the core block; a
         # NaN anywhere in a window propagates to NaN, which is exactly
@@ -990,7 +990,7 @@ def _fill_nodata(
     t = tiles.tile
     shipped = tiles.ship(raster.select("cell_col", "cell_row", F.col(value).alias("value")))
 
-    def _fill(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _fill(key, pdf):
         grid, x0, y0 = tiles.grid(key, pdf, pdf["value"].to_numpy(dtype=np.float64), np.nan)
         out_c, out_r, out_v = [], [], []
         for gy in range(halo, halo + t):

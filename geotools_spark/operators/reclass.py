@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sampling import collect_capped, local_frame
+
 
 def class_remap(points: DataFrame, mappings: Mapping[int, int], *, cls: str = "cls") -> DataFrame:
     """F7: remap classes; identity for unmapped values."""
@@ -114,8 +116,6 @@ def flight_segments(
     1-based in time order — identical output to the global-window
     derivation, no single-partition Exchange anywhere in the plan.
     """
-    from .sampling import collect_capped
-
     local = bucketed_time_intervals(points, t=t, gap=gap, bucket_width=bucket_width)
     rows = collect_capped(local, ["m_start", "m_end"], what="flight segment list")
     merged: list[list[float]] = []
@@ -125,8 +125,8 @@ def flight_segments(
         else:
             merged.append([s, e])
     out = [(i + 1, s, e) for i, (s, e) in enumerate(merged)]
-    return points.sparkSession.createDataFrame(
-        out, "seg_id long, m_start double, m_end double"
+    return local_frame(
+        points.sparkSession, out, "seg_id long, m_start double, m_end double"
     )
 
 

@@ -1,4 +1,4 @@
-"""Guarded driver-side sample collection.
+"""Guarded driver-side sample collection, and driver-built tables.
 
 planar/kriging/natural-neighbour collect their SAMPLE side by contract
 (the reference interpolates one tile's samples at a time — e.g.
@@ -7,6 +7,10 @@ system), but a mis-use at 100 TB would silently OOM the driver.  The
 guard caps the collect with a ``limit(max+1)`` probe — one job, bounded
 driver memory, and a clear error instead of an executor-to-driver
 flood.
+
+The reverse direction, a small table the driver builds from Python
+rows (candidate cells, shift tables, lineage records), goes through
+:func:`local_frame`: one Arrow table, no Python worker.
 """
 
 from __future__ import annotations
@@ -15,7 +19,7 @@ import os
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DataType, DoubleType, StructField, StructType
 
 #: default cap on driver-collected sample rows (~48 MB of float64 xyz)
 MAX_SAMPLE_ROWS = int(os.environ.get("GEOTOOLS_SPARK_MAX_SAMPLE_ROWS", "2000000"))
@@ -36,6 +40,25 @@ def collect_capped(
             "the side or raise GEOTOOLS_SPARK_MAX_SAMPLE_ROWS explicitly"
         )
     return rows
+
+
+def local_frame(spark, rows, ddl: str) -> DataFrame:
+    """A DataFrame of the driver-side ``rows`` (tuples in the order of
+    the ``ddl`` schema), shipped as one ``pyarrow.Table`` typed from the
+    schema. The plan scans a ``LocalTableScan``: ``createDataFrame`` on
+    a Python list would instead parallelize pickled rows (``Scan
+    ExistingRDD``) and run Python worker tasks over them every time the
+    table is read."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def collect_sample_xyz(

@@ -42,6 +42,11 @@ from geotools_spark.functions.geometry import (
 )
 from geotools_spark.operators.partitioning import cpu_partition
 from geotools_spark.operators.raster import HaloTiles
+from geotools_spark.operators.sampling import (
+    collect_sample_xyz,
+    local_frame,
+    map_with_samples,
+)
 
 #: most salted sub-groups one hot cell of normalize_heights splits into
 MAX_SPLITS = 32
@@ -157,7 +162,8 @@ def normalize_heights(
     if hot_rows:
         spark = points.sparkSession
         hot = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(r._cell_c, r._cell_r, r._k) for r in hot_rows],
                 "_cell_c long, _cell_r long, _k int",
             )
@@ -237,7 +243,7 @@ def rugosity(
 ) -> DataFrame:
     """A12: per-cell Arc-Chord-Ratio rugosity (Du Preez 2014,
     include/cellstats.hpp:378-462); empty/degenerate cells -> -9999."""
-    def _rug(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _rug(key, pdf):
         xyz = np.column_stack([pdf[x].to_numpy(), pdf[y].to_numpy(), pdf[z].to_numpy()])
         return pd.DataFrame(
             {g: [k] for g, k in zip(group, key)} | {"acr": [rugosity_acr(xyz)]}
@@ -261,8 +267,6 @@ def planar_interpolate(
     the samples (driver-side 3x3 solve, the sample side is small by
     contract), evaluated for every query as a pure column expression
     (src/interp/Interpolators.cpp:509-523)."""
-    from geotools_spark.operators.sampling import collect_sample_xyz
-
     xyz = collect_sample_xyz(samples, (sx, sy, sz))
     a0, a1, a2, cx, cy = plane_fit(xyz)
     val = (
@@ -312,7 +316,7 @@ def validate_stations(
         res=use_res, rings=rings, ranked=False,
     ).filter(F.col("dist") <= r)
 
-    def _station(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _station(key, pdf):
         qx = float(pdf["qx"].iloc[0])
         qy = float(pdf["qy"].iloc[0])
         qz = float(pdf["qz"].iloc[0])
@@ -427,8 +431,6 @@ def simple_kriging(
     same weights, same result, none of the per-cell inversions.
     The variogram model params come in explicitly (the reference asks
     a Qt dialog)."""
-    from geotools_spark.operators.sampling import map_with_samples
-
     mfun = _vario_model(model)
 
     def factor(pts):
@@ -560,7 +562,7 @@ def boundary_edges(
         ).alias("core"),
     )
 
-    def _per_tile(_key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _per_tile(_key, pdf):
         xy = np.column_stack([pdf["px"].to_numpy(), pdf["py"].to_numpy()])
         out = _tile_edges(xy, pdf["core"].to_numpy())
         if out is None:

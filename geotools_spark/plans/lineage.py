@@ -30,6 +30,17 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geotools_spark.operators.sampling import local_frame
+
+
+def _append_lineage(spark: SparkSession, path: str, rows: list) -> None:
+    """Append (run_id, part_key, rows, wall_s, ts) records to the
+    table's ``_lineage`` sidecar as one file; no-op without rows."""
+    if rows:
+        local_frame(
+            spark, rows, "run_id string, part_key string, rows long, wall_s double, ts double"
+        ).coalesce(1).write.mode("append").parquet(os.path.join(path, "_lineage"))
+
 
 def require_local_path(path: str, what: str) -> str:
     """Fail loudly on non-local URIs (VERDICT r04 #9). The sidecar
@@ -90,10 +101,7 @@ def checkpointed_write(
     lineage_rows = [
         (run_id, r.part_key, int(r.rows), float(wall), time.time()) for r in stats
     ]
-    if lineage_rows:
-        spark.createDataFrame(
-            lineage_rows, "run_id string, part_key string, rows long, wall_s double, ts double"
-        ).coalesce(1).write.mode("append").parquet(os.path.join(path, "_lineage"))
+    _append_lineage(spark, path, lineage_rows)
 
     for r in stats:
         manifest["completed"][r.part_key] = run_id
@@ -228,11 +236,7 @@ def compact_partitions(
              float(time.time() - t0), time.time())
         )
 
-    if lineage_rows:
-        spark.createDataFrame(
-            lineage_rows,
-            "run_id string, part_key string, rows long, wall_s double, ts double",
-        ).coalesce(1).write.mode("append").parquet(os.path.join(path, "_lineage"))
+    _append_lineage(spark, path, lineage_rows)
     manifest = read_manifest(path)
     manifest["runs"].append({**summary, "ts": time.time()})
     tmp = _manifest_path(path) + ".tmp"

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geotools_spark.operators.sampling import local_frame
 from geotools_spark.operators.spans import POINT_FIELDS, POINT_SEP
 
 # World: [0,64) x [0,64) map units; default grid res 1.0 -> 64x64 cells.
@@ -151,6 +152,4 @@ def fixture_polygons(spark: SparkSession) -> DataFrame:
     rows = [
         (pid, [{"x": float(x), "y": float(y)} for x, y in ring]) for pid, ring in polys
     ]
-    return spark.createDataFrame(
-        rows, "poly_id int, ring array<struct<x:double,y:double>>"
-    )
+    return local_frame(spark, rows, "poly_id int, ring array<struct<x:double,y:double>>")

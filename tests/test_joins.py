@@ -11,13 +11,86 @@ from geotools_spark.operators.neighbors import (
     knn_kth_dist_bound_ok,
     radius_cell_join,
 )
-from geotools_spark.operators.pip import pip_join, ray_cast
+from geotools_spark.operators.pip import inside_expr, pip_join
+from geotools_spark.operators.sampling import local_frame
 from geotools_spark.sources.datagen import fixture_polygons
 
 CONCAVE = np.array(
     [(0.0, 0.0), (4.0, 0.0), (4.0, 1.0), (1.0, 1.0), (1.0, 3.0), (4.0, 3.0),
      (4.0, 4.0), (0.0, 4.0), (0.0, 0.0)]
 )
+
+
+def ray_cast(xs: np.ndarray, ys: np.ndarray, ring: np.ndarray) -> np.ndarray:
+    """NumPy oracle: vectorized even-odd point-in-polygon over one ring,
+    the crossing rule of ``pip.inside_expr`` in the same order."""
+    x1, y1 = ring[:-1, 0], ring[:-1, 1]
+    x2, y2 = ring[1:, 0], ring[1:, 1]
+    px = xs[:, None]
+    py = ys[:, None]
+    straddle = (y1[None, :] > py) != (y2[None, :] > py)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = (x2 - x1)[None, :] * (py - y1[None, :]) / (y2 - y1)[None, :] + x1[None, :]
+    crossings = straddle & (px < xint)
+    return (crossings.sum(axis=1) % 2).astype(bool)
+
+
+def _seeded_rings(rng):
+    """Convex, concave (star) and self-intersecting (bow-tie) closed
+    rings, with horizontal edges in the last two."""
+    ang = np.sort(rng.uniform(0, 2 * np.pi, 9))
+    convex = np.column_stack([10 + 6 * np.cos(ang), 10 + 6 * np.sin(ang)])
+    ang = np.linspace(0, 2 * np.pi, 14, endpoint=False)
+    rad = np.where(np.arange(14) % 2 == 0, 7.0, rng.uniform(1.5, 4.0, 14))
+    star = np.column_stack([30 + rad * np.cos(ang), 10 + rad * np.sin(ang)])
+    star[3, 1] = star[4, 1]  # one horizontal edge
+    bowtie = np.array([(50.0, 2.0), (58.0, 2.0), (50.0, 12.0), (58.0, 12.0)])
+    return [np.vstack([r, r[:1]]) for r in (convex, star, bowtie)]
+
+
+def _probe_points(rng, ring):
+    """Random points in the ring's bbox, every vertex, edge midpoints,
+    and points on each vertex's y (the ray passes through the vertex)."""
+    lo, hi = ring.min(axis=0) - 1.0, ring.max(axis=0) + 1.0
+    rand = rng.uniform(lo, hi, (300, 2))
+    mids = (ring[:-1] + ring[1:]) / 2.0
+    on_y = np.column_stack([rng.uniform(lo[0], hi[0], len(ring)), ring[:, 1]])
+    return np.vstack([rand, ring, mids, on_y])
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_inside_expr_matches_numpy_ray_cast(spark, ansi):
+    rng = np.random.default_rng(7)
+    rings = _seeded_rings(rng)
+    pts, edges, want = [], [], {}
+    for rid, ring in enumerate(rings):
+        xy = _probe_points(rng, ring)
+        for i, (px, py) in enumerate(xy):
+            pts.append((rid, rid * 10_000 + i, float(px), float(py)))
+        inside = ray_cast(xy[:, 0], xy[:, 1], ring)
+        want.update({rid * 10_000 + i: bool(v) for i, v in enumerate(inside)})
+        edges.append((rid, [
+            {"x1": float(a[0]), "y1": float(a[1]), "x2": float(b[0]), "y2": float(b[1])}
+            for a, b in zip(ring[:-1], ring[1:])
+        ]))
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        p = local_frame(spark, pts, "rid int, i int, x double, y double")
+        e = local_frame(
+            spark, edges,
+            "rid int, _edges array<struct<x1:double,y1:double,x2:double,y2:double>>",
+        )
+        got = {
+            r.i: r.inside
+            for r in p.join(e, "rid").select(
+                "i", inside_expr(F.col("x"), F.col("y"), F.col("_edges")).alias("inside")
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+    assert got == want
+    assert 0 < sum(want.values()) < len(want)
 
 
 def test_ray_cast_concave():

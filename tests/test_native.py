@@ -106,7 +106,8 @@ def test_ivf_index_cache_is_owner_checked(spark, cache, monkeypatch, capsys):
 def test_ivf_index_cache_tracks_a_single_file_source(spark, cache, tmp_path):
     """The index cache key fingerprints the embeddings source even when
     it is one parquet file, not a directory: rewriting the file builds
-    a fresh index instead of serving the old one."""
+    a fresh index instead of serving the old one, and the fresh index
+    replaces the old one in the cache (another sf's index stays)."""
     import shutil
 
     import __spark_entry__ as entry_mod
@@ -117,7 +118,11 @@ def test_ivf_index_cache_tracks_a_single_file_source(spark, cache, tmp_path):
     shutil.copy(f"{entry_mod.SF0001}/embeddings.parquet", src)
     query = entry_mod.queries()["ann_ivf"]
     first = sorted(query(spark, str(sf)).collect())
+    (old,) = [p.name for p in cache.iterdir() if p.name.startswith("ivf_sf_")]
+    (cache / "ivf_sf2_1f").mkdir()  # another sf's index
     st = src.stat()
     os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
     assert sorted(query(spark, str(sf)).collect()) == first
-    assert len([p for p in cache.iterdir() if p.name.startswith("ivf_")]) == 2
+    (new,) = [p.name for p in cache.iterdir() if p.name.startswith("ivf_sf_")]
+    assert new != old
+    assert (cache / "ivf_sf2_1f").is_dir()

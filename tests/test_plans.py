@@ -238,3 +238,45 @@ def test_lsh_ann_join_no_single_partition(spark):
     assert "CartesianProduct" not in plan
     assert "Exchange SinglePartition" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_pip_join_is_jvm_only_with_local_broadcast_sides(spark):
+    """The exact ray-cast is a Catalyst predicate (no Python eval), and
+    both broadcast sides — candidate cells and polygon edges — are
+    driver-built Arrow tables (LocalTableScan), not parallelized
+    Python rows (Scan ExistingRDD)."""
+    df = entry_mod.queries()["pip_join"](spark, SF)
+    plan = plan_of(df)
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "ExistingRDD" not in plan
+    lines = plan.splitlines()
+    sides = [lines[i + 1] for i, l in enumerate(lines) if "BroadcastExchange" in l]
+    assert len(sides) == 2, plan
+    assert all("LocalTableScan" in s for s in sides), plan
+
+
+@pytest.mark.parametrize("narrow", [False, True])
+def test_knn_join_spreads_only_a_narrow_sample_side(spark, narrow):
+    from geotools_spark.operators.neighbors import knn_join
+    from geotools_spark.operators.partitioning import default_parallelism
+
+    q = spark.range(50).select(
+        F.col("id").alias("qid"), F.col("id").cast("double").alias("qx"),
+        F.col("id").cast("double").alias("qy"))
+    splits = 1 if narrow else default_parallelism(spark)
+    s = spark.range(0, 1000, 1, splits).select(
+        F.col("id").alias("sid"), (F.col("id") * 0.1).alias("x"),
+        (F.col("id") * 0.1).alias("y"))
+    plan = plan_of(knn_join(q, s, k=3, res=2.0))
+    assert ("RoundRobinPartitioning" in plan) == narrow, plan
+
+
+def test_apply_shifts_ships_a_local_table(spark):
+    from geotools_spark.operators.coregister import apply_shifts
+
+    pts = spark.range(10).select(
+        F.concat(F.lit("r"), (F.col("id") % 3).cast("string")).alias("raster_id"),
+        F.col("id").cast("double").alias("z"))
+    plan = plan_of(apply_shifts(pts, {"r0": 1.5, "r1": -2.0}))
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan

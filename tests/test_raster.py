@@ -168,6 +168,18 @@ def test_gaussian_smooth_tiled_equals_explode(spark):
         assert np.allclose(np.nan_to_num(a, nan=-1), np.nan_to_num(b, nan=-1), atol=1e-9)
 
 
+def test_tiled_kernel_plans_without_type_hint_warning(spark):
+    # the per-tile kernels carry no partial type hints, so PySpark has
+    # nothing to (fail to) infer an eval type from
+    import warnings
+
+    df = to_df(spark, make_grid(seed=11))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        gaussian_smooth_tiled(df, sigma=1.1, size=5, cols=COLS, rows=ROWS, tile=8)
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+
+
 def test_local_maxima_matches_oracle(spark):
     g = make_grid(seed=5)
     df = to_df(spark, g)
