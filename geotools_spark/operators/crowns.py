@@ -12,18 +12,17 @@ Semantics reproduced:
   (src/treetops.cpp:381-386), so radius is effectively in cells;
   quirk kept (parameter named radius_cells).
 - A cell joins at most one crown. The reference assigns contested
-  cells by FIFO arrival in its per-strip queue; the Spark rounds are
-  synchronous BFS waves, and within a wave contested cells resolve
+  cells by FIFO arrival in its per-strip queue; here the growth runs
+  in synchronous BFS waves, and within a wave contested cells resolve
   deterministically to the smallest top_id (documented deviation —
   affects only equidistant boundary cells between crowns).
 
 Physical shape: ONE halo-tile exchange + a vectorized NumPy BFS per
 tile (tree_crowns) — the growth is a synchronous cellular automaton
 advancing one D8 cell per wave for at most ceil(radius)+1 waves, so
-halo = waves+1 makes every tile core exact (the feather argument).
-The literal bounded-frontier-join formulation is kept as
-tree_crowns_iterative (equality pinned by tests); at 100 TB the tiled
-path does one shuffle where the join loop does O(radius) barriers.
+halo = waves+1 makes every tile core exact (the feather argument). At
+100 TB that is one shuffle where a frontier-join loop would pay
+O(radius) barriers.
 """
 
 from __future__ import annotations
@@ -32,8 +31,6 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from geotools_spark.functions.cells import window_offsets
 
 
 def tree_crowns(
@@ -55,8 +52,9 @@ def tree_crowns(
     a cell's final assignment depends only on cells within Chebyshev
     distance = wave count — halo = waves+1 makes every tile core exact,
     and the whole delineation is a single shuffle + one vectorized
-    NumPy BFS per tile instead of O(radius) driver-side join rounds
-    (kept as :func:`tree_crowns_iterative`, pinned equal by tests).
+    NumPy BFS per tile instead of O(radius) driver-side join rounds.
+    The BFS transcription of the reference growth
+    (``tests/test_crowns.py``) judges it on multi-tile grids.
     """
     import numpy as np
     import pandas as pd
@@ -158,77 +156,6 @@ def tree_crowns(
             "cell_col long, cell_row long, top_id long",
         )
     )
-
-
-def tree_crowns_iterative(
-    raster: DataFrame,
-    tops: DataFrame,
-    *,
-    min_height: float,
-    height_fraction: float,
-    radius_cells: float,
-    value: str = "value",
-) -> DataFrame:
-    """Literal bounded-frontier-join formulation of :func:`tree_crowns`
-    (kept as the distributed-join twin; same wave/min-id semantics)."""
-    r2 = float(radius_cells) * float(radius_cells)
-    # materialize the CHM once — the loop would otherwise recompute the
-    # entire upstream raster pipeline on every iteration's join
-    rast = raster.select(
-        F.col("cell_col").alias("ncol"),
-        F.col("cell_row").alias("nrow"),
-        F.col(value).alias("_v"),
-    ).localCheckpoint(eager=True)
-    assigned = tops.select(
-        "cell_col",
-        "cell_row",
-        "top_id",
-        F.col("z").alias("_z"),
-        F.col("cell_col").alias("_tc"),
-        F.col("cell_row").alias("_tr"),
-        F.col("z").alias("_tz"),
-    ).localCheckpoint(eager=True)
-    frontier = assigned
-    for _ in range(int(math.ceil(radius_cells)) + 1):
-        cand = frontier.select(
-            "top_id", "_z", "_tc", "_tr", "_tz",
-            F.explode(window_offsets(1, center=False)).alias("off"),
-            (F.col("cell_col") + F.col("off.dx")).alias("ncol"),
-            (F.col("cell_row") + F.col("off.dy")).alias("nrow"),
-        ).drop("off")
-        dc = F.col("ncol") - F.col("_tc")
-        dr = F.col("nrow") - F.col("_tr")
-        cand = (
-            cand.join(rast, ["ncol", "nrow"], "inner")
-            .filter(
-                F.col("_v").isNotNull()
-                & (F.col("_v") < F.col("_z"))
-                & (F.col("_v") >= F.lit(float(min_height)))
-                & ((F.col("_v") / F.col("_tz")) >= F.lit(float(height_fraction)))
-                & ((dc * dc + dr * dr) <= F.lit(r2))
-            )
-        )
-        # one winner per cell: smallest top_id (deterministic)
-        winners = cand.groupBy("ncol", "nrow").agg(
-            F.min_by(
-                F.struct("top_id", "_v", "_tc", "_tr", "_tz"), F.col("top_id")
-            ).alias("w")
-        ).select(
-            F.col("ncol").alias("cell_col"),
-            F.col("nrow").alias("cell_row"),
-            F.col("w.top_id").alias("top_id"),
-            F.col("w._v").alias("_z"),
-            F.col("w._tc").alias("_tc"),
-            F.col("w._tr").alias("_tr"),
-            F.col("w._tz").alias("_tz"),
-        )
-        frontier = winners.join(
-            assigned.select("cell_col", "cell_row"), ["cell_col", "cell_row"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if frontier.isEmpty():
-            break
-        assigned = assigned.unionByName(frontier).localCheckpoint(eager=True)
-    return assigned.select("cell_col", "cell_row", "top_id")
 
 
 def treetops_pipeline(

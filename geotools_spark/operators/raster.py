@@ -23,10 +23,11 @@ also nodata). Two physical strategies, both pure public-API Spark:
    ``halo >= tile``), the halo shipping, the tile origin
    ``tile_col*T - halo`` and the dense (T+2*halo)^2 grid scatter.
 
-Iterative algorithms (feather W7, flood/label W10) run a bounded driver
-loop of DataFrame steps with ``localCheckpoint`` to cut lineage — the
-loop count is bounded by physics (fade distance in pixels, component
-diameter), not by data size.
+Iterative algorithms whose reach is bounded (feather W7: the fade
+distance in pixels) run their whole loop inside one halo tile; flood
+labeling (W10) merges its per-tile labels in a bounded driver loop of
+DataFrame rounds with ``localCheckpoint`` to cut lineage — the round
+count is the diameter of the tile graph, not the data size.
 
 Reference parity rules encoded here (each behind ``parity=True``):
 - gaussian smooth (src/raster.cpp:223-296): window weight
@@ -314,14 +315,16 @@ def feather(
     """W7a: alpha mask by edge snow-in (src/mosaic.cpp:56-99), computed
     as a halo-tile distance transform: the synchronous peel wave means a
     cell's layer index IS its (border-quirk-aware) D8 peel distance, so
-    one halo-tile shuffle + a vectorized per-tile NumPy
-    erosion loop replaces the ~steps driver-side Spark jobs of the
-    literal formulation (kept as :func:`feather_iterative`, pinned
-    equal by tests). Halo = steps+2 cells: the wave advances one
-    Chebyshev cell per step, so any influence of cells outside the
-    window cannot reach the tile core within ``steps`` peels.
-    Single-tile semantics like the reference's single-raster run (the
-    reference's own per-tile border artifacts are NOT reproduced)."""
+    one halo-tile shuffle + a vectorized per-tile NumPy erosion loop
+    does the reference's ~steps whole-raster peel passes. Halo =
+    steps+2 cells: the wave advances one Chebyshev cell per step, so
+    any influence of cells outside the window cannot reach the tile
+    core within ``steps`` peels; the NumPy transcription of the
+    reference loop (``tests/test_raster.py``) judges it on multi-tile
+    grids. Single-tile semantics like the reference's single-raster run
+    (the reference's own per-tile border artifacts are NOT reproduced).
+    Output: (cell_col, cell_row, alpha) for valid cells; interior never
+    reached by the fade keeps alpha = 1.0."""
     steps = max(1.0, float(distance) / float(resolution))
     n_peel = int(math.floor(steps)) + 1
     tiles = HaloTiles(tile, n_peel + 1)
@@ -380,51 +383,6 @@ def feather(
     return shipped.groupBy("tile_col", "tile_row").applyInPandas(
         _peel, "cell_col long, cell_row long, alpha double"
     )
-
-
-def feather_iterative(
-    raster: DataFrame,
-    *,
-    distance: float,
-    resolution: float,
-    cols: int,
-    rows: int,
-    value: str = "value",
-) -> DataFrame:
-    """W7a, literal driver-loop formulation of :func:`feather` (kept as
-    the transcription twin; src/mosaic.cpp:56-99),
-    single-tile semantics (whole raster = one grid; the reference's
-    per-tile runs differ at internal tile borders, a tiling artifact).
-
-    Driver loop bounded by steps = max(1, distance/resolution);
-    localCheckpoint per iteration cuts lineage. Output:
-    (cell_col, cell_row, alpha) for valid cells; interior never reached
-    by the fade keeps alpha = 1.0.
-    """
-    steps = max(1.0, float(distance) / float(resolution))
-    mask = raster.filter(F.col(value).isNotNull()).select("cell_col", "cell_row")
-    mask = mask.localCheckpoint(eager=True)
-    out = None
-    step = 0.0
-    while step <= steps:
-        edges = edge_pixels(
-            mask.select("cell_col", "cell_row", F.lit(1.0).alias("value")),
-            cols=cols,
-            rows=rows,
-        ).filter(F.col("is_edge"))
-        alpha_val = math.tanh(((min(steps, max(0.0, step)) - steps / 2.0) / (steps / 2.0)) * math.pi) * 0.5 + 0.5
-        layer = edges.select(
-            "cell_col", "cell_row", F.lit(float(alpha_val)).alias("alpha")
-        )
-        layer = layer.localCheckpoint(eager=True)
-        if layer.isEmpty():
-            break
-        out = layer if out is None else out.unionByName(layer)
-        mask = mask.join(layer.select("cell_col", "cell_row"), ["cell_col", "cell_row"], "left_anti")
-        mask = mask.localCheckpoint(eager=True)
-        step += 1.0
-    interior = mask.select("cell_col", "cell_row", F.lit(1.0).alias("alpha"))
-    return interior if out is None else out.unionByName(interior)
 
 
 def blend(

@@ -15,7 +15,10 @@ src/lasreclass.cpp).
   later decisions), so this is applyInPandas per flight line with the
   literal queue algorithm over numpy-backed rows — the sanctioned
   shape for sequential per-group state (SURVEY.md §2.11). Each flight
-  line is one group; lines process in parallel across executors.
+  line is one group; lines process in parallel across executors. The
+  queue automaton itself is :func:`flip_scan`, the one home of the
+  rule: the batch operator feeds it a whole line, the streaming
+  operator (``streaming.flips``) one micro-batch at a time.
 
 W8 semantics notes (all reproduced):
 - queues fill to 20 each; windows are therefore consecutive 40-point
@@ -34,7 +37,7 @@ from __future__ import annotations
 
 import math
 from collections import deque
-from collections.abc import Mapping
+from collections.abc import Mapping, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -156,6 +159,70 @@ def assign_flight_line(
     )
 
 
+# W8 constants (src/lasreclass.cpp:163-250)
+FLIP_LIMIT = 20  # points per queue
+FLIP_GAP_S = 0.4  # a larger time step flushes both queues
+FLIP_RAD = math.pi * 0.75  # direction change that counts as a flip
+FLIP_CLASS = 31
+
+
+def flip_scan(
+    xs: Sequence[float],
+    ys: Sequence[float],
+    ts: Sequence[float],
+    *,
+    queued: int = 0,
+    n1: int = 0,
+    last_time: float = 0.0,
+) -> tuple[list[tuple[int, bool]], list[int], int, float]:
+    """W8 queue automaton over one flight line's time-ordered points.
+
+    Points ``[0, queued)`` are still undecided from an earlier call —
+    the first ``n1`` of them in the trailing queue, the rest in the
+    leading one — and ``last_time`` is that call's run-start clock;
+    points ``[queued, len(ts))`` are new. Returns ``(decided, pending,
+    n1, last_time)``: ``decided`` lists ``(index, flipped)`` for every
+    point whose class got decided, in decision order; ``pending`` lists
+    the still-undecided indices in time order, the first ``n1`` in the
+    trailing queue."""
+
+    def direction(q):
+        i0, i1 = q[0], q[-1]
+        d = math.atan2(ys[i1] - ys[i0], xs[i1] - xs[i0])
+        while d < 0:
+            d += math.pi * 2.0
+        while d > math.pi * 2.0:
+            d -= math.pi * 2.0
+        return d
+
+    pq1 = deque(range(n1))
+    pq0 = deque(range(n1, queued))
+    decided: list[tuple[int, bool]] = []
+    for i in range(queued, len(ts)):
+        ti = float(ts[i])
+        if last_time == 0.0:
+            last_time = ti
+        elif ti - last_time > FLIP_GAP_S:
+            last_time = ti
+            decided.extend((j, False) for j in pq1)  # gap: flushed unchanged
+            decided.extend((j, False) for j in pq0)
+            pq0.clear()
+            pq1.clear()
+        pq0.append(i)
+        if len(pq0) <= FLIP_LIMIT:
+            continue
+        pq1.append(pq0.popleft())
+        if len(pq1) == FLIP_LIMIT:
+            if abs(abs(direction(pq0)) - abs(direction(pq1))) > FLIP_RAD:
+                decided.extend((j, True) for j in pq1)  # all 40 queued points
+                decided.extend((j, True) for j in pq0)
+                pq0.clear()
+                pq1.clear()
+            else:
+                decided.append((pq1.popleft(), False))  # oldest leaves unchanged
+    return decided, list(pq1) + list(pq0), len(pq1), last_time
+
+
 def direction_flip_reclass(
     points: DataFrame,
     *,
@@ -164,56 +231,17 @@ def direction_flip_reclass(
     x: str = "x",
     y: str = "y",
     cls: str = "cls",
-    limit: int = 20,
-    gap_s: float = 0.4,
-    flip_rad: float = math.pi * 0.75,
 ) -> DataFrame:
-    """W8: flag direction-flip spans as class 31, per flight line."""
+    """W8: flag direction-flip spans as class 31, per flight line: each
+    line's points run through :func:`flip_scan` in time order; points
+    still queued at the end keep their class (trailing flush)."""
     schema = points.schema
 
     def _scan(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(t, kind="mergesort").reset_index(drop=True)
-        xs = pdf[x].to_numpy()
-        ys = pdf[y].to_numpy()
-        ts = pdf[t].to_numpy()
+        decided, _, _, _ = flip_scan(pdf[x].to_numpy(), pdf[y].to_numpy(), pdf[t].to_numpy())
         out_cls = pdf[cls].to_numpy().copy()
-
-        def direction(q):
-            i0, i1 = q[0], q[-1]
-            d = math.atan2(ys[i1] - ys[i0], xs[i1] - xs[i0])
-            while d < 0:
-                d += math.pi * 2.0
-            while d > math.pi * 2.0:
-                d -= math.pi * 2.0
-            return d
-
-        pq0: deque[int] = deque()
-        pq1: deque[int] = deque()
-        last_time = 0.0
-        for i in range(len(pdf)):
-            ti = float(ts[i])
-            if last_time == 0.0:
-                last_time = ti
-            elif ti - last_time > gap_s:
-                last_time = ti
-                pq0.clear()  # flushed unchanged (already written)
-                pq1.clear()
-            pq0.append(i)
-            if len(pq0) <= limit:
-                continue
-            pq1.append(pq0.popleft())
-            if len(pq1) == limit:
-                d0 = direction(pq0)
-                d1 = direction(pq1)
-                if abs(abs(d0) - abs(d1)) > flip_rad:
-                    for j in pq0:
-                        out_cls[j] = 31
-                    for j in pq1:
-                        out_cls[j] = 31
-                    pq0.clear()
-                    pq1.clear()
-                else:
-                    pq1.popleft()  # oldest point leaves unchanged
+        out_cls[[j for j, flipped in decided if flipped]] = FLIP_CLASS
         pdf[cls] = out_cls
         return pdf
 

@@ -474,7 +474,6 @@ def boundary_edges(
     x: str = "x",
     y: str = "y",
     cls: str = "cls",
-    tiled: bool = True,
     tile_cells: int = 128,
 ) -> DataFrame:
     """M9 (lasboundary): occupancy grid -> cells missing any of their 8
@@ -483,16 +482,16 @@ def boundary_edges(
     (src/lasboundary.cpp:156-194; center y uses the reference's odd
     ``row*res + miny - res/2``).
 
-    Scale path (default, VERDICT r01 #5): the boundary-cell set is
-    O(perimeter), which at 100 TB is itself huge — so centers are split
-    into ``tile_cells``-wide coarse tiles with a halo of
-    ceil(max_edge/res)+1 cells, each tile triangulated independently,
-    edges shorter than ``max_edge`` with >=1 core endpoint unioned and
-    deduped on canonical endpoint order. Every kept edge's witness
-    neighborhood fits inside the halo for edges this short, so tile
-    union equals the single-task result on real configs (pinned by a
-    set-equality parity test); ``tiled=False`` keeps the literal
-    one-task twin for that test."""
+    The boundary-cell set is O(perimeter), which at 100 TB is itself
+    huge — so centers are split into ``tile_cells``-wide coarse tiles
+    with a halo of ceil(max_edge/res)+1 cells, each tile triangulated
+    independently, edges shorter than ``max_edge`` with >=1 core
+    endpoint unioned and deduped on canonical endpoint order. Every
+    kept edge's witness neighborhood fits inside the halo for edges
+    this short, so the tile union equals the one-triangulation result
+    of the reference; a ``tile_cells`` wider than the extent is that
+    one triangulation (one tile, every center a core point), and a
+    set-equality test pins the two equal."""
     p = points
     if classes:
         p = p.filter(F.col(cls).isin(list(classes)))
@@ -514,41 +513,6 @@ def boundary_edges(
         (F.col("c") * res + F.lit(minx) + res / 2.0).alias("px"),
         (F.col("r") * res + F.lit(miny) - res / 2.0).alias("py"),
     )
-    out_schema = "x0 double, y0 double, x1 double, y1 double, length double"
-
-    def _tile_edges(xy: np.ndarray, core: np.ndarray | None):
-        """Delaunay -> short edges; optionally require a core endpoint;
-        canonicalize endpoint order so cross-tile duplicates collapse."""
-        e = delaunay_edges(xy)
-        if len(e) == 0:
-            return None
-        p0 = xy[e[:, 0]]
-        p1 = xy[e[:, 1]]
-        ln = np.sqrt(((p0 - p1) ** 2).sum(axis=1))
-        keep = ln < max_edge
-        if core is not None:
-            keep &= core[e[:, 0]] | core[e[:, 1]]
-        p0, p1, ln = p0[keep], p1[keep], ln[keep]
-        swap = (p0[:, 0] > p1[:, 0]) | ((p0[:, 0] == p1[:, 0]) & (p0[:, 1] > p1[:, 1]))
-        p0[swap], p1[swap] = p1[swap].copy(), p0[swap].copy()
-        return pd.DataFrame(
-            {"x0": p0[:, 0], "y0": p0[:, 1], "x1": p1[:, 0], "y1": p1[:, 1], "length": ln}
-        )
-
-    if not tiled:
-
-        def _edges(batches):
-            parts = [pdf for pdf in batches if len(pdf)]
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            xy = np.column_stack([pdf["px"].to_numpy(), pdf["py"].to_numpy()])
-            out = _tile_edges(xy, None)
-            if out is not None:
-                yield out
-
-        return centers.select("px", "py").coalesce(1).mapInPandas(_edges, out_schema)
-
     tiles = HaloTiles(tile_cells, int(np.ceil(max_edge / res)) + 1)
     t = tiles.tile
     shipped = tiles.ship(centers, value="px", extra=("py",)).select(
@@ -561,13 +525,24 @@ def boundary_edges(
             & (F.floor(F.col("cell_row") / t) == F.col("tile_row"))
         ).alias("core"),
     )
+    out_schema = "x0 double, y0 double, x1 double, y1 double, length double"
 
     def _per_tile(_key, pdf):
+        """Delaunay -> short edges with a core endpoint; canonicalize
+        endpoint order so cross-tile duplicates collapse."""
         xy = np.column_stack([pdf["px"].to_numpy(), pdf["py"].to_numpy()])
-        out = _tile_edges(xy, pdf["core"].to_numpy())
-        if out is None:
-            return pd.DataFrame({c: [] for c in ("x0", "y0", "x1", "y1", "length")})
-        return out
+        core = pdf["core"].to_numpy()
+        e = delaunay_edges(xy)
+        p0 = xy[e[:, 0]]
+        p1 = xy[e[:, 1]]
+        ln = np.sqrt(((p0 - p1) ** 2).sum(axis=1))
+        keep = (ln < max_edge) & (core[e[:, 0]] | core[e[:, 1]])
+        p0, p1, ln = p0[keep], p1[keep], ln[keep]
+        swap = (p0[:, 0] > p1[:, 0]) | ((p0[:, 0] == p1[:, 0]) & (p0[:, 1] > p1[:, 1]))
+        p0[swap], p1[swap] = p1[swap].copy(), p0[swap].copy()
+        return pd.DataFrame(
+            {"x0": p0[:, 0], "y0": p0[:, 1], "x1": p1[:, 0], "y1": p1[:, 1], "length": ln}
+        )
 
     edges = shipped.groupBy("tile_col", "tile_row").applyInPandas(_per_tile, out_schema)
     return edges.dropDuplicates(["x0", "y0", "x1", "y1"])

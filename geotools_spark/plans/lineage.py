@@ -66,6 +66,14 @@ def read_manifest(path: str) -> dict:
     return {"runs": [], "completed": {}}
 
 
+def _write_manifest(path: str, manifest: dict) -> None:
+    """Replace the manifest atomically: write a temp file, then rename."""
+    tmp = _manifest_path(path) + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(manifest, fh, indent=1)
+    os.replace(tmp, _manifest_path(path))
+
+
 def checkpointed_write(
     df: DataFrame,
     path: str,
@@ -114,10 +122,7 @@ def checkpointed_write(
             "wall_s": round(wall, 3),
         }
     )
-    tmp = _manifest_path(path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    os.replace(tmp, _manifest_path(path))
+    _write_manifest(path, manifest)
     return manifest["runs"][-1]
 
 
@@ -138,7 +143,7 @@ def write_cell_partitioned(
     SpatiaLite R-tree's job, include/sqlite.hpp:20-142). Goes through
     checkpointed_write, so resume/lineage apply."""
     parent = F.shiftright(F.col(zkey_col), 2 * level_delta).alias("cell_part")
-    keyed = df.withColumn("cell_part", parent)
+    keyed = df.select("*", parent)
     spread = keyed.repartitionByRange(
         max(df.sparkSession.sparkContext.defaultParallelism, 4),
         F.col(zkey_col),
@@ -239,10 +244,7 @@ def compact_partitions(
     _append_lineage(spark, path, lineage_rows)
     manifest = read_manifest(path)
     manifest["runs"].append({**summary, "ts": time.time()})
-    tmp = _manifest_path(path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    os.replace(tmp, _manifest_path(path))
+    _write_manifest(path, manifest)
     return summary
 
 

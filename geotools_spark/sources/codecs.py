@@ -412,21 +412,6 @@ def _lzw_encode(src: bytes) -> bytes:
     return bytes(out)
 
 
-def encode_strip_tiff_u8(
-    arr: np.ndarray,
-    *,
-    compression: str = "none",
-    predictor: int = 1,
-) -> bytes:
-    """Back-compat wrapper: (h, w[, c]) uint8 -> single-strip TIFF.
-    See :func:`encode_tiff` for the general writer."""
-    return encode_tiff(
-        np.ascontiguousarray(arr, dtype=np.uint8),
-        compression=compression,
-        predictor=predictor,
-    )
-
-
 def _tiff_predict(block: np.ndarray, predictor: int, dt: np.dtype) -> bytes:
     """Apply the TIFF predictor to one strip/tile and serialize.
     2 = per-channel horizontal differencing (integer samples);

@@ -57,7 +57,7 @@ def exact_dedup_stream(
     """
     fp1 = F.xxhash64(F.col(key))
     fp2 = F.xxhash64(F.col(key), F.lit(_FP_SALT))
-    out = docs.withColumn("_fp1", fp1).withColumn("_fp2", fp2)
+    out = docs.select("*", fp1.alias("_fp1"), fp2.alias("_fp2"))
     if within is not None:
         out = out.withWatermark(event_time, within).dropDuplicatesWithinWatermark(
             ["_fp1", "_fp2"]

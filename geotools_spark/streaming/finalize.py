@@ -101,7 +101,7 @@ def session_window_stats(
     """Streaming flight-line sessionization: built-in session_window
     with a watermark for state eviction (batch twin:
     operators/sessions.sessionize)."""
-    e = events_stream.withColumn("_ts", F.col(ts).cast("timestamp")).withWatermark(
+    e = events_stream.select("*", F.col(ts).cast("timestamp").alias("_ts")).withWatermark(
         "_ts", watermark
     )
     return e.groupBy(F.session_window("_ts", gap).alias("sw"), F.col(key)).agg(

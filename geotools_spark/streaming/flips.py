@@ -1,18 +1,18 @@
-"""Streaming direction-flip reclassification — the stateful streaming
-twin of ``operators.reclass.direction_flip_reclass`` (W8; the
-two-20-point-queue detector, src/lasreclass.cpp:163-250, over
-lasreclass's streaming-shaped scan at src/lasreclass.cpp:344-358).
+"""Streaming direction-flip reclassification (W8; the two-20-point-queue
+detector, src/lasreclass.cpp:163-250, over lasreclass's
+streaming-shaped scan at src/lasreclass.cpp:344-358).
 
-The batch operator runs the queue automaton over a whole flight line
-at once. Here the SAME automaton advances incrementally per
-micro-batch via ``applyInPandasWithState`` keyed by line: the two
-queues (<= 40 undecided points) and the run-start clock are the state
-row; a point is EMITTED the moment its class is decided — when it
-leaves the trailing queue unchanged, when a detected flip reclasses
-all 40 queued points to 31, or when a time gap flushes the queues
-unchanged. A flip whose 40-point span straddles a micro-batch
-boundary therefore reclasses points that arrived in an EARLIER batch
-— the state carry-over the batch/stream parity test pins.
+The queue automaton is ``operators.reclass.flip_scan``, shared with the
+batch operator ``direction_flip_reclass``, which feeds it a whole
+flight line at once. Here it advances incrementally per micro-batch
+via ``applyInPandasWithState`` keyed by line: the two queues (<= 40
+undecided points) and the run-start clock are the state row; a point
+is EMITTED the moment its class is decided — when it leaves the
+trailing queue unchanged, when a detected flip reclasses all 40
+queued points to 31, or when a time gap flushes the queues unchanged.
+A flip whose 40-point span straddles a micro-batch boundary therefore
+reclasses points that arrived in an EARLIER batch — the state
+carry-over the batch/stream parity test pins.
 
 Ordering contract: the stream must deliver each line's points in
 gps_time order across batches (the reference reads a time-sorted
@@ -20,8 +20,8 @@ scan; Spark file sources preserve file order). Points still queued
 when the stream idles stay in state — exactly the batch operator's
 trailing-flush rows, which emerge unchanged; a terminal empty batch
 cannot flush them without a timeout, so bounded pipelines should
-append a far-future sentinel point per line (> gap_s past the end) to
-force the final flush, which the parity test demonstrates.
+append a far-future sentinel point per line (> ``FLIP_GAP_S`` past the
+end) to force the final flush, which the parity test demonstrates.
 
 State is O(40 points) per ACTIVE line — bounded regardless of stream
 length, the property that makes this safe at 10^12 rows.
@@ -29,33 +29,22 @@ length, the property that makes this safe at 10^12 rows.
 
 from __future__ import annotations
 
-import math
-from collections import deque
 from typing import Any, Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from geotools_spark.operators.reclass import FLIP_CLASS, flip_scan
 
 OUT_SCHEMA = "line_id long, pid long, gps_time double, x double, y double, cls int"
 STATE_SCHEMA = (
     "pids array<long>, xs array<double>, ys array<double>, "
     "ts array<double>, cs array<int>, n1 int, last_time double"
 )
-
-_LIMIT = 20
-_GAP_S = 0.4
-_FLIP_RAD = math.pi * 0.75
-
-
-def _direction(q: deque) -> float:
-    (_, x0, y0, _, _), (_, x1, y1, _, _) = q[0], q[-1]
-    d = math.atan2(y1 - y0, x1 - x0)
-    while d < 0:
-        d += math.pi * 2.0
-    while d > math.pi * 2.0:
-        d -= math.pi * 2.0
-    return d
+# state array -> input column, in STATE_SCHEMA order
+_COLS = (("pid", np.int64), ("x", np.float64), ("y", np.float64), ("gps_time", np.float64), ("cls", np.int32))
 
 
 def _flip_fn(
@@ -63,72 +52,30 @@ def _flip_fn(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    # restore queues: stored arrays are time-ordered, first n1 = pq1
-    if state.exists:
-        pids, xs, ys, ts, cs, n1, last_time = state.get
-        pts = list(zip(pids, xs, ys, ts, cs))
-        pq1: deque = deque(pts[:n1])
-        pq0: deque = deque(pts[n1:])
-    else:
-        pq1, pq0, last_time = deque(), deque(), 0.0
-
-    line = int(key[0])
-    out: list[tuple] = []
-
-    def emit(pt, cls):
-        out.append((line, int(pt[0]), float(pt[3]), float(pt[1]), float(pt[2]), int(cls)))
-
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.sort_values("gps_time", kind="mergesort")
-        for pid, x, y, t, c in zip(
-            pdf["pid"], pdf["x"], pdf["y"], pdf["gps_time"], pdf["cls"]
-        ):
-            ti = float(t)
-            if last_time == 0.0:
-                last_time = ti
-            elif ti - last_time > _GAP_S:
-                last_time = ti
-                for pt in pq1:  # gap: queues flush UNCHANGED, now decided
-                    emit(pt, pt[4])
-                for pt in pq0:
-                    emit(pt, pt[4])
-                pq0.clear()
-                pq1.clear()
-            pq0.append((int(pid), float(x), float(y), ti, int(c)))
-            if len(pq0) <= _LIMIT:
-                continue
-            pq1.append(pq0.popleft())
-            if len(pq1) == _LIMIT:
-                d0 = _direction(pq0)
-                d1 = _direction(pq1)
-                if abs(abs(d0) - abs(d1)) > _FLIP_RAD:
-                    for pt in pq1:  # flip: all 40 queued points -> 31
-                        emit(pt, 31)
-                    for pt in pq0:
-                        emit(pt, 31)
-                    pq0.clear()
-                    pq1.clear()
-                else:
-                    pt = pq1.popleft()  # oldest point leaves unchanged
-                    emit(pt, pt[4])
-
-    rest = list(pq1) + list(pq0)
-    state.update(
-        (
-            [p[0] for p in rest],
-            [p[1] for p in rest],
-            [p[2] for p in rest],
-            [p[3] for p in rest],
-            [p[4] for p in rest],
-            len(pq1),
-            last_time,
-        )
+    # held points are time-ordered, the first n1 in the trailing queue;
+    # this micro-batch's points follow them in time order
+    *held, n1, last_time = state.get if state.exists else ([], [], [], [], [], 0, 0.0)
+    batch = pd.concat(list(pdfs), ignore_index=True).sort_values("gps_time", kind="mergesort")
+    pid, x, y, t, c = (
+        np.concatenate([np.asarray(h, dtype=dt), batch[name].to_numpy(dtype=dt)])
+        for h, (name, dt) in zip(held, _COLS)
     )
-    if out:
+    decided, pending, n1, last_time = flip_scan(
+        x, y, t, queued=len(held[0]), n1=n1, last_time=last_time
+    )
+    state.update((*(a[pending].tolist() for a in (pid, x, y, t, c)), n1, last_time))
+    if decided:
+        idx = np.array([j for j, _ in decided], dtype=np.int64)
+        flipped = np.array([f for _, f in decided], dtype=bool)
         yield pd.DataFrame(
-            out, columns=["line_id", "pid", "gps_time", "x", "y", "cls"]
+            {
+                "line_id": int(key[0]),
+                "pid": pid[idx],
+                "gps_time": t[idx],
+                "x": x[idx],
+                "y": y[idx],
+                "cls": np.where(flipped, FLIP_CLASS, c[idx]).astype(np.int32),
+            }
         )
 
 

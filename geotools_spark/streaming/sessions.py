@@ -49,8 +49,8 @@ def flight_segments_stream(
     operator's keyless semantics need a constant DATA column on the
     stream (one state timeline, same result; the parity test does
     exactly this)."""
-    e = points_stream.withColumn(
-        "_ts", F.timestamp_seconds(F.col(t))
+    e = points_stream.select(
+        "*", F.timestamp_seconds(F.col(t)).alias("_ts")
     ).withWatermark("_ts", f"{int(watermark_s)} seconds")
     return (
         e.groupBy(

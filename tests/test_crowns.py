@@ -111,18 +111,16 @@ def test_treetops_pipeline_end_to_end(spark):
     assert ncrown > 20
 
 
-def test_crowns_tiled_equals_iterative(spark):
-    from geotools_spark.operators.crowns import tree_crowns_iterative
-
+def test_crowns_multi_tile_match_oracle(spark):
+    # tile=8 on a 20x20 grid: crowns cross tile borders, so the halo
+    # must carry every wave that reaches a tile core
     g = cone_grid([(5, 5, 12.0), (14, 13, 10.0), (4, 15, 9.0)])
     df = to_raster_df(spark, g)
     seeds = [(1, 5, 5, 12.0), (2, 14, 13, 10.0), (3, 4, 15, 9.0)]
     tops = spark.createDataFrame(
         seeds, "top_id long, cell_col long, cell_row long, z double"
     )
-    kw = dict(min_height=2.0, height_fraction=0.5, radius_cells=5.0)
-    a = {(r.cell_col, r.cell_row): r.top_id
-         for r in tree_crowns(df, tops, tile=8, **kw).collect()}  # multi-tile
-    b = {(r.cell_col, r.cell_row): r.top_id
-         for r in tree_crowns_iterative(df, tops, **kw).collect()}
-    assert a == b
+    out = tree_crowns(df, tops, tile=8, min_height=2.0, height_fraction=0.5, radius_cells=5.0)
+    got = {(r.cell_col, r.cell_row): r.top_id for r in out.collect()}
+    assert got == oracle_crowns(g, seeds, 2.0, 0.5, 5.0)
+    assert len({v for v in got.values()}) == 3

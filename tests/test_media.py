@@ -112,7 +112,7 @@ def test_tiff_round_trip_uint8():
     rs = np.random.RandomState(2)
     for shape in [(5, 7, 3), (9, 4, 1)]:
         a = rs.randint(0, 256, shape, dtype=np.uint8)
-        t = codecs.encode_strip_tiff_u8(a)
+        t = codecs.encode_tiff(a)
         assert np.array_equal(codecs.decode_image(t), a)
 
 
@@ -301,15 +301,15 @@ def test_tiff_compressed_round_trips():
             ("none", 1), ("deflate", 1), ("deflate", 2), ("packbits", 1),
             ("lzw", 1), ("lzw", 2),
         ]:
-            buf = codecs.encode_strip_tiff_u8(
+            buf = codecs.encode_tiff(
                 arr, compression=comp, predictor=pred
             )
             data, _ = read_strip_tiff_bytes(buf)
             assert np.array_equal(data.astype(np.uint8), a3), (shape, comp, pred)
     # predictor makes smooth content smaller (the point of tag 317)
     grad = (np.arange(64)[None, :] + np.arange(32)[:, None]).astype(np.uint8)
-    b1 = codecs.encode_strip_tiff_u8(grad, compression="deflate", predictor=1)
-    b2 = codecs.encode_strip_tiff_u8(grad, compression="deflate", predictor=2)
+    b1 = codecs.encode_tiff(grad, compression="deflate", predictor=1)
+    b2 = codecs.encode_tiff(grad, compression="deflate", predictor=2)
     assert len(b2) < len(b1)
 
 
@@ -393,12 +393,12 @@ def test_tiff_lzw_width_growth_and_reset():
     noisy = rng.randint(0, 256, size=(64, 1024)).astype(np.uint8)  # 64 KiB
     runs = np.tile(np.repeat(np.arange(16), 13)[None, :], (60, 1)).astype(np.uint8)
     for arr in (noisy, runs):
-        buf = codecs.encode_strip_tiff_u8(arr, compression="lzw")
+        buf = codecs.encode_tiff(arr, compression="lzw")
         data, _ = read_strip_tiff_bytes(buf)
         assert np.array_equal(data[:, :, 0].astype(np.uint8), arr)
     # compression actually compresses the compressible case
-    raw = codecs.encode_strip_tiff_u8(runs, compression="none")
-    lzw = codecs.encode_strip_tiff_u8(runs, compression="lzw")
+    raw = codecs.encode_tiff(runs, compression="none")
+    lzw = codecs.encode_tiff(runs, compression="lzw")
     assert len(lzw) < len(raw) // 4
 
 

@@ -234,17 +234,15 @@ def test_feather_matches_oracle(spark):
     assert np.allclose(np.nan_to_num(got, nan=-1), np.nan_to_num(want, nan=-1), atol=1e-9)
 
 
-def test_feather_tiled_equals_iterative(spark):
-    # the halo-tile distance transform must reproduce the literal
-    # driver-loop peel bit-for-bit, including across tile borders
-    from geotools_spark.operators.raster import feather_iterative
-
+def test_feather_multi_tile_matches_oracle(spark):
+    # tile=8 on the test grid: the halo-tile distance transform must
+    # reproduce the reference peel loop across tile borders
     g = make_grid(seed=13)
     df = to_df(spark, g)
-    kw = dict(distance=5.0, resolution=1.0, cols=COLS, rows=ROWS)
-    a = collect_grid(feather(df, tile=8, **kw), "alpha", g.shape)  # force multi-tile
-    b = collect_grid(feather_iterative(df, **kw), "alpha", g.shape)
-    assert np.allclose(np.nan_to_num(a, nan=-1), np.nan_to_num(b, nan=-1), atol=1e-12)
+    out = feather(df, distance=5.0, resolution=1.0, cols=COLS, rows=ROWS, tile=8)
+    got = collect_grid(out, "alpha", g.shape)
+    want = oracle_feather(g, 5.0, 1.0)
+    assert np.allclose(np.nan_to_num(got, nan=-1), np.nan_to_num(want, nan=-1), atol=1e-12)
 
 
 def test_rastfit_shift_is_constant_mean_diff(spark):

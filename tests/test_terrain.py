@@ -255,9 +255,11 @@ def test_boundary_edges(spark):
             assert cc in (0, 9) or rr in (0, 9) or min(cc, rr) <= 1 or max(cc, rr) >= 8
 
 
-def test_boundary_edges_tiled_matches_single_task(spark):
-    # VERDICT r01 #5: the tiled halo Delaunay must reproduce the
-    # one-task triangulation edge-for-edge on a real blobby fixture.
+def test_boundary_edges_many_tiles_match_one_tile(spark):
+    # the halo-tiled Delaunay must reproduce the whole-extent
+    # triangulation edge-for-edge on a real blobby fixture: a
+    # tile_cells wider than the 40x40 extent gives one tile whose
+    # centers are all core points.
     rs = np.random.RandomState(7)
     pts = np.vstack(
         [
@@ -275,10 +277,8 @@ def test_boundary_edges_tiled_matches_single_task(spark):
             for e in out.collect()
         }
 
-    single = edge_set(boundary_edges(df, res=1.0, max_edge=4.0, tiled=False))
-    tiled = edge_set(
-        boundary_edges(df, res=1.0, max_edge=4.0, tiled=True, tile_cells=10)
-    )
+    single = edge_set(boundary_edges(df, res=1.0, max_edge=4.0, tile_cells=10_000))
+    tiled = edge_set(boundary_edges(df, res=1.0, max_edge=4.0, tile_cells=10))
     assert tiled == single
     # the parity is only meaningful if the fixture actually spans
     # multiple Delaunay tile groups: recompute the tile key exactly as
@@ -291,7 +291,7 @@ def test_boundary_edges_tiled_matches_single_task(spark):
     }
     assert len(tiles) >= 4, f"fixture collapsed to {len(tiles)} tile(s)"
     shipped_tiles = (
-        boundary_edges(df, res=1.0, max_edge=4.0, tiled=True, tile_cells=10)
+        boundary_edges(df, res=1.0, max_edge=4.0, tile_cells=10)
         .select("x0")
         .count()
     )
